@@ -198,36 +198,40 @@ object ConvertMain {
     ticker.start()
     val obs = org.apache.spark.sql.Observation("graft_convert")
     val rows = try {
-      // input-order single-file parity: tag each raw row with its scan
-      // position BEFORE casting, sort on the cheap raw side (Spark
-      // samples a sort's child, so the cast projection above the sort
-      // is untouched by the sampling pass), cast, collapse to one file.
+      // Plan: scan → [tag + cast + observe] → single-partition exchange
+      // → sort → write. Everything per cell runs in the parallel scan
+      // stage: each row is tagged with its scan position, every column is
+      // cast, and the per-column error counters ride the same projection
+      // via Dataset.observe — the distributed twin of the reference's
+      // inline atomics (analyse.rs:15-23) — reading the CAST RESULT (null
+      // on a non-null non-token input = genuine failure), so each kernel
+      // runs once per cell and the input is scanned exactly once.
       //
-      // Error accounting rides the SAME job via Dataset.observe — the
-      // distributed twin of the reference's inline atomics
-      // (analyse.rs:15-23) — so the input is scanned exactly once AND
-      // each cast kernel runs once per row: the projection below the
-      // CollectMetrics node computes raw + cast columns side by side,
-      // the failure counters read the CAST RESULT (null on a non-null
-      // non-token input = genuine failure), and the final select keeps
-      // only the typed columns. No kernel re-evaluation in the metrics
-      // (the r2 double-scan and the r3 double-evaluation are both gone).
-      val rawIdx = raw.withColumn("_graft_row", monotonically_increasing_id())
-      val sorted = rawIdx.orderBy("_graft_row")
+      // The typed rows then meet in ONE partition, sorted back into input
+      // order by the tag (single-file parity with the reference's
+      // reorder buffer, conversion.rs:159-195). A single-partition
+      // exchange has no range bounds to sample, so there is no second
+      // read of the input; the one-task tail only sorts and writes.
       val castCols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         graft.ingest.CastKernel.castTo(col(f.name), f.dataType,
           IngestPipeline.tsUnitOf(f), IngestPipeline.isUnsigned(f)).as(s"_graft_cast_$i")
       }
-      val projected = sorted.select(schema.fieldNames.map(col).toSeq ++ castCols: _*)
+      val projected = raw.select(
+        (monotonically_increasing_id().as("_graft_row") +:
+          schema.fieldNames.map(col).toSeq) ++ castCols: _*)
       val errExprs = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         val failed = !graft.ingest.NullTokens.isNullToken(col(f.name)) &&
           col(s"_graft_cast_$i").isNull
         sum(when(failed, 1L).otherwise(0L)).as(s"_err_$i")
       }
       val counted = projected.observe(obs, count(lit(1)).as("_rows"), errExprs: _*)
-      val typed = counted.select(schema.fields.toSeq.zipWithIndex.map {
-        case (f, i) => col(s"_graft_cast_$i").as(f.name)
-      }: _*)
+      val typed = counted
+        .select(col("_graft_row") +: schema.fields.toSeq.zipWithIndex.map {
+          case (f, i) => col(s"_graft_cast_$i").as(f.name)
+        }: _*)
+        .repartition(1)
+        .sortWithinPartitions("_graft_row")
+        .drop("_graft_row")
       IngestPipeline.writeParquetSingleFile(typed, outputPath)
       obs.get("_rows").asInstanceOf[Long]
     } finally ticker.stop()

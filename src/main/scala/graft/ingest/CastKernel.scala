@@ -4,11 +4,19 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The reference's typed cast kernels (§1.4, /root/reference/src/analyse.rs:
-  * 108-313) as Column expression trees over an all-string scan. Invalid
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.functions.{CellDouble, CellLong}
+
+/** The reference's typed cast kernels (§1.4, reference analyse.rs:
+  * 108-313) as Column expressions over an all-string scan. Invalid
   * values become NULL, never errors — explicitly try-semantics, so the
   * plan behaves identically whether the session runs ANSI on or off.
-  * Everything stays inside whole-stage codegen (no UDFs).
+  * Everything stays inside whole-stage codegen (no UDFs). The i64, u64
+  * and f64 kernels and the null-token test are fused single-pass byte
+  * expressions ([[graft.functions.CellParse]]): each numeric cell is
+  * one static call instead of a regex gate, a significant-digit regex
+  * and a `try_cast`, with three `trim`s and a `lower` in front.
   */
 object CastKernel {
 
@@ -18,33 +26,17 @@ object CastKernel {
   /** Boolean: token table, else null (analyse.rs:114-126). */
   def toBoolean(c: Column): Column = Parsers.parseBool(c)
 
-  /** Int64: integer-syntax parse with i64 range check; overflow → null
-    * (analyse.rs:128-144 parses i128 then range-checks). The length gate
-    * (sign + ≤19 digits can't overflow except near the i64 boundary)
-    * short-circuits obviously-overflowing strings BEFORE try_cast, whose
-    * failure path raises/catches a JVM exception per row — measured 6 µs
-    * per failing row at sf0.1. */
-  def toLong(c: Column): Column = gated(c) { t =>
-    // 38-digit syntax gate = the reference's i128 parse domain (i128
-    // overflows at 39 digits), so zero-padded values like '000...0123'
-    // pass through; try_cast then nulls true i64 overflows. The
-    // SIGNIFICANT-digit gate (sign and leading zeros stripped) nulls
-    // >19-digit values, which can never fit i64, WITHOUT entering
-    // try_cast's exception path (a JVM throw/catch per failing row,
-    // measured 6 µs at sf0.1 — 0.7 s/kernel on a 20%-overflow column).
-    // Only exact-19-digit boundary overflows still pay the exception.
-    val sig = length(regexp_replace(t, "^[+-]?0*", ""))
-    when(t.rlike("^[+-]?\\d{1,38}$") && sig <= 19, t.try_cast("bigint"))
-      .otherwise(lit(null).cast(LongType))
-  }
+  /** Int64: optional sign, 1–38 digits (the reference's i128 parse
+    * domain, so zero-padded values pass), at most 19 of them significant,
+    * then the i64 range check; anything else, overflow included, → null
+    * (analyse.rs:128-144 parses i128 then range-checks). */
+  def toLong(c: Column): Column =
+    ColumnBridge.column(CellLong(ColumnBridge.expression(c), unsigned = false))
 
   /** UInt64 → LongType policy (SURVEY §7.4.1): non-negative integers that
     * fit i64; negative → null like the reference (analyse.rs:146-162). */
-  def toUnsignedLong(c: Column): Column = gated(c) { t =>
-    val sig = length(regexp_replace(t, "^[+]?0*", ""))
-    val x = when(t.rlike("^[+]?\\d{1,38}$") && sig <= 19, t.try_cast("bigint"))
-    when(x >= 0L, x).otherwise(lit(null).cast(LongType))
-  }
+  def toUnsignedLong(c: Column): Column =
+    ColumnBridge.column(CellLong(ColumnBridge.expression(c), unsigned = true))
 
   /** UInt64 full-fidelity variant: DecimalType(20,0) holds all of u64. */
   def toUnsignedDecimal(c: Column): Column = gated(c) { t =>
@@ -55,17 +47,10 @@ object CastKernel {
   }
 
   /** Float64: f64 parse; non-finite (inf/NaN) → null (analyse.rs:164-180).
-    * (NaN text is already a null token, but inf/Infinity parses.)
-    * The syntax gate both avoids the try_cast exception path on garbage
-    * AND pins Rust f64 syntax: Spark's string→double accepts Java-isms
-    * (hex "0x10", suffix "1.5d") that the reference rejects. */
-  def toDouble(c: Column): Column = gated(c) { t =>
-    val syntaxOk = t.rlike("^[+-]?([0-9.]+([eE][+-]?[0-9]+)?)$") ||
-      lower(t).rlike("^[+-]?(inf|infinity|nan)$")
-    val d = when(syntaxOk, t.try_cast("double"))
-    when(isnan(d) || d === Double.PositiveInfinity || d === Double.NegativeInfinity,
-      lit(null).cast(DoubleType)).otherwise(d)
-  }
+    * The syntax is Rust's f64 syntax: Spark's string→double accepts
+    * Java-isms (hex "0x10", suffix "1.5d") that the reference rejects. */
+  def toDouble(c: Column): Column =
+    ColumnBridge.column(CellDouble(ColumnBridge.expression(c)))
 
   def toDate(c: Column): Column = gated(c)(t => Parsers.parseDateYmd(t))
 

@@ -229,12 +229,14 @@ object IngestPipeline {
 
   /** O12: the reference's deterministic input-ordered single-file output
     * (BTreeMap reorder buffer, conversion.rs:177-189) — a single-writer
-    * artifact. For strict parity: order by an explicit key and collapse
-    * to one task. The distributed default is writeParquet[Partitioned]
+    * artifact. For strict parity: move every row into one partition and
+    * sort it there by an explicit key. A single-partition exchange needs
+    * no range bounds, so unlike `orderBy` it never samples (re-reads) the
+    * input first. The distributed default is writeParquet[Partitioned]
     * with order-insensitive verification (SURVEY §7.4.4).
     */
   def writeParquetSingleOrdered(df: DataFrame, out: String, orderCols: Seq[String]): Unit =
-    df.orderBy(orderCols.map(col): _*).coalesce(1)
+    df.repartition(1).sortWithinPartitions(orderCols.map(col): _*)
       .write.mode("overwrite").options(writerOptions(df.columns.length)).parquet(out)
 
   /** A single parquet FILE at `out` (not a directory): Spark writes a

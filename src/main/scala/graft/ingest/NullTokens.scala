@@ -1,22 +1,26 @@
 package graft.ingest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.{lit, when}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StringType
 
+import graft.functions.IsNullToken
+
 /** Reference null-token semantics as codegen'd Column expressions
-  * (/root/reference/src/utils.rs:48-57): empty/whitespace-only, or
-  * case-insensitive null/none/nan/n/a/na → SQL NULL in every type.
+  * (reference utils.rs:48-57): empty/space-only, or case-insensitive
+  * null/none/nan/n/a/na → SQL NULL in every type.
   *
   * Spark CSV's `nullValue` accepts one token, so raw columns are read as
-  * strings and normalized with this expression chain — pure Catalyst
-  * expressions, inside whole-stage codegen, no UDF.
+  * strings and normalized here. The test is one fused native expression
+  * ([[graft.functions.IsNullToken]]), inside whole-stage codegen, no UDF;
+  * it runs for every cell of a conversion.
   */
 object NullTokens {
   val tokens: Seq[String] = Seq("null", "none", "nan", "n/a", "na")
 
   def isNullToken(c: Column): Column =
-    c.isNull || trim(c) === "" || lower(trim(c)).isin(tokens: _*)
+    ColumnBridge.column(IsNullToken(ColumnBridge.expression(c)))
 
   /** Null-normalize, keeping the ORIGINAL (untrimmed) string otherwise —
     * the reference appends the raw cell (analyse.rs:252-274). */

@@ -44,12 +44,19 @@ object ScalarParse {
     * Returns days since 1970-01-01. */
   def parseDateYmd(v: String): Option[Int] = {
     val t = v.trim
-    if (t.isEmpty) None
+    if (!dateShaped(t)) None
     else dateFormats.view
       .flatMap(f => Try(LocalDate.parse(t, f)).toOption)
       .headOption
       .flatMap(d => Try(Math.toIntExact(d.toEpochDay)).toOption)
   }
+
+  /** Every text the three date patterns accept holds two '-' or two '/'
+    * separators. Testing that first spares every other text the three
+    * formatters' throw-and-catch: the inference sample probes every cell
+    * of every column for a date. */
+  private[ingest] def dateShaped(t: String): Boolean =
+    t.count(_ == '-') >= 2 || t.count(_ == '/') >= 2
 
   def isDateText(v: String): Boolean = parseDateYmd(v).isDefined
 
@@ -92,7 +99,7 @@ object ScalarParse {
       case _ => None
     }
     viaText.orElse {
-      Try(BigInt(t)).toOption.flatMap { x =>
+      Option.when(isBigIntegerText(t))(BigInt(t)).flatMap { x =>
         if (x >= 1000000000L && x < 4000000000L) Some(x.toLong * 1000)
         else if (x >= 1000000000000L && x < 4000000000000L) Some(x.toLong)
         else if (x >= 1000000000000000L && x < 4000000000000000L) Some((x / 1000).toLong)
@@ -100,6 +107,14 @@ object ScalarParse {
         else None
       }
     }
+  }
+
+  /** Exactly the texts `new BigInteger(t)` accepts: an optional leading
+    * sign, then one or more chars with a decimal `Character.digit`
+    * (Unicode digits included) — tested without the exception. */
+  private[ingest] def isBigIntegerText(t: String): Boolean = {
+    val body = if (t.startsWith("+") || t.startsWith("-")) 1 else 0
+    t.length > body && (body until t.length).forall(i => Character.digit(t.charAt(i), 10) >= 0)
   }
 
   /** Codegen-friendly variant of [[parseDateYmd]]: Int.MinValue is the

@@ -75,6 +75,68 @@ class ConvertMainSpec extends SparkSpec {
     assert(ids.toSeq == (0L until 1200L), "row order must match the input file")
   }
 
+  test("input order survives a scan split into several partitions") {
+    // the 1,200-row fixture above fits one scan split; shrinking the
+    // split size makes the tag-and-exchange ordering span partitions
+    val fixture = writeFixture(rows = 6000, badTail = 0)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (Files.size(fixture) / 5).toString)
+    try {
+      val splits = IngestPipeline.readRaw(spark, fixture.toString, '\t').rdd.getNumPartitions
+      assert(splits >= 4, s"expected at least 4 scan splits, got $splits")
+      val (out, rows, _) = ConvertMain.run(spark,
+        ConvertMain.Options(Some(fixture.toString), fullScan = false), _ => ())
+      assert(rows == 6000L)
+      assert(Files.isRegularFile(Paths.get(out)), "output must be one part FILE")
+      val ids = spark.read.parquet(out).select("id").collect().map(_.getLong(0))
+      assert(ids.toSeq == (0L until 6000L), "row order must match the input file")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("after inference the conversion reads its input exactly once") {
+    // every job run() starts after the schema line carries a local
+    // property; their scan records must add up to the data rows, so a
+    // second read (e.g. a range-bound sampling job) shows as a surplus
+    val fixture = writeFixture(rows = 3000, badTail = 0)
+    val phase = "graft.spec.afterInference"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(phase) != null) {
+          e.stageIds.foreach(stages.add(_))
+          started.add(e.jobId)
+        }
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (started.contains(e.jobId)) ended.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (_, rows, _) = ConvertMain.run(spark,
+        ConvertMain.Options(Some(fixture.toString), fullScan = false),
+        msg => if (msg.startsWith("[OK] schema detected"))
+          spark.sparkContext.setLocalProperty(phase, "1"))
+      val deadline = System.currentTimeMillis() + 10000
+      while ((started.isEmpty || ended.size < started.size) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(!started.isEmpty && ended.size == started.size, "conversion jobs did not end")
+      assert(rows == 3000L)
+      assert(records.get() == 3000L, s"scan records after inference: ${records.get()}")
+    } finally {
+      spark.sparkContext.setLocalProperty(phase, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("stdin input ('-') converts to stdin.parquet in the working directory") {
     val tsv = "a\tb\n1\tx\n2\ty\n"
     val oldIn = System.in

@@ -62,6 +62,41 @@ class ScalarParseSpec extends AnyFunSuite {
     assert(parseTimestampMs("5000000000").isEmpty) // between ranges
   }
 
+  test("date gate: only two-'-' or two-'/' texts reach the formatters; results unchanged") {
+    // the three-formatter parse without the gate, as it was before it
+    val formats = Seq("uuuu-M-d", "d/M/uuuu", "M/d/uuuu").map(p =>
+      java.time.format.DateTimeFormatter.ofPattern(p)
+        .withResolverStyle(java.time.format.ResolverStyle.STRICT))
+    def ungated(v: String): Option[Int] = formats.view
+      .flatMap(f => scala.util.Try(java.time.LocalDate.parse(v.trim, f)).toOption)
+      .headOption.map(_.toEpochDay.toInt)
+    val passed = Seq("1970-01-01", "2020-1-2", " 2024-02-29 ", "1/2/2020", "13/01/1970",
+      "01/13/1970", "2024-02-30", "+12020-01-01", "-2020-01-01", "a-b-c", "//", "1-2/3-4")
+    val skipped = Seq("", "  ", "20200102", "2020-01", "1/2", "2020/01-02", "12.5",
+      "-42", "abc", "2024\u201001\u201001", "NULL")
+    passed.foreach(v => assert(dateShaped(v.trim), v))
+    skipped.foreach { v =>
+      assert(!dateShaped(v.trim), v)
+      assert(ungated(v).isEmpty, s"the gate skips '$v', which parses")
+    }
+    (passed ++ skipped).foreach(v => assert(parseDateYmd(v) == ungated(v), v))
+    assert(ungated("+12020-01-01").isDefined && ungated("-2020-01-01").isDefined)
+  }
+
+  test("epoch gate: exactly the texts BigInteger accepts, Unicode digits kept") {
+    val passed = Seq("0", "42", "+5", "-0", "-1000000000", "0001000000000",
+      "\u0661\u0660\u0660\u0660\u0660\u0660\u0660\u0660\u0660\u0660", // Arabic-Indic 1e9
+      "\uFF11\uFF10\uFF10\uFF10\uFF10\uFF10\uFF10\uFF10\uFF10\uFF10") // fullwidth 1e9
+    val skipped = Seq("", "+", "-", "+-5", "--5", "5-", "1.5", "1e9", "0x10", "1 000",
+      "1_000", "\u00B15", "\uD835\uDFCF") // a supplementary digit: two chars, neither a digit
+    passed.foreach(t => assert(isBigIntegerText(t) && scala.util.Try(BigInt(t)).isSuccess, t))
+    skipped.foreach(t => assert(!isBigIntegerText(t) && scala.util.Try(BigInt(t)).isFailure, t))
+    // the epoch ranges still see Unicode-digit text
+    assert(parseTimestampMs(passed(6)).contains(1000000000000L))
+    assert(parseTimestampMs(passed(7)).contains(1000000000000L))
+    assert(parseTimestampMs("1e9").isEmpty && parseTimestampMs("+-5").isEmpty)
+  }
+
   test("timestamp unit detection (schema.rs:20-123)") {
     assert(detectUnitTimestamp("2024-01-01 12:00:00").contains(TsMilli)) // no fraction → default 3
     assert(detectUnitTimestamp("2024-01-01 12:00:00.1").contains(TsSecond))
