@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,9 +12,9 @@ import graft.ingest.{IngestPipeline, ProgressTicker}
   *
   *   graft-convert [--inferer-schema-complet] ENTREE
   *
-  *  - positional input path; `-` reads stdin into a temp file
-  *    (main.rs:102-120 buffers stdin the same way) and writes
-  *    `stdin.parquet` in the working directory;
+  *  - positional input path; `-` streams stdin into a temp file,
+  *    deleted once the conversion ends (main.rs:102-120 stages stdin
+  *    the same way), and writes `stdin.parquet` in the working directory;
   *  - otherwise the output is `<parent>/<stem>.parquet`
   *    (main.rs:122-137's file_stem derivation);
   *  - `--inferer-schema-complet` switches the 1,000-row inference
@@ -140,7 +140,7 @@ object ConvertMain {
   def run(spark: SparkSession, opts: Options,
           err: String => Unit = Console.err.println(_),
           stdinIsTty: () => Boolean = () => System.console() != null): (String, Long, Long) = {
-    val (inputPath, outputPath) = opts.input match {
+    opts.input match {
       case Some("-") =>
         // main.rs:46-49: refuse '-' at an interactive terminal (help +
         // error) instead of hanging on a read that will never complete
@@ -149,19 +149,25 @@ object ConvertMain {
           throw new IllegalArgumentException(
             "stdin requested ('-') but no stream is redirected")
         }
-        val buf = System.in.readAllBytes()
-        if (buf.isEmpty) throw new IllegalArgumentException("empty stdin")
+        // stream stdin to a staged file (no heap copy, no 2 GiB array
+        // cap); the staged copy lives only as long as the conversion
         val tmp = Files.createTempFile("graft_stdin", ".tsv")
-        Files.write(tmp, buf)
-        err(s"[INFO] stdin written to $tmp")
-        (tmp.toString, "stdin.parquet")
+        try {
+          Files.copy(System.in, tmp, StandardCopyOption.REPLACE_EXISTING)
+          if (Files.size(tmp) == 0) throw new IllegalArgumentException("empty stdin")
+          err(s"[INFO] stdin written to $tmp")
+          convert(spark, tmp.toString, "stdin.parquet", opts.fullScan, err)
+        } finally Files.deleteIfExists(tmp)
       case Some(file) =>
         if (!Files.exists(Paths.get(file)))
           throw new IllegalArgumentException(s"input not found: $file")
-        (file, deriveOutputPath(file))
+        convert(spark, file, deriveOutputPath(file), opts.fullScan, err)
       case None => throw new IllegalArgumentException("no input provided")
     }
+  }
 
+  private def convert(spark: SparkSession, inputPath: String, outputPath: String,
+                      fullScan: Boolean, err: String => Unit): (String, Long, Long) = {
     val t0 = System.nanoTime()
     // Format routing (beyond the reference, which is delimited-only):
     // a first line that parses as a JSON object routes the input
@@ -171,12 +177,12 @@ object ConvertMain {
     val isJsonl = graft.ingest.JsonlIngest.looksLikeJsonl(spark, inputPath)
     val raw =
       if (isJsonl) graft.ingest.JsonlIngest.readRaw(spark, inputPath,
-        if (opts.fullScan)
+        if (fullScan)
           graft.ingest.JsonlIngest.discoverKeysFull(spark, inputPath)
         else graft.ingest.JsonlIngest.discoverKeys(spark, inputPath))
       else IngestPipeline.readRaw(spark, inputPath,
         IngestPipeline.detectDelimiter(spark, inputPath))
-    val schema = IngestPipeline.inferSchema(raw, opts.fullScan)
+    val schema = IngestPipeline.inferSchema(raw, fullScan)
     err(s"[OK] schema detected: ${schema.fields.length} columns")
     err(s"[CONF] row-group block = ${IngestPipeline.rowGroupRows(schema.fields.length)} rows")
 
@@ -276,16 +282,8 @@ object ConvertMain {
         sys.exit(1)
       case Right(o) => o
     }
-    val spark = SparkSession.builder()
-      .appName("graft-convert")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors())
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      Runtime.getRuntime.availableProcessors(), appName = Some("graft-convert"))
     try {
       // run()'s progress/report lines route through the same prefix →
       // helper mapping the reference's call sites apply

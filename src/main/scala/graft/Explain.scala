@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for a headline subset of the registry —
   * the plan-shape evidence behind SCALE.md's claims. Usage:
   * `sbt "runMain graft.Explain [sfDir]" > EXPLAINS.txt` */
@@ -111,14 +109,7 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4, logLevel = "ERROR")
     headline.foreach { name =>
       println(s"\n===== $name =====")
       // q_heavy_hitters' registry form eagerly checkpoints its top-k

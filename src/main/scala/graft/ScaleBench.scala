@@ -22,16 +22,17 @@ import org.apache.spark.sql.functions._
   *    cosines (and planted near-dup pairs) are preserved exactly,
   *    cross-copy cosines drop to noise.
   *
-  * Usage: SPARK_GRAFT_SCALE_OUT=/tmp/graft_sf1 runMain graft.ScaleBench
-  * Prints one JSON line: per-query seconds at the scaled size.
+  * Usage: SPARK_GRAFT_SCALE_OUT=/tmp/graft_sf1 runMain graft.ScaleBench [q ...]
+  * Prints one JSON line: per-query seconds at the scaled size, with any
+  * failed query named under `failed` and left out of the total (exit 1).
   */
 object ScaleBench {
 
-  /** Every synthetic-corpus writer calls this first: the build target
-    * must be a scratch path, NEVER the read-only source data — a
-    * mis-set SPARK_GRAFT_*_OUT env pointing at /root/testdata must fail
-    * loudly before any write starts (round 16: an interactive run with
-    * GRAPH_OUT=src cost a source-table restore). */
+  /** The corpus build calls this first: the build target must be a
+    * scratch path, NEVER the read-only source data — a mis-set
+    * SPARK_GRAFT_SCALE_OUT pointing at the source corpus must fail
+    * loudly before any write starts (round 16: a build aimed at its own
+    * source cost a source-table restore). */
   private def guardScratch(out: String, src: String): Unit = {
     require(!out.startsWith("/root/testdata") && !out.startsWith("/root/reference"),
       s"corpus build target $out points into read-only source data")
@@ -210,1096 +211,9 @@ object ScaleBench {
     // eval harness actually pays as the corpus decade grows
     "q_ann_recall")
 
-  /** Decade evidence for the GRAPH family (`runMain graft.ScaleBench
-    * graphdecade`). The standard fact-vs-fixed-dim replication is the
-    * WRONG input scaling for graph operators: facts against fixed dims
-    * densify the co-order graphs toward cliques (degree grows ~linearly
-    * with the factor, wedge work quadratically) — a regime change in
-    * the GRAPH, not the operator. This harness instead shifts ALL graph
-    * keys per copy (custkey, orderkey, partkey, suppkey), producing
-    * `factor` DISJOINT copies of the source graph: degree distribution,
-    * wedge counts, and component structure are preserved exactly while
-    * nodes and edges scale by `factor` — the honest linear-input decade
-    * for an iterative graph algorithm. Env: SPARK_GRAFT_FACTOR
-    * (default 100), SPARK_GRAFT_GRAPH_OUT, SPARK_GRAFT_SRC; set
-    * SPARK_GRAFT_PR_MASS=1000000000 so the 100× pagerank (1.6M nodes)
-    * stays inside its int64 mass headroom. Prints one JSON line with
-    * base (1×, min-of-2) and scaled (single-run) seconds per query. */
-  private def graphDecadeEvidence(spark: SparkSession): Unit = {
-    val KEY = 100000000L
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "100").toInt
-    val out = if (factor == 1) src
-      else sys.env.getOrElse("SPARK_GRAFT_GRAPH_OUT", s"/tmp/graft_graph$factor")
-    if (factor > 1 && !new java.io.File(s"$out/_READY").exists()) {
-      guardScratch(out, src)
-      System.err.println(s"[graphdecade] building ${factor}x disjoint graph corpus at $out")
-      def copies(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =
-        (0 until factor).map(k => shift(df, k)).reduce(_ unionAll _)
-      def write(df: DataFrame, name: String): Unit =
-        df.write.mode("overwrite").option("compression", "zstd")
-          .parquet(s"$out/$name.parquet")
-      write(copies(spark.read.parquet(s"$src/customer.parquet"))((d, k) =>
-        d.withColumn("c_custkey", col("c_custkey") + k * KEY)), "customer")
-      write(copies(spark.read.parquet(s"$src/orders.parquet"))((d, k) => d
-        .withColumn("o_orderkey", col("o_orderkey") + k * KEY)
-        .withColumn("o_custkey", col("o_custkey") + k * KEY)), "orders")
-      write(copies(spark.read.parquet(s"$src/lineitem.parquet"))((d, k) => d
-        .withColumn("l_orderkey", col("l_orderkey") + k * KEY)
-        .withColumn("l_partkey", col("l_partkey") + k * KEY)
-        .withColumn("l_suppkey", col("l_suppkey") + k * KEY)), "lineitem")
-      spark.createDataFrame(Seq(Tuple1(factor))).toDF("factor")
-        .write.mode("overwrite").json(s"$out/_READY")
-    }
-    val all = Seq("q_pagerank", "q_graph_triangles", "q_graph_bfs",
-      "q_graph_labelprop")
-    // optional trailing args filter the query set (A/B iteration aid)
-    val wanted = sys.env.get("SPARK_GRAFT_GRAPH_QUERIES")
-      .map(_.split(",").toSet)
-    val names = wanted.map(w => all.filter(w)).getOrElse(all)
-    def time(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write.mode("overwrite")
-        .format("noop").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      // Between-query hygiene: each graph query localCheckpoints its
-      // edge spine + per-round state, and those blocks outlive the
-      // query in a shared JVM. At 100× the accumulated blocks from
-      // three prior queries drove eviction + a ContextCleaner race
-      // that killed the fourth with a shuffle FetchFailed (missing
-      // .data file); a real cluster runs these as separate jobs, so
-      // the harness drops dead blocks at the same boundary.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      secs
-    }
-    val rows = names.map { n =>
-      val base = math.min(time(n, src), time(n, src))
-      val scaled = time(n, out)
-      System.err.println(f"[graphdecade] $n base $base%.2f scaled $scaled%.2f")
-      s""""$n":{"base":$base,"scaled":$scaled}"""
-    }
-    println(s"""{"metric":"graph_decade","unit":"sec","factor":$factor,"queries":${rows.mkString("{", ",", "}")}}""")
-  }
-
-  /** Partitioned-corpus execution evidence (`runMain graft.ScaleBench
-    * partitioned`, round-15 task 4): every bench table so far is ONE
-    * parquet file per table, but a real 100 TB lake is hive-partitioned
-    * multi-file. This mode writes the 10× corpus TWICE-over as a
-    * hive-partitioned twin — lineitem by l_returnflag, orders by
-    * o_orderstatus, events by event_type, documents by lang (existing
-    * LOW-CARDINALITY columns, so the read-back schema is unchanged) —
-    * then times a representative headline subset (TPC-H spine joins +
-    * the dedup family) on BOTH layouts, asserts row-count equality, and
-    * extracts the physical scan's PartitionFilters for the two queries
-    * whose predicates hit partition columns (q_sql_q10 filters
-    * l_returnflag = 'R', q_sql_q21 filters o_orderstatus = 'F') —
-    * the partition-pruned-scan evidence SCALE.md records. */
-  private def partitionedCorpusEvidence(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val single = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    if (!new java.io.File(s"$single/_READY").exists()) {
-      System.err.println(s"[partitioned] building ${factor}x corpus at $single")
-      buildScaledData(spark, src, single, factor)
-    }
-    val hive = s"${single}_hive"
-    guardScratch(hive, src)
-    if (!new java.io.File(s"$hive/_READY").exists()) {
-      System.err.println(s"[partitioned] writing hive-partitioned twin at $hive")
-      def copy(t: String): Unit =
-        spark.read.parquet(s"$single/$t.parquet").write.mode("overwrite")
-          .option("compression", "zstd").parquet(s"$hive/$t.parquet")
-      def part(t: String, byCol: String): Unit =
-        spark.read.parquet(s"$single/$t.parquet").write.mode("overwrite")
-          .option("compression", "zstd").partitionBy(byCol)
-          .parquet(s"$hive/$t.parquet")
-      Seq("region", "nation", "customer", "supplier", "part", "embeddings")
-        .foreach(copy)
-      part("lineitem", "l_returnflag")
-      part("orders", "o_orderstatus")
-      part("events", "event_type")
-      part("documents", "lang")
-      spark.createDataFrame(Seq(Tuple1(factor))).toDF("factor")
-        .write.mode("overwrite").json(s"$hive/_READY")
-    }
-    val subset = Seq("q_sql_q3", "q_sql_q5", "q_sql_q10", "q_sql_q21",
-      "q_filter_pred", "q_dedup_exact", "q_dedup_minhash", "q_dedup_paragraph")
-    def run(name: String, dir: String): (Double, Long) = {
-      val df = SparkEntry.queries(name)(spark, dir)
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val rows = SparkEntry.queries(name)(spark, dir).count()
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      (secs, rows)
-    }
-    val rows = subset.map { n =>
-      val (sSec, sRows) = run(n, single)
-      val (pSec, pRows) = run(n, hive)
-      require(sRows == pRows,
-        s"$n row mismatch across layouts: single=$sRows partitioned=$pRows")
-      System.err.println(f"[partitioned] $n single $sSec%.2f s, hive $pSec%.2f s ($sRows rows both)")
-      s""""$n":{"single_sec":$sSec,"partitioned_sec":$pSec,"rows":$sRows}"""
-    }
-    // pruning evidence: the physical scans of the partition-filtering
-    // queries, on the partitioned layout
-    val pruning = Seq("q_sql_q10" -> "l_returnflag", "q_sql_q21" -> "o_orderstatus")
-      .map { case (n, pcol) =>
-        val df = SparkEntry.queries(n)(spark, hive)
-        df.write.mode("overwrite").format("noop").save()
-        val plan = df.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        val scans = plan.collect {
-          case f: FileSourceScanExec if f.metadata.get("PartitionFilters")
-            .exists(_.contains(pcol)) => f
-        }
-        require(scans.nonEmpty, s"$n: no scan with a $pcol partition filter")
-        val f = scans.head
-        val read = f.selectedPartitions.partitionCount
-        val filters = f.metadata.getOrElse("PartitionFilters", "")
-          .replace("\"", "'")
-        System.err.println(s"[partitioned] $n pruned scan: $read partitions read, filters=$filters")
-        s""""$n":{"partitions_read":$read,"partition_filters":"$filters"}"""
-      }
-    // WRITE side (round-16 task 5): a real lake also WRITES partitioned.
-    // Write the scaled documents table partitionBy(lang) (the
-    // q_curation_partition_layout machinery at headline scale), then
-    // re-read ONE stratum and pin directory-level pruning on the scan.
-    val writeOut = s"$hive/_write_side"
-    val t0 = System.nanoTime()
-    spark.read.parquet(s"$single/documents.parquet")
-      .write.mode("overwrite").option("compression", "zstd")
-      .partitionBy("lang").parquet(writeOut)
-    val writeSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val reread = spark.read.parquet(writeOut).filter(col("lang") === "en")
-    val enRows = reread.count()
-    val rereadSec = (System.nanoTime() - t1) / 1e9
-    val expected = spark.read.parquet(s"$single/documents.parquet")
-      .filter(col("lang") === "en").count()
-    require(enRows == expected,
-      s"write-side round trip lost rows: $enRows vs $expected")
-    val rrPlan = reread.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val rrScan = rrPlan.collect { case f: FileSourceScanExec => f }.head
-    val dirsRead = rrScan.selectedPartitions.partitionCount
-    val dirsTotal = new java.io.File(writeOut).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("lang="))
-    require(dirsRead < dirsTotal,
-      s"re-read must prune: read $dirsRead of $dirsTotal lang dirs")
-    System.err.println(f"[partitioned] write-side: wrote ${factor}x docs " +
-      f"partitionBy(lang) in $writeSec%.1f s; pruned re-read $enRows rows " +
-      f"from $dirsRead of $dirsTotal dirs in $rereadSec%.1f s")
-    println(s"""{"metric":"partitioned_corpus","unit":"sec","factor":$factor,""" +
-      s""""queries":${rows.mkString("{", ",", "}")},""" +
-      s""""pruning":${pruning.mkString("{", ",", "}")},""" +
-      s""""write_side":{"write_sec":$writeSec,"reread_sec":$rereadSec,""" +
-      s""""rows":$enRows,"dirs_read":$dirsRead,"dirs_total":$dirsTotal}}""")
-  }
-
-  /** Candidate-volume decade evidence for the near-dup band schemes
-    * (`runMain graft.ScaleBench dedupdecade`, round-15 task 1): builds
-    * documents-only 10× and 100× corpora (per-copy token prefix — each
-    * copy keeps its planted near-dup pairs, copies share no tokens, so
-    * cross-copy signatures are independent: exactly the regime where a
-    * random band-collision floor shows up as a quadratic term), then
-    * counts at 1×/10×/100×:
-    *   - `collisions32`: band-bucket JOIN ROWS under the 32-bit
-    *     AND-composed sixteenth-pair keys (what the shuffle pays);
-    *   - `candidates`: final gated Hamming-≤7 pairs (q_dedup_simhash);
-    *   - `collisions16`: join rows under the RETIRED 16-bit quarter
-    *     scheme (the round-14 `weak`) — the A/B that shows the floor;
-    *   - `minhash_collisions` / `minhash_candidates` for the portable
-    *     minhash banding (4-minima keys collide essentially only on
-    *     true overlap, so this row should track docs ~linearly too).
-    * Linear-in-docs collisions32 from 10× to 100× is the task's Done
-    * criterion; collisions16 is expected to blow up quadratically
-    * (floor ≈ 10⁻³ per pair). Prints one JSON line. */
-  /** Documents-only scaled corpus (per-copy token prefix: each copy
-    * keeps its planted near-dup pairs, copies share no tokens) — shared
-    * by the dedupdecade and bucketed-index arms. */
-  private def docsCorpusDir(spark: SparkSession, factor: Int): String = {
-    val KEY = 100000000L
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    if (factor == 1) return src
-    val out = s"/tmp/graft_docs$factor"
-    guardScratch(out, src)
-    if (!new java.io.File(s"$out/_READY").exists()) {
-      System.err.println(s"[scale] building ${factor}x docs corpus at $out")
-      val docs = spark.read.parquet(s"$src/documents.parquet")
-      (0 until factor).map(k => docs
-          .withColumn("doc_id", col("doc_id") + k * KEY)
-          .withColumn("text", regexp_replace(col("text"), "(\\S+)", s"c${k}_$$1")))
-        .reduce(_ unionAll _)
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$out/documents.parquet")
-      spark.createDataFrame(Seq(Tuple1(factor))).toDF("factor")
-        .write.mode("overwrite").json(s"$out/_READY")
-    }
-    out
-  }
-
-  private def dedupDecadeEvidence(spark: SparkSession): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    def corpusDir(factor: Int): String = docsCorpusDir(spark, factor)
-    val rows = Seq(1, 10, 100).map { factor =>
-      val dir = corpusDir(factor)
-      val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
-      val t0 = System.nanoTime()
-      val (c32, cand, c16) =
-        graft.queries.Dedup.simhashBandScaleStats(spark, dir)
-      val simSec = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val banded = graft.queries.Dedup.minhashBandedPortable(
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"), col("text"))).localCheckpoint()
-      val mhJoin = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      val mhColl = mhJoin.count()
-      val mhCand = mhJoin.select(col("x.doc_id"), col("y.doc_id")).distinct().count()
-      val mhSec = (System.nanoTime() - t1) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.err.println(f"[dedupdecade] ${factor}x docs=$nDocs " +
-        f"collisions32=$c32 candidates=$cand collisions16=$c16 sim_sec=$simSec%.1f " +
-        f"minhash_collisions=$mhColl minhash_candidates=$mhCand mh_sec=$mhSec%.1f")
-      s""""${factor}x":{"docs":$nDocs,"collisions32":$c32,"candidates":$cand,""" +
-        s""""collisions16":$c16,"sim_sec":$simSec,"minhash_collisions":$mhColl,""" +
-        s""""minhash_candidates":$mhCand,"minhash_sec":$mhSec}"""
-    }
-    println(s"""{"metric":"dedup_band_decade","unit":"rows","factors":${rows.mkString("{", ",", "}")}}""")
-  }
-
-  /** Memory-pressure evidence (`runMain graft.ScaleBench constrained`,
-    * round-16 task 1): the one locally-testable 100 TB failure mode no
-    * prior round measured — when per-task state exceeds execution
-    * memory, the engine must SPILL, not OOM. Two sessions over the same
-    * 10× corpus: a baseline with the default memory config, then a
-    * constrained session with `spark.memory.fraction` cut to 0.1 (of
-    * the 8 GiB harness heap ⇒ ~0.77 GiB execution+storage shared by all
-    * tasks — far below the subset's aggregate hash/sort state, the
-    * local[N] analogue of a 100 TB partition landing on a 4 GiB
-    * executor). Every heavy entry must (a) complete, (b) return the
-    * SAME row count, and (c) report task-metric spill bytes > 0 where
-    * the baseline holds state in memory — the reference's own
-    * discipline (bounded streaming blocks) demonstrated at the operator
-    * level. Spill is read from `SparkListenerTaskEnd` task metrics
-    * (memory+disk spill, summed per query). Prints one JSON line;
-    * SCALE.md records the table. */
-  private def constrainedMemoryEvidence(): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val fraction = sys.env.getOrElse("SPARK_GRAFT_MEM_FRACTION", "0.1")
-    // the verdict's subset: TPC-H spine, sorts/windows, the dedup
-    // family, the two-level semdedup, and the iterative graph entry.
-    // Overridable for the round-17 100× arm (the embedding/graph tail
-    // under the same squeeze): SPARK_GRAFT_CONSTRAINED_SUBSET is a
-    // comma-separated entry list.
-    val subset = sys.env.get("SPARK_GRAFT_CONSTRAINED_SUBSET")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq(
-        "q_sql_q3", "q_sql_q5", "q_sql_q9", "q_sql_q10", "q_sql_q18",
-        "q_sql_q21", "q_agg_group", "q_sort_topk", "q_window_rank",
-        "q_dedup_exact", "q_dedup_minhash", "q_dedup_minhash_verified",
-        "q_dedup_simhash", "q_dedup_semdedup_2l", "q_pagerank"))
-    subset.foreach(n => require(SparkEntry.queries.contains(n),
-      s"unknown entry in SPARK_GRAFT_CONSTRAINED_SUBSET: $n"))
-
-    def mkSession(constrained: Boolean): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-      (if (constrained)
-        // fraction cut is THE lever: it shrinks the unified
-        // execution+storage pool without touching user/JVM headroom, so
-        // the run measures operator spill discipline, not GC death
-        b.config("spark.memory.fraction", fraction)
-          .config("spark.memory.storageFraction", "0.3")
-      else b).getOrCreate()
-    }
-
-    case class Arm(secs: Double, rows: Long, spillBytes: Long, peakMem: Long)
-    def runArm(constrained: Boolean,
-        ensureCorpus: Boolean): Map[String, Either[String, Arm]] = {
-      val spark = mkSession(constrained)
-      spark.sparkContext.setLogLevel("WARN")
-      try {
-        if (ensureCorpus && !new java.io.File(s"$out/_READY").exists()) {
-          System.err.println(s"[constrained] building ${factor}x corpus at $out")
-          buildScaledData(spark, src, out, factor)
-        }
-        val spill = new java.util.concurrent.atomic.AtomicLong()
-        val peak = new java.util.concurrent.atomic.AtomicLong()
-        val listener = new SparkListener {
-          override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-            val m = t.taskMetrics
-            if (m != null) {
-              spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-              peak.getAndAccumulate(m.peakExecutionMemory,
-                (a: Long, b: Long) => math.max(a, b))
-            }
-          }
-        }
-        subset.map { name =>
-          spill.set(0); peak.set(0)
-          spark.sparkContext.addSparkListener(listener)
-          val res = try {
-            val t0 = System.nanoTime()
-            SparkEntry.queries(name)(spark, out)
-              .write.mode("overwrite").format("noop").save()
-            val secs = (System.nanoTime() - t0) / 1e9
-            // row count OUTSIDE the timed window, listener still on so a
-            // spill-on-recompute is not missed, then drain
-            val rows = SparkEntry.queries(name)(spark, out).count()
-            Right(Arm(secs, rows, spill.get(), peak.get()))
-          } catch { case e: Throwable =>
-            System.err.println(s"[constrained] $name FAILED (${if (constrained) "constrained" else "baseline"}): ${e.getMessage}")
-            Left(e.getClass.getSimpleName)
-          } finally {
-            spark.sparkContext.removeSparkListener(listener)
-            spark.sharedState.cacheManager.clearCache()
-            spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-          }
-          System.err.println(f"[constrained] ${if (constrained) "CON " else "BASE"} $name -> " +
-            res.fold(err => s"FAILED $err", a =>
-              f"${a.secs}%.1f s, ${a.rows} rows, spill ${a.spillBytes / 1048576.0}%.1f MiB, peak ${a.peakMem / 1048576.0}%.1f MiB"))
-          name -> res
-        }.toMap
-      } finally spark.stop()
-    }
-
-    val base = runArm(constrained = false, ensureCorpus = true)
-    val con = runArm(constrained = true, ensureCorpus = false)
-    val heapMb = Runtime.getRuntime.maxMemory() / 1048576
-    val rows = subset.map { n =>
-      (base(n), con(n)) match {
-        case (Right(b), Right(c)) =>
-          s""""$n":{"base_sec":${b.secs},"con_sec":${c.secs},""" +
-            s""""rows":${b.rows},"rows_equal":${b.rows == c.rows},""" +
-            s""""base_spill_bytes":${b.spillBytes},"con_spill_bytes":${c.spillBytes},""" +
-            s""""base_peak_mem":${b.peakMem},"con_peak_mem":${c.peakMem}}"""
-        case (bb, cc) =>
-          s""""$n":{"failed":"base=${bb.left.getOrElse("ok")} con=${cc.left.getOrElse("ok")}"}"""
-      }
-    }
-    val nFailed = subset.count(n => base(n).isLeft || con(n).isLeft)
-    val nUnequal = subset.count(n => (base(n), con(n)) match {
-      case (Right(b), Right(c)) => b.rows != c.rows
-      case _ => false
-    })
-    println(s"""{"metric":"constrained_memory","factor":$factor,""" +
-      s""""heap_mb":$heapMb,"mem_fraction":$fraction,"failed":$nFailed,""" +
-      s""""rows_unequal":$nUnequal,"queries":${rows.mkString("{", ",", "}")}}""")
-    if (nFailed > 0 || nUnequal > 0) sys.exit(1)
-  }
-
-  /** Bucketed-index probe A/B (`runMain graft.ScaleBench bucketed`,
-    * round-16 task 3's scale half): at lake scale the persisted dedup
-    * index is the CORPUS-sized side of the nightly probe join, so this
-    * arm builds the full minhash band index over the scaled docs corpus
-    * twice — a plain parquet directory vs the bucketed (band, bucket)
-    * table [[graft.queries.Dedup.writeBandIndex]] now persists — and
-    * probes both with the same 1%-of-corpus batch, broadcast disabled
-    * (the regime where a batch outgrows the broadcast threshold and the
-    * join strategy decides who shuffles). Checks: identical candidate
-    * counts, the bucketed plan carries NO exchange above the index
-    * scan while the plain plan re-shuffles the index, and the wall
-    * times land in SCALE.md's A/B table. */
-  private def bucketedIndexEvidence(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    val dir = docsCorpusDir(spark, factor)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val nDocs = docs.count()
-    // the probe batch: every 97th doc re-crawled with one appended
-    // token (same replay shape the nightly entries plant) — guarantees
-    // real candidate matches, ids disjoint from the corpus
-    val batch = docs.filter(col("doc_id") % 97 === 0)
-      .select((col("doc_id") + lit(10000000000L)).as("doc_id"),
-        concat(col("text"), lit(" zz9")).as("text"))
-
-    val plainPath = s"$dir/band_index_plain.parquet"
-    if (!new java.io.File(plainPath).exists())
-      graft.queries.Dedup.minhashBanded(docs).write
-        .option("compression", "zstd").parquet(plainPath)
-    // the bucketed twin through the EXACT production writer (physical
-    // name per-invocation since round 17 — see Dedup.freshIndexName)
-    val abTable = graft.queries.Dedup.freshIndexName(spark, "graft_idx_scale_ab")
-    val bucketed = graft.queries.Dedup.writeBandIndex(spark,
-      graft.queries.Dedup.minhashBanded(docs), abTable,
-      Seq("band", "bucket"))
-    val plain = spark.read.parquet(plainPath)
-
-    def probe(index: org.apache.spark.sql.DataFrame) =
-      graft.queries.Dedup.minhashBanded(batch).as("x").join(index.as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") )
-        .select(col("x.doc_id").as("batch_id"), col("y.doc_id").as("corpus_id"))
-        .distinct()
-
-    def finalPlan(df: org.apache.spark.sql.DataFrame): SparkPlan =
-      df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def timeCount(df: org.apache.spark.sql.DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val n = df.count()
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      // warm both file listings
-      plain.limit(1).count(); bucketed.limit(1).count()
-      // ALTERNATED min-of-2 per arm (round-16 advisory: a single
-      // cold-first pass gifts the second arm warm page cache + codegen
-      // — the same bias trianglesSplitEvidence measured at 2.6×)
-      val p1 = timeCount(probe(plain)); val b1 = timeCount(probe(bucketed))
-      val p2 = timeCount(probe(plain)); val b2 = timeCount(probe(bucketed))
-      val (plainSec, plainN) = (math.min(p1._1, p2._1), p1._2)
-      val (buckSec, buckN) = (math.min(b1._1, b2._1), b1._2)
-      require(plainN == buckN,
-        s"candidate count mismatch: plain=$plainN bucketed=$buckN")
-      // plan evidence on the executed probes: exchanges on the INDEX
-      // side of the candidate join only (the lowest join above the
-      // index scan — exchanges above the join, e.g. the distinct()'s,
-      // are the same in both arms and not the index's cost)
-      val pPlan = { val d = probe(plain); d.count(); finalPlan(d) }
-      val bPlan = { val d = probe(bucketed); d.count(); finalPlan(d) }
-      def isJoin(p: SparkPlan): Boolean =
-        p.isInstanceOf[org.apache.spark.sql.execution.joins.SortMergeJoinExec] ||
-          p.isInstanceOf[org.apache.spark.sql.execution.joins.ShuffledHashJoinExec] ||
-          p.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]
-      def hasIndexScan(p: SparkPlan, bucket: Boolean): Boolean = p.collect {
-        case f: FileSourceScanExec if f.relation.bucketSpec.isDefined == bucket &&
-          (bucket || f.relation.location.rootPaths.exists(
-            _.toString.contains("band_index_plain"))) => f
-      }.nonEmpty
-      def indexSideExchanges(plan: SparkPlan, bucket: Boolean): Int =
-        plan.collect {
-          case j if isJoin(j) => j.children.filter(c =>
-            hasIndexScan(c, bucket) &&
-              c.collect { case x if isJoin(x) => x }.isEmpty)
-        }.flatten
-          .map(side => side.collect { case e: ShuffleExchangeExec => e }.size)
-          .sum
-      val plainShuffles = indexSideExchanges(pPlan, bucket = false)
-      val buckShuffles = indexSideExchanges(bPlan, bucket = true)
-      require(buckShuffles == 0,
-        s"bucketed index side must not shuffle, found $buckShuffles exchanges")
-      System.err.println(f"[bucketed] ${factor}x docs=$nDocs plain $plainSec%.1f s " +
-        f"($plainShuffles index-side exchanges) vs bucketed $buckSec%.1f s (0), " +
-        f"candidates $buckN both")
-      println(s"""{"metric":"bucketed_index_probe","factor":$factor,"docs":$nDocs,""" +
-        s""""plain_sec":$plainSec,"bucketed_sec":$buckSec,"candidates":$buckN,""" +
-        s""""plain_index_exchanges":$plainShuffles,"bucketed_index_exchanges":$buckShuffles}""")
-
-      // ── compaction A/B (round-17 task 2's scale half): accrete the
-      // file count a season of nightly appends leaves (each append =
-      // one file per touched bucket), probe the ACCRETED index, compact
-      // (same bucket spec, one file per bucket), probe again — same
-      // candidates, restored file count, wall delta = what listing +
-      // per-file open overhead was costing the nightly probe.
-      val nights = 20
-      for (i <- 1 to nights) {
-        val night = docs.filter(col("doc_id") % 997 === i)
-          .select((col("doc_id") + lit(20000000000L) + lit(i.toLong) * 100000000L)
-            .as("doc_id"),
-            concat(col("text"), lit(s" n$i")).as("text"))
-        graft.queries.Dedup.appendBandIndex(spark,
-          graft.queries.Dedup.minhashBanded(night), abTable,
-          Seq("band", "bucket"))
-      }
-      def tableFiles(): Int = {
-        val loc = new org.apache.hadoop.fs.Path(
-          spark.sql(s"DESCRIBE TABLE EXTENDED $abTable")
-            .filter(col("col_name") === "Location").head.getString(1))
-        loc.getFileSystem(spark.sessionState.newHadoopConf())
-          .listStatus(loc).count(_.getPath.getName.startsWith("part-"))
-      }
-      val filesAccreted = tableFiles()
-      // the round-18 trigger policy must FIRE on a season of appends
-      // (20 nights > 8 files/bucket) and reset after the rewrite —
-      // measured here, pinned in Round18Spec. The threshold is passed
-      // EXPLICITLY (round-18 advisory): shouldCompact's default reads
-      // the SPARK_GRAFT_COMPACT_FILES env knob, and a sweep exporting
-      // a value >= 21 would otherwise abort the whole bucketed arm
-      // instead of just changing the policy reading.
-      require(graft.queries.Dedup.shouldCompact(spark, abTable,
-          maxFilesPerBucket = 8),
-        s"shouldCompact must trip at $filesAccreted accreted files")
-      def probeTbl() = probe(spark.table(abTable))
-      probeTbl().count() // warm listing after the appends
-      val a1 = timeCount(probeTbl()); val a2 = timeCount(probeTbl())
-      val (accSec, accN) = (math.min(a1._1, a2._1), a1._2)
-      graft.queries.Dedup.compactBandIndex(spark, abTable, Seq("band", "bucket"))
-      val filesCompacted = tableFiles()
-      probeTbl().count()
-      val c1 = timeCount(probeTbl()); val c2 = timeCount(probeTbl())
-      val (compSec, compN) = (math.min(c1._1, c2._1), c1._2)
-      require(accN == compN,
-        s"compaction changed the candidate set: $accN -> $compN")
-      require(filesCompacted == graft.queries.Dedup.bandIndexBuckets,
-        s"compaction must leave one file per bucket, got $filesCompacted")
-      val cPlan = { val d = probeTbl(); d.count(); finalPlan(d) }
-      require(indexSideExchanges(cPlan, bucket = true) == 0,
-        "compacted index side must stay exchange-free")
-      require(!graft.queries.Dedup.shouldCompact(spark, abTable,
-          maxFilesPerBucket = 8),
-        "shouldCompact must reset once every bucket is one file again")
-      System.err.println(f"[bucketed] compaction: $nights appends -> " +
-        f"$filesAccreted files, probe $accSec%.2f s; compacted -> " +
-        f"$filesCompacted files, probe $compSec%.2f s (candidates $accN both)")
-      println(s"""{"metric":"bucketed_index_compaction","factor":$factor,""" +
-        s""""nights":$nights,"files_accreted":$filesAccreted,""" +
-        s""""files_compacted":$filesCompacted,"accreted_sec":$accSec,""" +
-        s""""compacted_sec":$compSec,"candidates":$accN}""")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  /** Shared stream-progress probe for the streaming evidence arms: runs
-    * one lifecycle entry end-to-end and returns (wall sec, final state
-    * rows, final state bytes) read from the engine's own
-    * `stateOperators` progress metrics. Progress events arrive on the
-    * async listener bus, so the reading is polled until stable after
-    * the entry's lifecycle (start → two drains → stop) completes; the
-    * latest progress for a NEW runId is the final micro-batch's state
-    * snapshot. */
-  private final class StreamStateProbe(spark: SparkSession) {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
-    import scala.collection.concurrent.TrieMap
-    private val lastState = TrieMap[(String, String), (Long, Long, Long)]()
-    private val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.name != null && p.stateOperators.nonEmpty)
-          lastState((p.name, p.runId.toString)) = (
-            p.stateOperators.map(_.numRowsTotal).sum,
-            p.stateOperators.map(_.memoryUsedBytes).sum,
-            p.batchId)
-      }
-    }
-    spark.streams.addListener(listener)
-
-    def close(): Unit = spark.streams.removeListener(listener)
-
-    /** Returns (wall sec, final state rows, provider memory bytes).
-      * `sec` is the FULL-LIFECYCLE wall — feed staging writes, atomic
-      * moves, start → two drains → stop, feed-dir deletion — because
-      * that is what the entry itself pays per run. For the provider
-      * A/B this means small provider deltas are read against an
-      * IO-inclusive denominator (identical across arms, but large at
-      * the 10× feed); the state-rows/memory columns are the
-      * per-provider signal, the walls a lifecycle-inclusive one
-      * (round-17 advisory, recorded where the number is produced). */
-    def run(name: String, dir: String): (Double, Long, Long) = {
-      val known = lastState.keySet.filter(_._1 == name).map(_._2)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      var reading: Option[(Long, Long, Long)] = None
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        val cur = lastState.collect {
-          case ((n, r), v) if n == name && !known.contains(r) => v
-        }.toSeq.sortBy(_._3).lastOption
-        if (cur.isDefined && cur == reading) stable += 1
-        else { reading = cur; stable = 0 }
-        Thread.sleep(200); waited += 1
-      }
-      val (rows, mem, _) = reading.getOrElse(
-        sys.error(s"no state progress observed for $name"))
-      (sec, rows, mem)
-    }
-  }
-
-  /** Streaming STATE-STORE evidence at a scaled feed (round-17 task 3,
-    * `runMain graft.ScaleBench streamstate`): the stream family is
-    * hash-gated at sf0.1, but the 100 TB question is what the state
-    * store HOLDS as the feed grows — a query whose state tracks the
-    * whole key set is corpus-bounded (it eventually OOMs or pays
-    * RocksDB for the full corpus), while the production-shaped forms
-    * must be bounded by the gap horizon / join interval / watermark
-    * instead. This arm replays four entries over the 1× feed and the
-    * scaled (default 10×) feed and records each query's END-OF-FEED
-    * state rows + bytes from the engine's own `stateOperators` progress
-    * metrics, alongside the feed's row and key counts:
-    *
-    *  - `q_stream_sessions` — NoTimeout flatMapGroupsWithState, keeps
-    *    every user forever: the honest CONTROL, state rows ≈ distinct
-    *    users, growing with the corpus;
-    *  - `q_stream_sessions_bounded` — event-time-timeout twin: state
-    *    holds only gap-horizon-active users at the final watermark;
-    *  - `q_stream_dedup` — watermarked dropDuplicates: state ages out
-    *    behind the watermark rather than holding every key ever seen;
-    *  - `q_stream_interval_join` — watermarked interval join: both
-    *    sides' buffered rows are bounded by the join interval.
-    *
-    * Progress events arrive on the async listener bus, so each entry's
-    * reading is polled until stable after the entry's lifecycle (start
-    * → two drains → stop) completes. */
-  private def streamStateEvidence(spark: SparkSession): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    if (!new java.io.File(s"$out/_READY").exists()) {
-      System.err.println(s"[streamstate] building ${factor}x corpus at $out")
-      buildScaledData(spark, src, out, factor)
-    }
-    val entries = Seq("q_stream_sessions", "q_stream_sessions_bounded",
-      "q_stream_dedup", "q_stream_interval_join")
-    val probe = new StreamStateProbe(spark)
-    try {
-      val arms = Seq("1x" -> src, s"${factor}x" -> out)
-      val feeds = arms.map { case (label, dir) =>
-        val ev = spark.read.parquet(s"$dir/events.parquet")
-        label -> (ev.count(), ev.select("user_id").distinct().count())
-      }.toMap
-      val results = entries.map { name =>
-        name -> arms.map { case (label, dir) =>
-          val (_, rows, mem) = probe.run(name, dir)
-          System.err.println(s"[streamstate] $name @ $label: state rows=$rows " +
-            f"mem=${mem / 1048576.0}%.1f MiB (feed ${feeds(label)._1} events, " +
-            s"${feeds(label)._2} users)")
-          label -> (rows, mem)
-        }.toMap
-      }.toMap
-      val feedJson = feeds.map { case (l, (e, u)) =>
-        s""""$l":{"events":$e,"users":$u}""" }.mkString("{", ",", "}")
-      val qJson = entries.map { n =>
-        val per = arms.map { case (l, _) =>
-          val (r, m) = results(n)(l)
-          s""""$l":{"state_rows":$r,"state_bytes":$m}"""
-        }.mkString("{", ",", "}")
-        s""""$n":$per"""
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"stream_state","factor":$factor,""" +
-        s""""feeds":$feedJson,"queries":$qJson}""")
-    } finally probe.close()
-  }
-
-  /** State-store PROVIDER A/B at the scaled feed (`runMain
-    * graft.ScaleBench statestore`, round 17): the default HDFSBacked
-    * provider keeps every keyed state on the executor HEAP — the thing
-    * that eventually OOMs when keys reach billions — while the built-in
-    * RocksDB provider moves state to local disk behind a bounded block
-    * cache, which is the production setting at 100 TB. The
-    * SPARK_GRAFT_STATE_STORE knob has shipped since round 9
-    * (`Streaming.scala`), but no run ever MEASURED the trade; this arm
-    * runs each state-heavy lifecycle entry over the scaled feed under
-    * both providers — flipped via the same session confs the entry's
-    * own knob path sets — and records wall seconds, final state rows
-    * and the provider's own memory accounting. State rows must be
-    * EQUAL across providers (a provider is a storage engine, not a
-    * semantics change); the memory numbers are NOT comparable to each
-    * other (HDFSBacked reports heap map bytes, RocksDB reports
-    * memtable+cache usage) and are recorded as each provider's own
-    * pressure gauge. */
-  private def stateStoreProviderEvidence(spark: SparkSession): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    if (!new java.io.File(s"$out/_READY").exists()) {
-      System.err.println(s"[statestore] building ${factor}x corpus at $out")
-      buildScaledData(spark, src, out, factor)
-    }
-    val entries = Seq("q_stream_sessions", "q_stream_sessions_bounded",
-      "q_stream_dedup", "q_stream_interval_join")
-    // Arms flip `spark.graft.stateStore.force` — the per-arm override
-    // runTwoBatchFeed resolves ABOVE both the SPARK_GRAFT_STATE_STORE
-    // env knob and the per-shape default (round-17 advisory: with the
-    // arms setting providerClass directly, a leaked env var silently
-    // turned the A/B into rocksdb-vs-rocksdb; the force conf cannot be
-    // outranked, so the corruption path is gone structurally). The
-    // rocksdb memory-cap confs ride the entry's own knob path.
-    val arms: Seq[(String, () => Unit)] = Seq(
-      "hdfs" -> (() => spark.conf.set("spark.graft.stateStore.force", "hdfs")),
-      "rocksdb" -> (() =>
-        spark.conf.set("spark.graft.stateStore.force", "rocksdb")))
-    val probe = new StreamStateProbe(spark)
-    try {
-      val results = entries.map { name =>
-        name -> arms.map { case (label, set) =>
-          set()
-          val (sec, rows, mem) = probe.run(name, out)
-          System.err.println(f"[statestore] $name @ $label: $sec%.1f s, " +
-            f"state rows=$rows, provider mem=${mem / 1048576.0}%.1f MiB")
-          label -> (sec, rows, mem)
-        }.toMap
-      }.toMap
-      results.foreach { case (n, per) =>
-        require(per("hdfs")._2 == per("rocksdb")._2,
-          s"$n state rows differ across providers: " +
-            s"hdfs=${per("hdfs")._2} rocksdb=${per("rocksdb")._2}")
-      }
-      val qJson = entries.map { n =>
-        val per = arms.map { case (label, _) =>
-          val (sec, rows, mem) = results(n)(label)
-          s""""$label":{"sec":$sec,"state_rows":$rows,"provider_bytes":$mem}"""
-        }.mkString("{", ",", "}")
-        s""""$n":$per"""
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"stream_state_provider","factor":$factor,""" +
-        s""""queries":$qJson}""")
-    } finally {
-      probe.close()
-      spark.conf.unset("spark.graft.stateStore.force")
-    }
-  }
-
-  /** ANN recall at decade scale (`runMain graft.ScaleBench annrecall`,
-    * round 17): q_ann_recall hash-gates the recall CONTRACT at each
-    * corpus size; this arm measures how the recall/cost trade moves as
-    * the corpus grows under a FIXED index geometry — 12 hyperplanes /
-    * 4×3-bit bands for LSH, 16 k-means centroids for IVF — which is
-    * the honest 100 TB question: buckets fill as n grows, so candidate
-    * volume grows linearly (the cost) while recall drifts with bucket
-    * occupancy rather than holding magically. Sweeps the two
-    * production knobs (LSH Hamming-1 multi-probe on/off; IVF nprobe
-    * 1/2/4) over a 256-query panel at 1× and factor×, reporting
-    * recall@10, candidate volume, and wall seconds, plus the
-    * brute-force exact baseline wall for context. Candidate-superset
-    * monotonicity (multi-probe ⊇ exact-bucket; nprobe 4 ⊇ 2 ⊇ 1) is
-    * require()d; the band/probe-key helpers are SHARED with q_ann_lsh
-    * and q_ann_recall (Similarity.lsh*), so the arm cannot silently
-    * measure a lookalike instead of the production candidate stage. */
-  private def annRecallEvidence(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.VectorOps
-    import graft.queries.Similarity
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    if (!new java.io.File(s"$out/_READY").exists()) {
-      System.err.println(s"[annrecall] building ${factor}x corpus at $out")
-      buildScaledData(spark, src, out, factor)
-    }
-    val panel = 256
-    val k = 10
-    val armJsons = Seq("1x" -> src, s"${factor}x" -> out).map { case (label, dir) =>
-      val base = spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"),
-          VectorOps.normalized(col("embedding")).as("nvec"))
-        .persist()
-      val n = base.count()
-      val queries = base.filter(col("vec_id") < panel)
-        .select(col("vec_id").as("q_id"), col("nvec").as("q_nvec"),
-          col("embedding"))
-        .persist()
-      val nq = queries.count()
-      val wTop = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      def topK(scored: DataFrame): DataFrame =
-        scored.withColumn("rn", row_number().over(wTop))
-          .filter(col("rn") <= k).select(col("q_id"), col("vec_id"))
-      // exact ground truth + its wall — the brute-force O(n·panel)
-      // baseline an index must beat
-      val t0 = System.nanoTime()
-      val exactTop = topK(base
-        .crossJoin(broadcast(queries.select(col("q_id"), col("q_nvec"))))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          VectorOps.dotD(col("nvec"), col("q_nvec")).as("cos")))
-        .persist()
-      val truth = exactTop.count()
-      val exactSec = (System.nanoTime() - t0) / 1e9
-
-      def measure(scored: DataFrame): (Double, Long, Long) = {
-        val t = System.nanoTime()
-        val cand = scored.count()
-        val hits = exactTop.join(topK(scored), Seq("q_id", "vec_id")).count()
-        ((System.nanoTime() - t) / 1e9, cand, hits)
-      }
-
-      // LSH: the corpus side emits exactly 4 band keys per vector at
-      // every knob setting — the probe knob only fans out the query side
-      val corpusBands = base.select(col("vec_id"), col("nvec"),
-        explode(Similarity.lshBandKeys(
-          Similarity.lshSignBucket(col("embedding")))).as("band_key"))
-      def lshScored(flips: Seq[Int]): DataFrame =
-        corpusBands.join(broadcast(queries.select(col("q_id"), col("q_nvec"),
-          explode(Similarity.lshProbeKeys(
-            Similarity.lshSignBucket(col("embedding")), flips))
-            .as("band_key"))),
-          "band_key")
-          .filter(col("vec_id") =!= col("q_id"))
-          .groupBy(col("q_id"), col("vec_id"))
-          .agg(max(VectorOps.dotD(col("nvec"), col("q_nvec"))).as("cos"))
-
-      // IVF: one shared fit (the q_ann_ivf geometry: 16 centroids,
-      // 3 Lloyd iterations), nprobe sweeps the query-side fan-out
-      val cents = Similarity.kmeansCentroids(
-        base.select(col("vec_id"), col("nvec")), "nvec", 64, 16, iters = 3)
-      val assigned = base.select(col("vec_id"), col("nvec"),
-        Similarity.nearestCentroid(col("nvec"), cents).as("cid")).persist()
-      assigned.count()
-      val dotStructs = array(cents.zipWithIndex.map { case (c, i) =>
-        struct(VectorOps.dotD(col("q_nvec"), lit(c)).as("d"), lit(i).as("i"))
-      }: _*)
-      def ivfScored(nprobe: Int): DataFrame = {
-        val qlists = queries
-          .select(col("q_id"), col("q_nvec"),
-            explode(slice(reverse(array_sort(dotStructs)), 1, nprobe))
-              .as("probe"))
-          .select(col("q_id"), col("q_nvec"), col("probe.i").as("cid"))
-        assigned.join(broadcast(qlists), "cid")
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id"),
-            VectorOps.dotD(col("nvec"), col("q_nvec")).as("cos"))
-      }
-
-      val configs = Seq(
-        "lsh_exact_bucket" -> lshScored(Seq(0)),
-        "lsh_hamming1" -> lshScored(Seq(0, 1, 2, 4)),
-        "ivf_np1" -> ivfScored(1),
-        "ivf_np2" -> ivfScored(2),
-        "ivf_np4" -> ivfScored(4))
-      val measured = configs.map { case (name, scored) =>
-        val (sec, cand, hits) = measure(scored)
-        val recall = hits.toDouble / truth
-        System.err.println(f"[annrecall] $label $name: recall=$recall%.3f " +
-          f"cand/query=${cand.toDouble / nq}%.0f " +
-          f"(${cand.toDouble / nq / n * 100}%.2f%% of corpus) $sec%.1f s")
-        name -> ((sec, cand, recall))
-      }
-      val byName = measured.toMap
-      require(byName("lsh_hamming1")._2 >= byName("lsh_exact_bucket")._2,
-        "multi-probe produced fewer candidates than the exact bucket")
-      require(byName("ivf_np2")._2 >= byName("ivf_np1")._2 &&
-        byName("ivf_np4")._2 >= byName("ivf_np2")._2,
-        "larger nprobe produced fewer candidates")
-      base.unpersist(); queries.unpersist()
-      exactTop.unpersist(); assigned.unpersist()
-      val cfgJson = measured.map { case (nm, (sec, cand, rec)) =>
-        s""""$nm":{"recall":$rec,"candidates":$cand,"sec":$sec}"""
-      }.mkString("{", ",", "}")
-      s""""$label":{"n":$n,"panel":$nq,"exact_sec":$exactSec,"configs":$cfgJson}"""
-    }
-    println(s"""{"metric":"ann_recall","factor":$factor,"k":$k,""" +
-      s""""arms":${armJsons.mkString("{", ",", "}")}}""")
-  }
-
-  /** Bucketed fact-fact join A/B (`runMain graft.ScaleBench
-    * bucketedfacts`, round 17): BucketingSpec pins the PLAN contract —
-    * bucketed tables co-locate join keys, so an equi-join plans with no
-    * exchange — at spec scale; this arm measures what that layout buys
-    * on the two biggest facts at the scaled size. lineitem ⋈ orders on
-    * orderkey with a revenue aggregate (the q3 shape minus the dim
-    * join) runs against plain parquet vs bucketBy(32, orderkey) tables
-    * written through the same one-file-per-bucket discipline as the
-    * dedup band indexes; a second probe does a pure groupBy(orderkey)
-    * aggregate. Bucketing is a pay-once layout cost that deletes BOTH
-    * sides' per-query shuffles — the trade a 100 TB warehouse prices
-    * nightly — so the write walls are recorded alongside the query
-    * walls. Broadcast is disabled: at real scale neither fact fits the
-    * threshold, and the shuffle-vs-co-located contrast is the point. */
-  private def bucketedFactsEvidence(spark: SparkSession): Unit = {
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    if (!new java.io.File(s"$out/_READY").exists()) {
-      System.err.println(s"[bucketedfacts] building ${factor}x corpus at $out")
-      buildScaledData(spark, src, out, factor)
-    }
-    val buckets = 32
-    val li = spark.read.parquet(s"$out/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-    val or = spark.read.parquet(s"$out/orders.parquet")
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    val liT = graft.queries.Dedup.freshIndexName(spark, "graft_fact_lineitem")
-    val orT = graft.queries.Dedup.freshIndexName(spark, "graft_fact_orders")
-    // fact-sized scratch tables ride the shared Scratch root like every
-    // operator write (round-19 verdict task 5: this arm was the last
-    // java.io.tmpdir path in the harness — driver-local, cluster-false)
-    val bucketRoot = graft.queries.Scratch.freshDir(spark, "fact_bucketed")
-    def writeBucketed(df: DataFrame, name: String, key: String): Double = {
-      val path = new org.apache.hadoop.fs.Path(bucketRoot, name).toString
-      val t0 = System.nanoTime()
-      df.repartition(buckets, col(key))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, key).sortBy(key)
-        .option("path", path).saveAsTable(name)
-      (System.nanoTime() - t0) / 1e9
-    }
-    val liWriteSec = writeBucketed(li, liT, "l_orderkey")
-    val orWriteSec = writeBucketed(or, orT, "o_orderkey")
-    def revenue(liDf: DataFrame, orDf: DataFrame): DataFrame =
-      orDf.join(liDf, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .as("revenue"))
-    def orderAgg(liDf: DataFrame): DataFrame =
-      liDf.groupBy(col("l_orderkey"))
-        .agg(sum(col("l_extendedprice")).as("total"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def timeCount(df: DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val n = df.count()
-        ((System.nanoTime() - t0) / 1e9, n)
-      }
-      // warm file listings
-      li.limit(1).count(); or.limit(1).count()
-      spark.table(liT).limit(1).count(); spark.table(orT).limit(1).count()
-      def ab(plain: () => DataFrame, bucketed: () => DataFrame,
-             what: String): (Double, Double, Long) = {
-        // alternated min-of-2 per arm (the round-16 cold-first lesson)
-        val p1 = timeCount(plain()); val b1 = timeCount(bucketed())
-        val p2 = timeCount(plain()); val b2 = timeCount(bucketed())
-        require(p1._2 == b1._2,
-          s"$what row counts differ: plain=${p1._2} bucketed=${b1._2}")
-        (math.min(p1._1, p2._1), math.min(b1._1, b2._1), p1._2)
-      }
-      val (joinPlainSec, joinBuckSec, joinRows) = ab(
-        () => revenue(li, or),
-        () => revenue(spark.table(liT), spark.table(orT)), "join")
-      val (aggPlainSec, aggBuckSec, aggRows) = ab(
-        () => orderAgg(li), () => orderAgg(spark.table(liT)), "agg")
-      // plan contract at the measured size (BucketingSpec pins it at
-      // spec scale): no hash-partition exchange anywhere in the
-      // bucketed join plan; the plain plan must carry the shuffles
-      def planOf(df: DataFrame): String = {
-        df.count(); df.queryExecution.executedPlan.toString
-      }
-      val bJoinPlan = planOf(revenue(spark.table(liT), spark.table(orT)))
-      val pJoinPlan = planOf(revenue(li, or))
-      require(!bJoinPlan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$bJoinPlan")
-      require(pJoinPlan.contains("Exchange hashpartitioning"),
-        "plain join unexpectedly shuffle-free — the A/B is not measuring " +
-          "the co-location win")
-      val bAggPlan = planOf(orderAgg(spark.table(liT)))
-      require(!bAggPlan.contains("Exchange hashpartitioning"),
-        s"bucketed agg must not shuffle:\n$bAggPlan")
-      System.err.println(f"[bucketedfacts] ${factor}x join: plain " +
-        f"$joinPlainSec%.1f s vs bucketed $joinBuckSec%.1f s ($joinRows rows); " +
-        f"agg: $aggPlainSec%.1f vs $aggBuckSec%.1f s ($aggRows rows); " +
-        f"writes li=$liWriteSec%.1f or=$orWriteSec%.1f s")
-      println(s"""{"metric":"bucketed_facts","factor":$factor,""" +
-        s""""buckets":$buckets,"join_plain_sec":$joinPlainSec,""" +
-        s""""join_bucketed_sec":$joinBuckSec,"join_rows":$joinRows,""" +
-        s""""agg_plain_sec":$aggPlainSec,"agg_bucketed_sec":$aggBuckSec,""" +
-        s""""agg_rows":$aggRows,"write_lineitem_sec":$liWriteSec,""" +
-        s""""write_orders_sec":$orWriteSec}""")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      // DROP TABLE on these EXTERNAL tables removes catalog metadata
-      // only — delete the fact-sized parquet dirs too, or every run
-      // leaks two of them under the fresh per-invocation names
-      // (round-17 advisory); the whole per-invocation dir goes
-      Seq(liT, orT).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.queries.Scratch.delete(spark, bucketRoot)
-    }
-  }
-
-  /** Triangles wedge-split A/B (`runMain graft.ScaleBench triangles`,
-    * round-16 task 7): the plain [[graft.queries.Graph.qGraphTriangles]]
-    * vs the degree-capped [[graft.queries.Graph.qGraphTrianglesSplit]]
-    * on the disjoint-copy graph corpus (the honest graph decade), with
-    * per-task duration stats so the skew RATIO (max/median task) is
-    * measured, not guessed. Result equality is asserted via full
-    * checksum (count + sums), so the split form's chunk algebra is
-    * pinned at scale too. */
-  private def trianglesSplitEvidence(spark: SparkSession): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val KEY = 100000000L
-    val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "100").toInt
-    val out = if (factor == 1) src
-      else sys.env.getOrElse("SPARK_GRAFT_GRAPH_OUT", s"/tmp/graft_graph$factor")
-    val cap = sys.env.getOrElse("SPARK_GRAFT_TRI_CAP", "48").toInt
-    if (factor > 1 && !new java.io.File(s"$out/_READY").exists()) {
-      guardScratch(out, src)
-      System.err.println(s"[triangles] building ${factor}x disjoint graph corpus at $out")
-      def copies(df: DataFrame)(shift: (DataFrame, Int) => DataFrame): DataFrame =
-        (0 until factor).map(k => shift(df, k)).reduce(_ unionAll _)
-      copies(spark.read.parquet(s"$src/lineitem.parquet"))((d, k) => d
-        .withColumn("l_orderkey", col("l_orderkey") + k * KEY)
-        .withColumn("l_partkey", col("l_partkey") + k * KEY)
-        .withColumn("l_suppkey", col("l_suppkey") + k * KEY))
-        .write.mode("overwrite").option("compression", "zstd")
-        .parquet(s"$out/lineitem.parquet")
-      Seq("orders", "customer").foreach { t =>
-        spark.read.parquet(s"$src/$t.parquet").write.mode("overwrite")
-          .option("compression", "zstd").parquet(s"$out/$t.parquet")
-      }
-      spark.createDataFrame(Seq(Tuple1(factor))).toDF("factor")
-        .write.mode("overwrite").json(s"$out/_READY")
-    }
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null) durations.add(t.taskInfo.duration)
-    }
-    case class Run(secs: Double, rows: Long, sumT: Long, maxTaskMs: Long,
-        medTaskMs: Long)
-    def run(df: => DataFrame): Run = {
-      durations.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val agg = df.agg(count(lit(1)).as("n"),
-        sum(col("triangles")).as("st"),
-        sum(col("part_id") * col("triangles")).as("chk")).head
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      import scala.jdk.CollectionConverters._
-      val ds = durations.asScala.map(_.longValue).toSeq.sorted
-      Run(secs, agg.getLong(0), agg.getLong(1),
-        ds.lastOption.getOrElse(0L), ds.lift(ds.size / 2).getOrElse(0L))
-    }
-    // alternate arms, min-of-2: the first execution pays codegen + page
-    // cache for both (a cold-first-arm bias measured 2.6x at 1x)
-    val p1 = run(graft.queries.Graph.qGraphTriangles(spark, out))
-    val s1 = run(graft.queries.Graph.qGraphTrianglesSplit(spark, out, cap))
-    val p2 = run(graft.queries.Graph.qGraphTriangles(spark, out))
-    val s2 = run(graft.queries.Graph.qGraphTrianglesSplit(spark, out, cap))
-    val plain = if (p2.secs < p1.secs) p2 else p1
-    val split = if (s2.secs < s1.secs) s2 else s1
-    require(plain.rows == split.rows && plain.sumT == split.sumT,
-      s"split form diverged: plain=(${plain.rows},${plain.sumT}) " +
-        s"split=(${split.rows},${split.sumT})")
-    def skew(r: Run): Double =
-      if (r.medTaskMs == 0) 0.0 else r.maxTaskMs.toDouble / r.medTaskMs
-    System.err.println(f"[triangles] ${factor}x plain ${plain.secs}%.1f s " +
-      f"(max task ${plain.maxTaskMs} ms, skew ${skew(plain)}%.1f) vs " +
-      f"split(cap=$cap) ${split.secs}%.1f s (max task ${split.maxTaskMs} ms, " +
-      f"skew ${skew(split)}%.1f); rows=${plain.rows} sum=${plain.sumT} both")
-    println(s"""{"metric":"triangles_wedge_split","factor":$factor,"cap":$cap,""" +
-      s""""plain_sec":${plain.secs},"split_sec":${split.secs},""" +
-      s""""plain_max_task_ms":${plain.maxTaskMs},"plain_med_task_ms":${plain.medTaskMs},""" +
-      s""""split_max_task_ms":${split.maxTaskMs},"split_med_task_ms":${split.medTaskMs},""" +
-      s""""rows":${plain.rows},"sum_triangles":${plain.sumT}}""")
-  }
-
+  /** Writes the `factor`× key-shifted corpus (see the object doc) to
+    * `out` and marks it with `_READY`; the 10× and 100× oracle gates
+    * (`tools/check10x.sh`, `tools/check100x.sh`) run against it. */
   def buildScaledData(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
     guardScratch(out, src)
     val KEY = 100000000L // key shift per copy: far above any sf0.1 key
@@ -1342,453 +256,11 @@ object ScaleBench {
       .write.mode("overwrite").json(s"$out/_READY")
   }
 
-  /** Skew evidence (`runMain graft.ScaleBench skew`): a planted
-    * pathological corpus — 10% of a 20M-row fact on ONE key over a
-    * 1,000-key dim — joined twice with broadcast and AQE skew handling
-    * OFF (the regime explicit salting exists for: streaming joins,
-    * forced SMJ pipelines, no-AQE engines). Reports wall time, max task
-    * duration, and the hottest shuffle partition's row count for the
-    * vanilla hash join vs SkewJoin.saltedJoin. Recorded in SCALE.md. */
-  def skewEvidence(spark: SparkSession): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val n = 20000000L
-    val dimKeys = 1000L
-    val hot = 7L
-    // fact: every 10th row on the hot key, rest spread uniformly
-    val fact = spark.range(n).select(
-      when(col("id") % 10 === 0, lit(hot))
-        .otherwise(col("id") % dimKeys).as("k"),
-      col("id").as("row_id"))
-    val dim = spark.range(dimKeys).select(col("id").as("sk"),
-      concat(lit("dim_"), col("id")).as("payload"))
-
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null) durations.add(t.taskInfo.duration)
-    }
-
-    def timed(df: org.apache.spark.sql.DataFrame): (Double, Long) = {
-      durations.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      (secs, durations.asScala.map(_.longValue).maxOption.getOrElse(0L))
-    }
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val shuffleP = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      // shuffle-partition row counts: Murmur3 `hash()` with the default
-      // seed is exactly what HashPartitioning applies to the join keys
-      val vanillaMaxRows = fact
-        .groupBy(pmod(hash(col("k")), lit(shuffleP)).as("p")).count()
-        .agg(max("count")).head.getLong(0)
-      val saltedMaxRows = fact
-        .withColumn("_graft_salt", pmod(hash(col("row_id")), lit(32)))
-        .groupBy(pmod(hash(col("k"), col("_graft_salt")), lit(shuffleP)).as("p")).count()
-        .agg(max("count")).head.getLong(0)
-
-      fact.write.mode("overwrite").format("noop").save() // warmup scan
-
-      val (vSec, vTask) = timed(fact.join(dim, col("k") === col("sk")))
-      val (sSec, sTask) = timed(graft.operators.SkewJoin.saltedJoin(
-        fact, dim, Seq("k" -> "sk"), saltSource = col("row_id"), salts = 32))
-      // Third arm: the SAME vanilla join under AQE's runtime skew
-      // handling — the modern cluster default the manual salt competes
-      // with. AQE re-plans the sort-merge join after seeing the map
-      // output sizes and splits the oversized partition into
-      // advisory-sized reads (SkewJoinSpec pins the split happening).
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      val (aSec, aTask) = timed(fact.join(dim, col("k") === col("sk")))
-      println(s"""{"metric":"skew_join_evidence","rows":$n,"hot_frac":0.1,""" +
-        s""""vanilla_sec":$vSec,"salted_sec":$sSec,"aqe_sec":$aSec,""" +
-        s""""vanilla_max_task_ms":$vTask,"salted_max_task_ms":$sTask,""" +
-        s""""aqe_max_task_ms":$aTask,""" +
-        s""""vanilla_max_partition_rows":$vanillaMaxRows,"salted_max_partition_rows":$saltedMaxRows}""")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.unset("spark.sql.adaptive.forceOptimizeSkewedJoin")
-      spark.conf.unset("spark.sql.adaptive.skewJoin.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-    }
-  }
-
-  /** Byte-range split parallelism evidence (`runMain graft.ScaleBench
-    * splits`): the sf0.1 lineitem TSV staged as ONE uncompressed file,
-    * full-scanned through the graft DSv2 source twice — once with
-    * `spark.sql.files.maxPartitionBytes` above the file size (1 input
-    * partition, the pre-round-12 behavior for any single file) and once
-    * with it forced to filesize/24 (byte-range splits). Correctness of
-    * the splits is GraftSplitSpec's multiset equality; this measures
-    * the performance half: the split read should approach the
-    * parallel-scan speedup the splits exist to buy. Recorded in
-    * SCALE.md. */
-  /** Round-19 verdict task 4: the cluster-portability smoke. Every
-    * prior evidence arm ran one JVM on `file:` (local[N]), where a
-    * driver-local-state assumption — an executor-side read of a
-    * driver-only system property, a non-serializable closure capture,
-    * a class missing from the executor classpath, a driver-local temp
-    * path read back from a task — can never fail. This arm re-runs the
-    * Scratch-rooted lifecycles (streaming feed staging, the hive-layout
-    * demo, the persisted band-index append/probe) plus a
-    * shuffle/broadcast/custom-expression spine on a
-    * `local-cluster[2,2,2048]` master: a real standalone Master + 2
-    * Workers in-process, each executor a SEPARATE JVM launched with
-    * this JVM's classpath (`spark.executor.extraClassPath`), so task
-    * closures, graft Catalyst expressions, the graft datasource, and
-    * streaming state stores all deserialize and run outside the driver.
-    *
-    * Correctness signal: each entry's result digests (row count + sum
-    * of per-row xxhash64 over name-sorted columns, computed IN Spark on
-    * each side) must be IDENTICAL to a plain local[4] baseline session
-    * run first in this same JVM — a cross-master hash gate, not just
-    * "didn't crash". JVM separation is asserted, not assumed: the
-    * executor runtime names (`pid@host` from tasks) must be ≥2 and
-    * disjoint from the driver's. */
-  def localClusterEvidence(): Unit = {
-    val sf = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.01")
-    // the Scratch-rooted lifecycles the task names + a spine that
-    // shuffles, broadcasts, and runs graft codegen kernels in executors
-    val names = Seq(
-      "q_agg_group",                  // hash-agg shuffle
-      "q_join_inner",                 // broadcast dim join
-      "q_dedup_minhash",              // md5 band kernels in tasks
-      "q_ingest_typed",               // graft datasource + cast kernels
-      "q_stream_ingest",              // feed staging via Scratch + rename
-      "q_curation_partition_layout",  // hive layout via Scratch
-      "q_dedup_index_append",         // persisted band-index lifecycle
-      "q_multimodal_features",        // binary decode inside tasks
-      "q_stream_sessions_bounded",    // stateful streaming state stores
-      "q_sql_q21")                    // multiway shuffle-join spine
-
-    def session(master: String, warehouse: String): SparkSession = {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val b = SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", warehouse)
-        .config("spark.ui.enabled", "false")
-      val withExec =
-        if (master.startsWith("local-cluster"))
-          // executors are launched by the in-process Workers as fresh
-          // JVMs that know nothing of sbt's classpath — hand them ours
-          b.config("spark.executor.extraClassPath",
-              sys.props("java.class.path"))
-            .config("spark.executor.memory", "1g")
-            // the Worker builds the executor command with the packaged
-            // distro's AbstractCommandBuilder, which needs the scala
-            // version that bin/load-spark-env.sh would export in a real
-            // deployment; an in-process Worker never runs that script,
-            // so pass it through the app's executor environment (fails
-            // with "Cannot find any build directories." otherwise)
-            .config("spark.executorEnv.SPARK_SCALA_VERSION",
-              scala.util.Properties.versionNumberString
-                .split("\\.").take(2).mkString("."))
-            // JDK 17+ module opens for the executor JVMs, same set
-            // spark-submit injects for the driver
-            .config("spark.executor.extraJavaOptions",
-              org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-        else b
-      val s = withExec.getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-
-    /** Order-insensitive content digest computed inside Spark: exact
-      * row count + exact DECIMAL(38,0) SUM of per-row xxhash64 over the
-      * name-sorted columns (a raw BIGINT sum overflows under ANSI). */
-    def digests(s: SparkSession): Map[String, (Long, String)] =
-      names.map { n =>
-        val df = SparkEntry.queries(n)(s, sf)
-        val cols = df.columns.sorted.map(col)
-        val r = df.select(xxhash64(cols: _*).cast("decimal(38,0)").as("h"))
-          .agg(count(lit(1)).as("n"), sum(col("h")).as("hs")).head()
-        n -> ((r.getLong(0), String.valueOf(r.get(1))))
-      }.toMap
-
-    val base = session("local[4]", "/tmp/graft_lc_wh_base")
-    val expected = digests(base)
-    base.stop()
-
-    val clustered = session("local-cluster[2,2,2048]", "/tmp/graft_lc_wh_cluster")
-    try {
-      // hard evidence of JVM separation: runtime names (pid@host) seen
-      // by tasks vs the driver's own
-      val driverJvm =
-        java.lang.management.ManagementFactory.getRuntimeMXBean.getName
-      import clustered.implicits._
-      val execJvms = clustered.range(0, 64, 1, 8)
-        .mapPartitions(_ => Iterator(
-          java.lang.management.ManagementFactory.getRuntimeMXBean.getName))
-        .distinct().collect().toSet
-      require(execJvms.size >= 2,
-        s"expected >=2 executor JVMs, saw $execJvms")
-      require(!execJvms.contains(driverJvm),
-        s"executor 'JVMs' include the driver ($driverJvm) — not a cluster")
-
-      val got = digests(clustered)
-      val mism = names.filter(n => got(n) != expected(n))
-      require(mism.isEmpty,
-        s"cross-master digest mismatch: ${mism.map(n =>
-          s"$n local=${expected(n)} cluster=${got(n)}").mkString("; ")}")
-      val qs = names.map { n =>
-        s""""$n":{"rows":${got(n)._1},"digest_match":true}"""
-      }.mkString("{", ",", "}")
-      println(s"""{"metric":"local_cluster_smoke","sf":"$sf","executor_jvms":${execJvms.size},"entries":$qs}""")
-    } finally clustered.stop()
-  }
-
-  def splitEvidence(spark: SparkSession): Unit = {
-    val srcDir = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
-    val key = srcDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    // the staged one-file corpus is a keyed Scratch cache (round-19
-    // verdict task 5: was a java.io.tmpdir path with java.io.File IO —
-    // the same driver-local class the registry purged); all physical
-    // IO below goes through the root's Hadoop FileSystem
-    val dir = graft.queries.Scratch.cacheDir(spark, s"onefile_$key")
-    val fs = graft.queries.Scratch.fs(spark, dir)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_DONE")
-    if (!fs.exists(marker)) {
-      val staging = new org.apache.hadoop.fs.Path(dir, "staging")
-      graft.queries.Ingest.stagedTsvProjection(spark, srcDir)
-        .coalesce(1)
-        .write.mode("overwrite").option("header", "true").option("sep", "\t")
-        .csv(staging.toString)
-      val part = fs.globStatus(
-          new org.apache.hadoop.fs.Path(staging, "part-*.csv"))
-        .headOption.getOrElse(sys.error(s"no part file under $staging"))
-      val dest = new org.apache.hadoop.fs.Path(dir, "lineitem_onefile.tsv")
-      fs.delete(dest, false): Unit
-      require(fs.rename(part.getPath, dest), s"rename to $dest failed")
-      fs.create(marker).close()
-    }
-    val file = new org.apache.hadoop.fs.Path(dir, "lineitem_onefile.tsv")
-    val bytes = fs.getFileStatus(file).getLen
-
-    def timedScan(): Double = {
-      val t0 = System.nanoTime()
-      spark.read.format("graft").load(file.toString)
-        .write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def partsNow(): Int =
-      spark.read.format("graft").load(file.toString).rdd.getNumPartitions
-
-    timedScan() // warm fs cache + codegen
-    val prior = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", (bytes + 1024L).toString)
-      val unsplitParts = partsNow()
-      val unsplitSec = Seq(timedScan(), timedScan()).min
-      spark.conf.set("spark.sql.files.maxPartitionBytes", (bytes / 24 + 1).toString)
-      val splitParts = partsNow()
-      val splitSec = Seq(timedScan(), timedScan()).min
-      println(s"""{"metric":"byte_range_split_evidence","file_bytes":$bytes,""" +
-        s""""unsplit_partitions":$unsplitParts,"unsplit_sec":$unsplitSec,""" +
-        s""""split_partitions":$splitParts,"split_sec":$splitSec,""" +
-        f""""speedup":${unsplitSec / splitSec}%.2f}""")
-    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prior)
-  }
-
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("splits")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      splitEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("partitioned")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      partitionedCorpusEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("constrained")) {
-      constrainedMemoryEvidence() // builds its own two sessions
-      return
-    }
-    if (args.headOption.contains("bucketed")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      bucketedIndexEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("streamstate")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      streamStateEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("statestore")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      stateStoreProviderEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("annrecall")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      annRecallEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("bucketedfacts")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      bucketedFactsEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("triangles")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      trianglesSplitEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("dedupdecade")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      dedupDecadeEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("graphdecade")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      graphDecadeEvidence(spark)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("localcluster")) {
-      localClusterEvidence()
-      return
-    }
-    if (args.headOption.contains("skew")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      skewEvidence(spark)
-      spark.stop()
-      return
-    }
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_sf1")
     val src = sys.env.getOrElse("SPARK_GRAFT_SRC", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCores(4))
 
     if (!new java.io.File(s"$out/_READY").exists()) {
       System.err.println(s"[scale] building ${factor}x corpus at $out from $src")
@@ -1807,22 +279,15 @@ object ScaleBench {
     // sweep silently summed a guard-failed q_heavy_hitters): failures
     // are named in the JSON line and excluded from the total, and the
     // process exits nonzero.
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = selected.map { name =>
+    val runs = EntryRuns.run(selected, "scale") { name =>
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, out).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[scale] $name failed: ${e.getMessage}")
-      }
-      name -> (System.nanoTime() - t0) / 1e9
+      SparkEntry.queries(name)(spark, out).write.mode("overwrite").format("noop").save()
+      (System.nanoTime() - t0) / 1e9
     }
-    val ok = results.filterNot { case (k, _) => failed.contains(k) }
-    val qs = ok.map { case (k, v) => "\"" + k + "\":" + v }
+    val qs = runs.ok.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"scale_total","value":${ok.map(_._2).sum},"unit":"sec","factor":$factor,"queries":$qs,"failed":$failedJson,"src":"$src"}""")
+    println(s"""{"metric":"scale_total","value":${runs.ok.map(_._2).sum},"unit":"sec","factor":$factor,"queries":$qs,"failed":${runs.failedJson},"src":"$src"}""")
     spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
+    if (runs.failed.nonEmpty) sys.exit(1)
   }
 }

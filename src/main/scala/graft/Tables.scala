@@ -14,7 +14,7 @@ object Tables {
   /** Analyzed-handle cache, keyed by (session, path): every
     * `spark.read.parquet(path)` call re-runs data-source resolution —
     * a fresh footer read + relation build, measured 30–65 ms per call
-    * (round-20 PlanCostProbe; a 6-table TPC-H query paid ~0.4 s of it
+    * (round 20, OPTIMIZATION_r20.md §7; a 6-table TPC-H query paid ~0.4 s of it
     * PER RUN before any data moved). The cache returns the same
     * analyzed DataFrame handle for repeated loads of one immutable
     * corpus table in one session — a METADATA cache, exactly what a

@@ -1,38 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (`tools/check.py`).
+  * Exits 1, after writing both, when any query threw (`[verify] failed: …`
+  * names them). */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args(2..) optionally name a subset of queries to dump (local
     // iteration aid; the driver always passes exactly two args).
     val Array(sfDir, outDir) = args.take(2)
     val wanted = args.drop(2).toSet
-    // mark the oracle-gated context: ScaleBench-only env knobs (e.g.
+    // mark the oracle-gated context: the scale-sweep env knobs (e.g.
     // SPARK_GRAFT_SEMDEDUP_K) are ignored while this property is set,
     // so a leaked sweep variable can never desync a query from its
     // pinned oracle
     System.setProperty("graft.verify", "true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCores(4))
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (wanted.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => wanted(k) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val registry = SparkEntry.queries
+    val names = registry.keys.toSeq.filter(k => wanted.isEmpty || wanted(k))
+    val runs = EntryRuns.run(names, "verify") { name =>
+      registry(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -53,5 +42,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a query that threw has no dump: name it and fail the run
+    if (runs.failed.nonEmpty) {
+      System.err.println(s"[verify] failed: ${runs.failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

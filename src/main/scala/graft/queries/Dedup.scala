@@ -540,54 +540,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Band-collision diagnostics for the SCALE.md decade evidence
-    * (round-15 task 1): counts, at one corpus size, (a) raw band-bucket
-    * collision JOIN ROWS and (b) final gated candidate pairs for the
-    * 32-bit AND-composed keys, plus (c) collision rows for the
-    * round-14 16-bit single-signature quarter scheme (the retired
-    * `weak`) — the quantity whose random floor (17×4/2¹⁶ ≈ 10⁻³ per
-    * pair) made candidates quadratic at lake scale. Collision rows are
-    * the honest floor metric: they are what the shuffle pays before
-    * any gate runs. */
-  private[graft] def simhashBandScaleStats(s: SparkSession, dir: String,
-      radius: Int = 7): (Long, Long, Long) = {
-    val nNew = simhashCandidates(s, dir, radius).count()
-    val sigs = simhashSig128(s, dir).localCheckpoint()
-    val tCols = (0 until 8).map(k => col(s"t$k"))
-    def bandKey(b: Int) = col(s"t$b") * 65536L + col(s"t${b + 4}")
-    val probeKeys = (0 until 4).flatMap { b =>
-      Seq(struct(lit(b).as("band"), bandKey(b).as("bucket"))) ++
-        (0 until 16).map(j => struct(lit(b).as("band"),
-          (col(s"t$b").bitwiseXOR(lit((1 << j).toLong)) * 65536L +
-            col(s"t${b + 4}")).as("bucket"))) ++
-        (0 until 16).map(j => struct(lit(b).as("band"),
-          (col(s"t$b") * 65536L +
-            col(s"t${b + 4}").bitwiseXOR(lit((1 << j).toLong))).as("bucket")))
-    }
-    val baseKeys = (0 until 4).map(b =>
-      struct(lit(b).as("band"), bandKey(b).as("bucket")))
-    def banded(keys: Seq[Column]) = sigs
-      .select(col("doc_id"), explode(array(keys: _*)).as("key"))
-      .select(col("doc_id"), col("key.band").as("band"),
-        col("key.bucket").as("bucket"))
-    def collisions(probe: Seq[Column], base: Seq[Column]): Long =
-      banded(probe).as("x").join(banded(base).as("y"),
-          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .count()
-    val newCollisions = collisions(probeKeys, baseKeys)
-    // the retired 16-bit scheme: sig1's quarters (t0..t3), radius-1
-    val old16Probe = (0 until 4).flatMap { b =>
-      Seq(struct(lit(b).as("band"), col(s"t$b").as("bucket"))) ++
-        (0 until 16).map(j => struct(lit(b).as("band"),
-          col(s"t$b").bitwiseXOR(lit((1 << j).toLong)).as("bucket")))
-    }
-    val old16Base = (0 until 4).map(b =>
-      struct(lit(b).as("band"), col(s"t$b").as("bucket")))
-    val oldCollisions = collisions(old16Probe, old16Base)
-    (newCollisions, nNew, oldCollisions)
-  }
-
   /** The SimHash CANDIDATE stage, oracle-gated end-to-end (round-15:
     * with q_dedup_minhash this closes the board's last `no_oracle`
     * entries): all pairs within 128-bit Hamming ≤ 7 of each other,
@@ -1420,7 +1372,8 @@ object Dedup {
     * re-shuffles the corpus-sized index every night, while a bucketed
     * scan reports the bucket HashPartitioning and the join plans with
     * NO exchange above the index scan (BucketedIndexSpec pins this on
-    * the executed plan; ScaleBench `bucketed` measures the A/B). The
+    * the executed plan; SCALE.md's round-16/17 bucketed-index sections
+    * record the A/B). The
     * pre-write repartition on the bucket keys makes each bucket exactly
     * ONE file, so the sortBy ordering survives the scan too and the
     * index side of a sort-merge probe needs no per-night re-sort. */
@@ -1528,8 +1481,9 @@ object Dedup {
     * ONE via the same repartition+bucketBy+sortBy write, at the SAME
     * table name and location, so probes keep planning exchange-free on
     * the index side and the candidate set is bit-identical
-    * (BucketedIndexSpec pins both; ScaleBench `bucketed` measures the
-    * probe wall before/after at 10×).
+    * (BucketedIndexSpec pins both; SCALE.md's round-17 and round-18
+    * compaction sections record the probe wall before/after at 10× and
+    * 100×).
     *
     * `newBuckets > 0` is the RE-BUCKET MIGRATION for when the corpus
     * outgrows the creation-time count (the one knob that is otherwise
@@ -2080,7 +2034,7 @@ object Dedup {
        |ORDER BY coarse_cid, fine_cid, keep_id, prune_id""".stripMargin
   }
 
-  /** ScaleBench-only k override for the decade sweeps. The production
+  /** Sweep-only k override (the SCALE.md decade sweeps). The production
     * contract grows k with the corpus to hold |cluster| bounded; the
     * DuckDB oracle pins the default, so under Verify the knob is
     * IGNORED (see [[Knobs]] — shared since round 16). */
@@ -2101,7 +2055,7 @@ object Dedup {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_dedup_semdedup" -> ((s, d) => qDedupSemdedup(s, d, k = semdedupK)),
-    // two-level knobs follow the same ScaleBench-only discipline; the
+    // two-level knobs follow the same sweep-only discipline; the
     // oracle pins (k1, k2) = (8, 8); knob default 0 = the √n auto-size
     // rule (resolved inside qDedupSemdedup2L)
     "q_dedup_semdedup_2l" -> ((s, d) => qDedupSemdedup2L(s, d,

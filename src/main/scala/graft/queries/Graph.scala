@@ -246,7 +246,8 @@ object Graph {
       .localCheckpoint(true)
     val edges = adj.select(col("u"), explode(col("nbrs")).as("v"))
     // shuffle_hash, not the SMJ default: once adj outgrows the broadcast
-    // threshold (10× disjoint-decade corpus and up), SortMergeJoin would
+    // threshold (10× disjoint-decade corpus and up; SCALE.md, round-14
+    // graph decade check), SortMergeJoin would
     // SORT the join streams — and the probe rows carry the Σoutdeg²
     // wedge arrays, so the sort pays array-payload spills twice. A
     // shuffled hash join builds on the node-sized adj side and streams
@@ -265,68 +266,6 @@ object Graph {
     // each witnessed triangle (u,v,w): u and v score the edge's witness
     // count, every witness w scores 1 — summed per node = its triangles.
     // All three roles emit from ONE projection over `witnessed`.
-    witnessed.select(explode(concat(
-        array(
-          struct(col("u").as("part_id"), size(col("ws")).cast(LongType).as("t")),
-          struct(col("v").as("part_id"), size(col("ws")).cast(LongType).as("t"))),
-        transform(col("ws"), w => struct(w.as("part_id"), lit(1L).as("t"))))).as("c"))
-      .select(col("c.part_id").as("part_id"), col("c.t").as("t"))
-      .groupBy("part_id")
-      .agg(sum(col("t")).cast(LongType).as("triangles"))
-      .orderBy(col("triangles").desc, col("part_id"))
-  }
-
-  /** Degree-capped wedge-split variant of [[qGraphTriangles]] (round-16
-    * task 7, ScaleBench-only A/B — the registry entry stays the plain
-    * form): every adjacency list is cut into ≤`cap` chunks before the
-    * witness joins, so one task never intersects more than 2·cap
-    * elements per row — the standard bound on the Σoutdeg² skew term
-    * when a hub node's list dwarfs the median. Chunks are disjoint
-    * sub-slices of the SAME sorted list, so Σ over chunk pairs of
-    * |chunk_i(nu) ∩ chunk_j(nv)| = |nu ∩ nv| and each witness w lands in
-    * exactly one (i, j) pair — the per-node triangle scores are
-    * IDENTICAL to the plain form (ScaleBench `triangles` asserts it);
-    * the price is (⌈|nu|/cap⌉·⌈|nv|/cap⌉ − 1) extra join rows per edge.
-    * Worth it only when the degree profile actually has a hub tail;
-    * this corpus' oriented outdeg tops at ~1.4× the median (max 97 vs
-    * median 68 at sf0.1), so the A/B is expected — and measured — to
-    * show fan-out overhead with no skew to bound (SCALE.md round 16). */
-  private[graft] def qGraphTrianglesSplit(s: SparkSession, dir: String,
-      cap: Int = 48): DataFrame = {
-    val perOrder = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy("l_orderkey")
-      .agg(collect_set(col("l_partkey")).as("ps"))
-    val undPairs = perOrder
-      .select(explode(col("ps")).as("a0"), col("ps"))
-      .select(col("a0").cast(LongType).as("a"), explode(col("ps")).as("b0"))
-      .select(col("a"), col("b0").cast(LongType).as("b"))
-      .filter(col("a") =!= col("b"))
-    val undAdj = undPairs.groupBy("a").agg(collect_set(col("b")).as("un"))
-    val deg = undAdj.select(col("a").as("n"), size(col("un")).cast(LongType).as("d"))
-    val oriented = undAdj
-      .select(col("a"), size(col("un")).cast(LongType).as("da"),
-        explode(col("un")).as("b"))
-      .join(deg, col("b") === col("n"))
-      .filter(col("da") < col("d") ||
-        (col("da") === col("d") && col("a") < col("b")))
-      .select(col("a").as("u"), col("b").as("v"))
-    val adj = oriented.groupBy(col("u"))
-      .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-      .localCheckpoint(true)
-    val edges = adj.select(col("u"), explode(col("nbrs")).as("v"))
-    // the split: ≤cap-element disjoint sub-slices of the sorted list
-    val chunked = adj.select(col("u"),
-      explode(transform(
-        sequence(lit(0), floor((size(col("nbrs")) - 1) / cap).cast("int")),
-        i => slice(col("nbrs"), i * cap + 1, lit(cap)))).as("nc"))
-    val witnessed = edges
-      .join(chunked.select(col("u").as("ju"), col("nc").as("nu"))
-        .hint("shuffle_hash"), col("u") === col("ju"))
-      .join(chunked.select(col("u").as("jv"), col("nc").as("nv"))
-        .hint("shuffle_hash"), col("v") === col("jv"))
-      .select(col("u"), col("v"), array_intersect(col("nu"), col("nv")).as("ws"))
-      .filter(size(col("ws")) > 0)
     witnessed.select(explode(concat(
         array(
           struct(col("u").as("part_id"), size(col("ws")).cast(LongType).as("t")),

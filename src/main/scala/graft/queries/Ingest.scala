@@ -22,9 +22,8 @@ object Ingest {
     * the input is test-harness work, not part of the conversion
     * pipeline being measured, so Bench warms it up before timing. */
   /** The reference-style stringified lineitem projection every staged
-    * TSV is built from — shared by [[ensureStaged]] and ScaleBench's
-    * split-parallelism evidence so the measured workload can never
-    * drift from the gated ingest entries' input. */
+    * TSV is built from by [[ensureStaged]]; SCALE.md's round-13
+    * split-parallelism rows were measured on the same projection. */
   def stagedTsvProjection(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     Tables.lineitem(s, dir)
       .select(

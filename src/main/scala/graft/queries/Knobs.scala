@@ -1,8 +1,8 @@
 package graft.queries
 
-/** Scale knobs: env-overridable operator parameters for the ScaleBench
-  * decade sweeps, with two uniform disciplines (round 16, promoted out
-  * of Dedup where round 15 introduced them):
+/** Scale knobs: env-overridable operator parameters for the decade
+  * sweeps recorded in SCALE.md, with two uniform disciplines (round 16,
+  * promoted out of Dedup where round 15 introduced them):
   *
   *  1. validated parse — a garbage value fails loudly with the knob
   *     named, never a silent `NumberFormatException` deep in a plan;

@@ -61,9 +61,9 @@ object Similarity {
   }
 
   /** 12-bit sign bucket from the fixed hyperplanes — the shared LSH
-    * plumbing [[qAnnLsh]], [[qAnnRecall]] and the ScaleBench recall arm
-    * all ride, so the measured recall is the recall OF the production
-    * candidate stage, not of a lookalike.
+    * plumbing [[qAnnLsh]] and [[qAnnRecall]] ride (as did the decade
+    * recall rows in SCALE.md, round 17), so the measured recall is the
+    * recall OF the production candidate stage, not of a lookalike.
     *
     * Round 20 (optimization): runs as the native [[graft.functions.LshSignature]]
     * kernel with bands=1, bits=12 — ONE codegen'd primitive loop per row

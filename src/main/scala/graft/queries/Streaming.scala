@@ -75,22 +75,18 @@ object Streaming {
     * lives forever (the NoTimeout sessionization halves its wall and
     * bounds native memory at 150k keys); churn-heavy shapes (interval
     * joins: 3.7× slower at 100×) and bounded/mid-size state stay on
-    * the heap-backed default. Precedence: the A/B harness's session
-    * conf (`spark.graft.stateStore.force` — per-arm, cannot be
-    * corrupted by a leaked env var: the round-17 advisory) > the
-    * SPARK_GRAFT_STATE_STORE sweep env knob > the shape default.
-    * `requiresRocksdb` (transformWithState: timers need the
-    * multi-column-family store) is not overridable — any other
-    * provider fails the query. */
+    * the heap-backed default. Precedence: the SPARK_GRAFT_STATE_STORE
+    * env override (`env`) > the shape default. `requiresRocksdb`
+    * (transformWithState: timers need the multi-column-family store)
+    * is not overridable — any other provider fails the query. */
   private[graft] def resolveStateProvider(stateShape: String,
-      force: Option[String], env: Option[String]): String = {
+      env: Option[String]): String = {
     require(Set("churny", "fullKeyset", "requiresRocksdb")(stateShape),
       s"unknown state shape '$stateShape'")
-    Seq(force, env).flatten.foreach(v => require(Set("hdfs", "rocksdb")(v),
+    env.foreach(v => require(Set("hdfs", "rocksdb")(v),
       s"state-store override must be hdfs|rocksdb, got '$v'"))
     if (stateShape == "requiresRocksdb") "rocksdb"
-    else force.orElse(env).getOrElse(
-      if (stateShape == "fullKeyset") "rocksdb" else "hdfs")
+    else env.getOrElse(if (stateShape == "fullKeyset") "rocksdb" else "hdfs")
   }
 
   /** Materialize a two-batch parquet feed split ONCE per (entry,
@@ -99,9 +95,9 @@ object Streaming {
     * guide §1.4 measured: every timed run of every parquet-fed stream
     * entry paid ~0.8 s of feed PRODUCTION — the midpoint split agg +
     * two corpus-sized chunk writes — before the streaming operator
-    * under test ran at all; StreamProbe numbers in
-    * OPTIMIZATION_r20.md). Producing the feed input is environment
-    * setup by the same round-12 argument that moved the ingest feeds
+    * under test ran at all; numbers in OPTIMIZATION_r20.md §5).
+    * Producing the feed input is environment setup by the same
+    * round-12 argument that moved the ingest feeds
     * onto [[ensureFeedChunks]]: the operator under test CONSUMES a
     * file feed, it does not write one. `chunks` — the entry's split
     * definition, including its midpoint collect — is evaluated only
@@ -230,7 +226,6 @@ object Streaming {
       val priorRocksdb = rocksdbKeys.map(k =>
         k -> scala.util.Try(s.conf.get(k)).toOption)
       val chosen = resolveStateProvider(stateShape,
-        scala.util.Try(s.conf.get("spark.graft.stateStore.force")).toOption,
         sys.env.get("SPARK_GRAFT_STATE_STORE"))
       if (chosen == "rocksdb") {
         s.conf.set(providerKey,
@@ -269,8 +264,9 @@ object Streaming {
       // Round 21 (guide §5 / verdict task 2 — trigger-count audit): a
       // watermark advance schedules one extra NO-DATA micro-batch whose
       // only job is eager state eviction — a full state-store
-      // init/commit round per lifecycle (the StreamProbe breakdown
-      // measured it at ~1.2 s of a 7 s interval-join trigger total).
+      // init/commit round per lifecycle (the round-20 breakdown in
+      // OPTIMIZATION_r20.md measured it at ~1.2 s of a 7 s interval-join
+      // trigger total).
       // Entries whose OUTPUT is emission-on-data only (inner/semi
       // interval joins, complete-mode aggregation) opt out: eviction
       // then rides the next data batch, which at any scale is strictly
@@ -320,7 +316,8 @@ object Streaming {
     * `stateless` (pass-through select, append) isolates the pure
     * lifecycle; `stateful` (groupBy count, complete) adds one
     * state-store round — their difference prices store init/commit.
-    * Measured by [[graft.StreamFloor]]; floor table in BASELINE.md. */
+    * [[graft.Bench]] times both shapes in its own session
+    * (`stream_floor` in BENCH_DETAIL.json); floor model in BASELINE.md. */
   def streamNoopFloor(s: SparkSession, stateful: Boolean): DataFrame = {
     val chunk = s.range(0, 4).select(col("id").cast("long").as("k"))
     val schema = StructType(Seq(

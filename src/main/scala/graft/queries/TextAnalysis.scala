@@ -1224,10 +1224,11 @@ object TextAnalysis {
     "q_text_novelty" -> (qTextNovelty _),
     "q_text_confusion" -> (qTextConfusion _),
     // SPARK_GRAFT_HH_M exists for corpora whose top-k does NOT
-    // concentrate as they grow — e.g. ScaleBench's key-shifted corpus,
-    // which deliberately flattens the gram distribution (disjoint
-    // per-copy vocabularies), so N scales with the factor while kth
-    // stays put and the default 1024 correctly trips the guard.
+    // concentrate as they grow — e.g. the key-shifted scaled corpus of
+    // `ScaleBench.buildScaledData` (SCALE.md), which deliberately
+    // flattens the gram distribution (disjoint per-copy vocabularies),
+    // so N scales with the factor while kth stays put and the default
+    // 1024 correctly trips the guard.
     "q_heavy_hitters" -> ((s, d) => qHeavyHitters(s, d, m = hhM(s, d))),
     // sketch twin: no guard, rows-only on the board (outside the exact
     // regime the candidate set is partition-dependent by design)

@@ -142,10 +142,18 @@ class ConvertMainSpec extends SparkSpec {
     val oldIn = System.in
     try {
       System.setIn(new java.io.ByteArrayInputStream(tsv.getBytes("UTF-8")))
+      val msgs = scala.collection.mutable.ArrayBuffer.empty[String]
       val (out, rows, _) = ConvertMain.run(spark,
-        ConvertMain.Options(Some("-"), fullScan = false), _ => ())
+        ConvertMain.Options(Some("-"), fullScan = false), msgs += _)
       assert(out == "stdin.parquet" && rows == 2L)
       assert(Files.isRegularFile(Paths.get("stdin.parquet")))
+      // the staged copy of stdin is removed once the conversion ends
+      val staged = msgs.collectFirst {
+        case m if m.startsWith("[INFO] stdin written to ") =>
+          Paths.get(m.stripPrefix("[INFO] stdin written to "))
+      }
+      assert(staged.isDefined, s"no staging message in $msgs")
+      assert(!Files.exists(staged.get), s"staged stdin left behind: ${staged.get}")
     } finally {
       System.setIn(oldIn)
       Files.deleteIfExists(Paths.get("stdin.parquet"))

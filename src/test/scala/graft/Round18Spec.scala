@@ -64,26 +64,19 @@ class Round18Spec extends SparkSpec {
     "outranks the env knob; transformWithState is not overridable") {
     import graft.queries.Streaming.resolveStateProvider
     // shape defaults (the SCALE.md A/B's conclusion, now code)
-    assert(resolveStateProvider("churny", None, None) == "hdfs")
-    assert(resolveStateProvider("fullKeyset", None, None) == "rocksdb")
-    assert(resolveStateProvider("requiresRocksdb", None, None) == "rocksdb")
+    assert(resolveStateProvider("churny", None) == "hdfs")
+    assert(resolveStateProvider("fullKeyset", None) == "rocksdb")
+    assert(resolveStateProvider("requiresRocksdb", None) == "rocksdb")
     // sweep env knob overrides the shape default
-    assert(resolveStateProvider("churny", None, Some("rocksdb")) == "rocksdb")
-    assert(resolveStateProvider("fullKeyset", None, Some("hdfs")) == "hdfs")
-    // the A/B harness's force conf outranks the env knob (round-17
-    // advisory: a leaked env var must not corrupt an arm)
-    assert(resolveStateProvider("fullKeyset", Some("hdfs"),
-      Some("rocksdb")) == "hdfs")
-    assert(resolveStateProvider("churny", Some("rocksdb"),
-      Some("hdfs")) == "rocksdb")
+    assert(resolveStateProvider("churny", Some("rocksdb")) == "rocksdb")
+    assert(resolveStateProvider("fullKeyset", Some("hdfs")) == "hdfs")
     // timers need the multi-column-family store: nothing downgrades it
-    assert(resolveStateProvider("requiresRocksdb", Some("hdfs"),
-      Some("hdfs")) == "rocksdb")
+    assert(resolveStateProvider("requiresRocksdb", Some("hdfs")) == "rocksdb")
     // garbage fails loudly, never a silent fallback
     intercept[IllegalArgumentException](
-      resolveStateProvider("bogus", None, None))
+      resolveStateProvider("bogus", None))
     intercept[IllegalArgumentException](
-      resolveStateProvider("churny", Some("levelDB"), None))
+      resolveStateProvider("churny", Some("levelDB")))
   }
 
   test("shouldCompact honors an explicit threshold override") {

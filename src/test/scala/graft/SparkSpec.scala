@@ -7,18 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkSpec {
   lazy val spark: SparkSession = {
     System.setProperty("derby.system.home", "/tmp/graft_derby")
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    GraftSession.local(4, appName = Some("graft-test"),
+      warehouseDir = Some("/tmp/graft_warehouse"))
   }
 
   val sf: String = "/root/testdata/sf0.001"
