@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions = the caller's core count;
   *  - UTC session zone (the DuckDB oracle's naive timestamps are UTC);
   *  - `nanosAsLong`: INT64 nanosecond parquet timestamps read as longs;
-  *  - no Spark UI.
+  *  - no Spark UI;
+  *  - the log level, as `spark.log.level`, which the context applies
+  *    while it starts (a `setLogLevel` after `getOrCreate` lets the
+  *    start-up INFO lines through first).
   * Callers pass only what differs: master (or cores), app name,
   * warehouse dir and log level.
   */
@@ -20,26 +23,25 @@ object GraftSession {
   /** The confs a session is built with, master and app name included. */
   def conf(master: String, shufflePartitions: Int,
            appName: Option[String] = None,
-           warehouseDir: Option[String] = None): Seq[(String, String)] =
+           warehouseDir: Option[String] = None,
+           logLevel: String = "WARN"): Seq[(String, String)] =
     Seq(
       "spark.master" -> master,
       "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.ui.enabled" -> "false") ++
+      "spark.ui.enabled" -> "false",
+      "spark.log.level" -> logLevel) ++
       appName.map("spark.app.name" -> _) ++
       warehouseDir.map("spark.sql.warehouse.dir" -> _)
 
   def create(master: String, shufflePartitions: Int,
              appName: Option[String] = None,
              warehouseDir: Option[String] = None,
-             logLevel: String = "WARN"): SparkSession = {
-    val spark = conf(master, shufflePartitions, appName, warehouseDir)
+             logLevel: String = "WARN"): SparkSession =
+    conf(master, shufflePartitions, appName, warehouseDir, logLevel)
       .foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel(logLevel)
-    spark
-  }
 
   /** `local[cores]` with `cores` shuffle partitions. */
   def local(cores: Int, appName: Option[String] = None,

@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the DuckDB compare (`tools/check.py`).
+  * plus oracle_sql.json, for the DuckDB compare (`tools/check.py`). It
+  * runs the same registry entries, with the same plans, that Bench times.
   * Exits 1, after writing both, when any query threw (`[verify] failed: …`
   * names them). */
 object Verify {
@@ -10,11 +11,6 @@ object Verify {
     // iteration aid; the driver always passes exactly two args).
     val Array(sfDir, outDir) = args.take(2)
     val wanted = args.drop(2).toSet
-    // mark the oracle-gated context: the scale-sweep env knobs (e.g.
-    // SPARK_GRAFT_SEMDEDUP_K) are ignored while this property is set,
-    // so a leaked sweep variable can never desync a query from its
-    // pinned oracle
-    System.setProperty("graft.verify", "true")
     val spark = GraftSession.local(GraftSession.envCores(4))
     new java.io.File(outDir).mkdirs()
     val registry = SparkEntry.queries

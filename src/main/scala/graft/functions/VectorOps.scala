@@ -29,28 +29,18 @@ object VectorOps {
   /** Pre-normalized double vector: factor the norm out ONCE per vector so
     * pairwise stages need only a dot product (1 fold/pair instead of 3).
     * Runs as the codegen'd [[NormalizeVec]] primitive loop — bit-identical
-    * to [[normalizedHof]] (same IEEE op sequence; NormalizeVecSpec pins
-    * it), so oracle hashes are unaffected. */
+    * to the interpreted HOF `transform(a, x / norm(a))` (same IEEE op
+    * sequence; NormalizeVecSpec pins it against the test-side witness
+    * `KernelWitnesses.normalizedHof`), so oracle hashes are unaffected. */
   def normalized(a: Column): Column = NormalizeVec.normalize(a)
-
-  /** The higher-order-function formulation (interpreted per element) —
-    * kept as the spec's independent witness for the codegen twin. */
-  def normalizedHof(a: Column): Column = {
-    val n = norm(a)
-    transform(a, x => x.cast(DoubleType) / n)
-  }
 
   /** Dot product of two already-double vectors — runs as the codegen'd
     * [[DotProductD]] primitive loop (the interpreted HOF fold dominated
-    * the pair-verify stages at scale); bit-identical to [[dotDHof]]
-    * (same ascending IEEE op sequence, VectorKernelsSpec pins it), so
-    * oracle hashes are unaffected. */
+    * the pair-verify stages at scale); bit-identical to the HOF fold
+    * (same ascending IEEE op sequence; VectorKernelsSpec pins it against
+    * the test-side witness `KernelWitnesses.dotDHof`), so oracle hashes
+    * are unaffected. */
   def dotD(a: Column, b: Column): Column = VectorKernels.dotD(a, b)
-
-  /** The higher-order-function formulation (interpreted per element) —
-    * kept as the spec's independent witness for the codegen twin. */
-  def dotDHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def normalizedSql(a: String): String =
     s"list_transform($a, x -> CAST(x AS DOUBLE) / sqrt(${dotSql(a, a)}))"

@@ -104,7 +104,8 @@ object IngestPipeline {
   def inferSchema(raw: DataFrame, fullScan: Boolean): StructType = {
     val stats = inferStats(raw, fullScan)
     StructType(raw.columns.zip(stats).map { case (name, st) =>
-      val dt = TypeDecision.decide(st)
+      val ref = TypeDecision.decideRef(st)
+      val dt = TypeDecision.sparkType(ref, st)
       val mdb = new MetadataBuilder()
       if (dt == TimestampNTZType)
         mdb.putString("graft.timestampUnit", TypeDecision.timestampUnit(st).toString)
@@ -112,7 +113,7 @@ object IngestPipeline {
       // route conversion through the signed kernel (keeping negatives the
       // reference's u64 parse nulls, analyse.rs:146-162). Carry the
       // unsignedness as field metadata so castTo picks toUnsignedLong.
-      if (dt == LongType && TypeDecision.decideRef(st) == "UInt64")
+      if (dt == LongType && ref == "UInt64")
         mdb.putBoolean("graft.unsigned", true)
       StructField(name, dt, nullable = true, mdb.build())
     })

@@ -29,23 +29,9 @@ object Parsers {
        |  WHEN lower(trim($e)) IN ('false','0','f','n','no','off') THEN FALSE
        |  ELSE NULL END)""".stripMargin
 
-  /** 3-format date parse; coalesce order preserves day-first priority
-    * (utils.rs:67-79: %Y-%m-%d, then %d/%m/%Y, then %m/%d/%Y). Built-in
-    * composition kept for reference; the default path is the fused
-    * native expression below. */
-  def parseDateYmdChain(c: Column): Column = {
-    val t = trim(c)
-    // single-letter M/d accept 1-2 digits, matching chrono's unpadded
-    // numeric parsing ('1/2/2020') — and DuckDB's %-formats, which are
-    // already flexible, so the oracle side needs no change
-    coalesce(
-      try_to_timestamp(t, lit("yyyy-M-d")),
-      try_to_timestamp(t, lit("d/M/yyyy")),
-      try_to_timestamp(t, lit("M/d/yyyy"))
-    ).cast(DateType)
-  }
-
-  /** Fused single-expression date parse (graft.functions.DateYmdParse). */
+  /** 3-format date parse; day-first priority (utils.rs:67-79:
+    * %Y-%m-%d, then %d/%m/%Y, then %m/%d/%Y), as one fused expression
+    * (graft.functions.DateYmdParse). */
   def parseDateYmd(c: Column): Column =
     graft.functions.DateYmdParse.parseDateYmd(trim(c))
 
@@ -55,52 +41,11 @@ object Parsers {
        |  CAST(try_strptime(trim($e), '%d/%m/%Y') AS DATE),
        |  CAST(try_strptime(trim($e), '%m/%d/%Y') AS DATE))""".stripMargin
 
-  /** Text-datetime part of parse_timestamp_ms (utils.rs:85-101) → epoch
-    * milliseconds (long), sub-ms truncated like chrono→timestamp_millis.
-    *
-    * The ISO branch decomposes via regexp (base datetime + fraction
-    * digits) instead of relying on format-string fraction flexibility:
-    * exact, and still pure codegen'd expressions.
-    */
-  def parseTimestampMsText(c: Column): Column = {
-    val t = trim(c)
-    // 1-2 digit day/month/time fields, like chrono's unpadded parsing
-    val isoRe = "^(\\d{4}-\\d{1,2}-\\d{1,2})[ T](\\d{1,2}:\\d{1,2}:\\d{1,2})(?:\\.(\\d{1,9}))?$"
-    val base = try_to_timestamp(
-      concat_ws(" ", regexp_extract(t, isoRe, 1), regexp_extract(t, isoRe, 2)),
-      lit("yyyy-M-d H:m:s"))
-    val fracDigits = regexp_extract(t, isoRe, 3)
-    val fracMs = when(length(fracDigits) > 0,
-      rpad(fracDigits, 3, "0").substr(1, 3).cast(LongType)).otherwise(lit(0L))
-    val isoMs = when(t.rlike(isoRe), unix_millis(base) + fracMs)
-    val dmy = unix_millis(try_to_timestamp(t, lit("d/M/yyyy H:m:s")))
-    val ymdSlash = unix_millis(try_to_timestamp(t, lit("yyyy/M/d H:m:s")))
-    coalesce(isoMs, dmy, ymdSlash)
-  }
-
-  /** Epoch-range part of parse_timestamp_ms (utils.rs:102-115):
-    * s 1e9–4e9, ms 1e12–4e12, µs 1e15–4e15, ns ≥ 1e18 → epoch ms.
-    * (Values beyond ±2^63 nanos parse as i128 in the reference but are
-    * astronomically out of its accepted ranges' intent; try_cast(long)
-    * suffices and is documented as the delta.) */
-  def parseTimestampMsEpoch(c: Column): Column = {
-    val t = trim(c)
-    val x = when(t.rlike("^[+-]?\\d+$"), t.try_cast("bigint"))
-    when(x >= 1000000000L && x < 4000000000L, x * 1000)
-      .when(x >= 1000000000000L && x < 4000000000000L, x)
-      .when(x >= 1000000000000000L && x < 4000000000000000L, (x / 1000).cast(LongType))
-      .when(x >= 1000000000000000000L, (x / 1000000).cast(LongType))
-      .otherwise(lit(null).cast(LongType))
-  }
-
-  /** Full parse_timestamp_ms: text formats first, then epoch ranges.
-    * Kept as the pure-built-in composition; the hot path uses the fused
-    * native expression below (identical semantics, one compiled call). */
-  def parseTimestampMsChain(c: Column): Column =
-    coalesce(parseTimestampMsText(c), parseTimestampMsEpoch(c))
-
-  /** Fused single-expression variant (graft.functions.TimestampMsParse,
-    * codegen'd): same ladder, ~10 expression branches collapsed. */
+  /** parse_timestamp_ms (utils.rs:85-115) → epoch milliseconds: text
+    * formats first, then epoch ranges, as one fused codegen'd expression
+    * (graft.functions.TimestampMsParse); TimestampMsParseSpec pins it
+    * against the built-in chain it replaced
+    * (`RetiredCastChains.parseTimestampMsChain`). */
   def parseTimestampMs(c: Column): Column =
     graft.functions.TimestampMsParse.parseTsMs(trim(c))
 

@@ -58,31 +58,18 @@ object TypeDecision {
     "LargeUtf8"
   }
 
-  def decide(s: ColStats): DataType = {
-    if (s.nonNull == 0) return StringType
-
-    val tsTotal = s.tsSecOk + s.tsMsOk + s.tsUsOk + s.tsNsOk
-    if (ratio(tsTotal, s.nonNull) >= 0.995) return TimestampNTZType
-    if (ratio(s.dateOk, s.nonNull) >= 0.995) return DateType
-    if (ratio(s.boolOk, s.nonNull) >= 0.995) return BooleanType
-
-    if (ratio(s.f64Ok, s.nonNull) >= 0.98) {
-      if (s.floatSyntaxSeen) return DoubleType
-      val ratioI = ratio(s.i128Ok, s.nonNull)
-      val ratioNeg = ratio(s.negatives, math.max(s.i128Ok, 1))
-      if (ratioI >= 0.98) {
-        val (mn, mx) = (s.minI128, s.maxI128)
-        if (mn < I64Min || mx > U64Max) return DoubleType
-        if (mn >= 0 && mx <= U64Max) {
-          // unsigned preference (schema.rs:276-283)
-          if (mx > I64Max) return DecimalType(20, 0)
-          if (ratioNeg < 0.005) return LongType // UInt64 fitting i64
-        }
-        if (mn >= I64Min && mx <= I64Max) return LongType
-        return DoubleType
-      }
-      return DoubleType
-    }
-    StringType
+  /** The Spark type of a [[decideRef]] answer: timestamps of every unit
+    * → TimestampNTZ (the unit travels as field metadata), UInt64 →
+    * LongType when the observed max fits i64, else DecimalType(20,0). */
+  def sparkType(ref: String, s: ColStats): DataType = ref match {
+    case "Date32" => DateType
+    case "Boolean" => BooleanType
+    case "Float64" => DoubleType
+    case "Int64" => LongType
+    case "UInt64" => if (s.maxI128 > I64Max) DecimalType(20, 0) else LongType
+    case "LargeUtf8" => StringType
+    case _ => TimestampNTZType // "Timestamp(<unit>)"
   }
+
+  def decide(s: ColStats): DataType = sparkType(decideRef(s), s)
 }

@@ -447,7 +447,7 @@ object Dedup {
     // replays the exact `when(b > 0, 2^j).otherwise(0)` fold, so every
     // t_k (hence every band key, candidate pair, and oracle hash) is
     // bit-identical. SimhashSigAggSpec pins equality against the
-    // retained column-form witness below.
+    // retired column form (KernelWitnesses.simhashSig128ColumnsWitness).
     val words = docs
       .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
       .select(col("doc_id"),
@@ -456,26 +456,6 @@ object Dedup {
       .agg(graft.functions.SimhashSig.sig(col("hs")).as("ts"))
       .select(col("doc_id") +:
         (0 until 8).map(k => col("ts").getItem(k).as(s"t$k")): _*)
-  }
-
-  /** The retired 128-agg-column signature formulation — the spec's
-    * independent witness for [[graft.functions.SimhashSig]] (never on a
-    * hot path; see [[simhashSig128Of]]). */
-  private[graft] def simhashSig128ColumnsWitness(docs: DataFrame): DataFrame = {
-    val words = docs
-      .select(col("doc_id"), explode(split(trim(col("text")), "\\s+")).as("tok"))
-      .withColumn("hs", graft.functions.Md5Sixteenths.md5Sixteenths(col("tok")))
-    val withH = (0 until 8).foldLeft(words) { (df, k) =>
-      df.withColumn(s"h$k", col("hs").getItem(k))
-    }
-    val bitAggs = for (k <- 0 until 8; j <- 0 until 16)
-      yield sum(expr(s"((h$k >> $j) & 1) * 2 - 1")).as(s"b${k}_$j")
-    withH.groupBy(col("doc_id")).agg(bitAggs.head, bitAggs.tail: _*)
-      .select(col("doc_id") +: (0 until 8).map { k =>
-        (0 until 16).map(j =>
-          when(col(s"b${k}_$j") > 0, lit((1 << j).toLong)).otherwise(0L))
-          .reduce(_ + _).as(s"t$k")
-      }: _*)
   }
 
   /** Multi-probe SimHash candidate generation over 32-BIT band keys,
@@ -1283,20 +1263,15 @@ object Dedup {
 
   // ── incremental NEAR-dup: probe a batch against a persisted index ──
 
-  /** Bucket count for the persisted band indexes. Small by default (the
-    * gated corpora are small); at lake scale this is sized ONCE at index
-    * creation via SPARK_GRAFT_INDEX_BUCKETS (e.g. 4096) and every
-    * nightly append and probe inherits it — the bucket count is the
-    * index's permanent parallelism. The knob rides the shared [[Knobs]]
-    * discipline (validated parse, pinned to the default under Verify);
-    * a value drifting between creation and a later append fails loudly:
-    * Append-mode saveAsTable validates the bucket spec against the
-    * catalog. Layout-only — no oracle depends on it. Parsed Int-ranged
-    * (scaleKnobWide, ≤9 digits) so an over-wide value fails loudly at
-    * parse instead of silently wrapping through `.toInt` (round-16
-    * advisory: 4294967297 would otherwise become bucket count 1). */
-  private[graft] def bandIndexBuckets: Int =
-    Knobs.scaleKnobWide("SPARK_GRAFT_INDEX_BUCKETS", 8)
+  /** Bucket count for the persisted band indexes, fixed at creation:
+    * every nightly append and probe inherits it — the bucket count is
+    * the index's permanent parallelism. Small, because the gated
+    * corpora are small; an index that outgrows it moves to a larger
+    * count through the re-bucket migration of [[compactBandIndex]].
+    * A count drifting between creation and a later append
+    * fails loudly: Append-mode saveAsTable validates the bucket spec
+    * against the catalog. Layout-only — no oracle depends on it. */
+  private[graft] val bandIndexBuckets: Int = 8
 
   /** Physical-name resolution for the persisted indexes (round-16
     * advisory: fixed global table names + eager overwrite-at-
@@ -1390,12 +1365,10 @@ object Dedup {
     * KEEPS its URI scheme — every physical IO below goes through the
     * Hadoop FileSystem of that scheme, never `java.io.File`, so the
     * same code runs against file:, hdfs: or an object store. Layout-
-    * only (no oracle depends on it), so like every scale knob it is
-    * pinned to the default under the Verify gate. */
+    * only: no oracle depends on it. */
   private[graft] def indexRoot(s: SparkSession): String =
     sys.props.get("graft.index.root")
-      .orElse(if (sys.props.get("graft.verify").contains("true")) None
-              else sys.env.get("SPARK_GRAFT_INDEX_ROOT"))
+      .orElse(sys.env.get("SPARK_GRAFT_INDEX_ROOT"))
       .getOrElse(s.sessionState.conf.warehousePath)
 
   // first-use stale sweep of the band-index root (round-19 verdict
@@ -1446,11 +1419,10 @@ object Dedup {
     * per-probe file-listing + open cost starts eating the exchange win
     * the bucketing bought. The nightly job calls this after its append
     * and compacts when it says so — the lifecycle is a policy, not a
-    * memo. Threshold knob: SPARK_GRAFT_COMPACT_FILES (default 8 ≈ a
-    * week of nightly appends; the census is one FileSystem.listStatus
-    * of the index dir — driver-side, O(files), no Spark job). */
-  private[graft] def compactFilesPerBucket: Int =
-    Knobs.scaleKnob("SPARK_GRAFT_COMPACT_FILES", 8)
+    * memo. Threshold: 8 files per bucket ≈ a week of nightly appends
+    * (the census is one FileSystem.listStatus of the index dir —
+    * driver-side, O(files), no Spark job). */
+  private[graft] val compactFilesPerBucket: Int = 8
 
   private[graft] def shouldCompact(s: SparkSession, table: String,
       maxFilesPerBucket: Int = compactFilesPerBucket): Boolean = {
@@ -1900,7 +1872,7 @@ object Dedup {
         |  SELECT vec_id + (SELECT MAX(vec_id) + 1 FROM embeddings) AS vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE) + 0.02) AS vec
         |  FROM embeddings WHERE vec_id % 5 = 0""".stripMargin
-    s"""WITH ${Similarity.kmeansCtes(64, 2, srcSql = srcSql)},
+    s"""WITH ${Similarity.kmeansCtes("64", 2, srcSql = srcSql)},
        |assigned AS (
        |  SELECT vec_id, cid, nvec FROM (
        |    SELECT v.vec_id, c.cid, $nvec AS nvec,
@@ -1948,9 +1920,9 @@ object Dedup {
     * count at √n so mean |cluster| is √n (balancing Σ|cluster|² pair
     * work against per-cluster granularity), and splitting √n across
     * two levels at k1 = k2 = n^(1/4) minimizes the k1 + k2 assignment
-    * cost for that product. Under Verify the sizes pin to the
-    * oracle-gated (8, 8) regardless (the [[Knobs]] discipline), and the
-    * SPARK_GRAFT_SEMDEDUP_K1/K2 env knobs still override for sweeps. */
+    * cost for that product. The oracle derives the same sizes from
+    * its own corpus count ([[semdedupLevelSql]]), so the auto-sized
+    * plan is the one the hash gate checks at every scale. */
   def qDedupSemdedup2L(s: SparkSession, dir: String, k1: Int = 0,
       k2: Int = 0, iters1: Int = 2, iters2: Int = 1,
       threshold: Double = 0.95): DataFrame = {
@@ -1961,8 +1933,7 @@ object Dedup {
       .select((col("vec_id") + lit(off)).as("vec_id"),
         transform(col("vec"), x => x + lit(0.02)).as("vec")))
     val (rk1, rk2) =
-      if (sys.props.get("graft.verify").contains("true")) (8, 8)
-      else if (k1 > 0 && k2 > 0) (k1, k2)
+      if (k1 > 0 && k2 > 0) (k1, k2)
       else
         // n = organic + every-5th replays; ONE count job (the corpus is
         // about to pay iters1+iters2+2 full passes — this is noise)
@@ -2001,6 +1972,12 @@ object Dedup {
       .orderBy("coarse_cid", "fine_cid", "keep_id", "prune_id")
   }
 
+  /** DuckDB mirror of [[semdedupLevels]]' auto-size over the oracle's
+    * corpus CTE `v`: the same smallest k ≥ 2 with k⁴ ≥ n, in HUGEINT. */
+  private val semdedupLevelSql =
+    """(SELECT MIN(k) FROM range(2, 65536) t(k)
+      |  WHERE CAST(k AS HUGEINT) * k * k * k >= (SELECT COUNT(*) FROM v))""".stripMargin
+
   private val qDedupSemdedup2LOracle = {
     import graft.functions.VectorOps.dotDSql
     val nvec = s"""list_transform(vec, x -> x / sqrt(${dotDSql("vec", "vec")}))"""
@@ -2014,7 +1991,8 @@ object Dedup {
     val dist =
       """list_reduce(list_transform(list_zip(a.vec, f.cvec),
         |      p -> (p[1] - p[2]) * (p[1] - p[2])), (x, y) -> x + y)""".stripMargin
-    s"""WITH ${Similarity.twoLevelCtes(8, 2, 8, 1, srcSql = srcSql)},
+    val k = semdedupLevelSql
+    s"""WITH ${Similarity.twoLevelCtes(k, 2, k, 1, srcSql = srcSql)},
        |fin AS (
        |  SELECT vec_id, cid, fid FROM (
        |    SELECT a.vec_id, a.cid, f.fid,
@@ -2034,33 +2012,25 @@ object Dedup {
        |ORDER BY coarse_cid, fine_cid, keep_id, prune_id""".stripMargin
   }
 
-  /** Sweep-only k override (the SCALE.md decade sweeps). The production
-    * contract grows k with the corpus to hold |cluster| bounded; the
-    * DuckDB oracle pins the default, so under Verify the knob is
-    * IGNORED (see [[Knobs]] — shared since round 16). */
-  private def scaleKnob(name: String, default: Int): Int =
-    Knobs.scaleKnob(name, default)
-
-  private def semdedupK: Int = scaleKnob("SPARK_GRAFT_SEMDEDUP_K", 64)
-
   /** The two-level sizing rule, pure and spec-pinned (Round17Spec): an
-    * unset level (≤0) auto-sizes to ⌈n^(1/4)⌉ floored at 2 — the IVF √n
-    * total-cluster rule split across two levels — while a SET level is
-    * honored INDEPENDENTLY (round-16 advisory: the old both-or-nothing
-    * branch silently discarded a lone SPARK_GRAFT_SEMDEDUP_K1/K2). */
+    * unset level (≤0) auto-sizes to the smallest k ≥ 2 with k⁴ ≥ n —
+    * ⌈n^(1/4)⌉ in exact integer arithmetic (a double fourth root of
+    * k⁴ + 1 rounds to exactly k once k ≥ 8,174, so `ceil(pow(n, 0.25))`
+    * misses the step there), the IVF √n total-cluster rule split
+    * across two levels — while a
+    * SET level is honored INDEPENDENTLY (round-16 advisory: the old
+    * both-or-nothing branch silently discarded a lone set level). */
   private[graft] def semdedupLevels(n: Long, k1: Int, k2: Int): (Int, Int) = {
-    val lvl = math.max(2, math.ceil(math.pow(n.toDouble, 0.25)).toInt)
+    var lvl = 2
+    while (BigInt(lvl).pow(4) < n) lvl += 1
     (if (k1 > 0) k1 else lvl, if (k2 > 0) k2 else lvl)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_semdedup" -> ((s, d) => qDedupSemdedup(s, d, k = semdedupK)),
-    // two-level knobs follow the same sweep-only discipline; the
-    // oracle pins (k1, k2) = (8, 8); knob default 0 = the √n auto-size
-    // rule (resolved inside qDedupSemdedup2L)
-    "q_dedup_semdedup_2l" -> ((s, d) => qDedupSemdedup2L(s, d,
-      k1 = scaleKnob("SPARK_GRAFT_SEMDEDUP_K1", 0),
-      k2 = scaleKnob("SPARK_GRAFT_SEMDEDUP_K2", 0))),
+    "q_dedup_semdedup" -> ((s, d) => qDedupSemdedup(s, d, k = 64)),
+    // no k given: both levels take the auto-size, which the oracle
+    // mirrors from its corpus count
+    "q_dedup_semdedup_2l" -> ((s, d) => qDedupSemdedup2L(s, d)),
     "q_dedup_incremental" -> ((s, d) => qDedupIncremental(s, d)),
     "q_dedup_index_append" -> ((s, d) => qDedupIndexAppend(s, d)),
     "q_dedup_incremental_near" -> ((s, d) => qDedupIncrementalNear(s, d)),

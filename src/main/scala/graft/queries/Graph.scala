@@ -21,8 +21,9 @@ import graft.Tables
   * The 0.85 damping factor is the exact rational 17/20 applied as
   * (17·x) div 20. Headroom: per-node rank is bounded by the total mass
   * n·10¹² (~1.6e16 at sf0.1), and 17× that stays far inside int64; for
-  * corpora past ~10⁵ nodes the initial mass per node is the knob to
-  * shrink (total mass, not node count, is what must stay under 2⁶³/17).
+  * corpora past ~10⁵ nodes the initial mass per node shrinks with the
+  * node count ([[autoMass]]: total mass, not node count, is what must
+  * stay under 2⁶³/17).
   */
 object Graph {
 
@@ -59,8 +60,8 @@ object Graph {
     * The int64 headroom the scaladoc above documents is ENFORCED:
     * the node count is read off the (cached, node-sized) degree
     * table and 17·n·initMass must stay inside Long — a graph too heavy
-    * for the default mass fails loudly with the knob named instead of
-    * silently wrapping. */
+    * even for the smallest mass fails loudly instead of silently
+    * wrapping. */
   /** The auto-mass rule: the largest power of 10 whose 17·n·mass
     * product stays inside Long, capped at 10¹² (the value every gated
     * SF pinned before the rule existed). MUST stay bit-equivalent to
@@ -118,17 +119,15 @@ object Graph {
     // the largest power of 10 with 17·n·mass inside Long, capped at the
     // 10^12 every gated SF pinned through round 15 (so small-SF plans
     // and hashes are IDENTICAL to the old fixed default, while a graph
-    // 100× the decade corpus sizes itself down instead of demanding the
-    // env knob). The oracle mirrors the exact rule as a scalar subquery
-    // over the degree table, which is what makes the entry
-    // hash-gateable at ANY factor (the 100× DuckDB gate includes it);
-    // SPARK_GRAFT_PR_MASS stays as a sweep-only override (validated,
-    // and IGNORED under Verify via the shared Knobs gate).
-    val initMass = Knobs.scaleKnobLong("SPARK_GRAFT_PR_MASS", autoMass(nNodes))
+    // 100× the decade corpus sizes itself down). The oracle mirrors the
+    // exact rule as a scalar subquery over the degree table, which is
+    // what makes the entry hash-gateable at ANY factor (the 100× DuckDB
+    // gate includes it).
+    val initMass = autoMass(nNodes)
     require(nNodes <= Long.MaxValue / 17 / initMass,
       s"pagerank int64 headroom: $nNodes nodes x initMass $initMass " +
-        "overflows 17*totalMass; shrink the per-node initial mass " +
-        "(SPARK_GRAFT_PR_MASS)")
+        "overflows 17*totalMass; the graph is too large for " +
+        "integer-scaled ranks")
     var ranks = adj.select(col("u"), lit(initMass).as("r"))
     var prevCache: Option[DataFrame] = None
     for (_ <- 1 to iters) {

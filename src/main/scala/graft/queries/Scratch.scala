@@ -21,8 +21,7 @@ import org.apache.spark.sql.SparkSession
   * real deployment, `file:` under local[32] so tests exercise the same
   * code path) — and KEEPS the URI scheme: all physical IO goes through
   * the Hadoop `FileSystem` of that scheme, never `java.io.File`.
-  * Layout-only (no oracle depends on it), so like every scale knob the
-  * env var is pinned off under the Verify gate.
+  * Layout-only: no oracle depends on it.
   *
   * Rename-atomicity caveat: the streaming feed-staging pattern
   * (write-outside + rename-into-view) relies on an atomic directory
@@ -40,8 +39,7 @@ object Scratch {
 
   private[graft] def root(s: SparkSession): String =
     sys.props.get("graft.scratch.root")
-      .orElse(if (sys.props.get("graft.verify").contains("true")) None
-              else sys.env.get("SPARK_GRAFT_SCRATCH_ROOT"))
+      .orElse(sys.env.get("SPARK_GRAFT_SCRATCH_ROOT"))
       .getOrElse(s.sessionState.conf.warehousePath)
 
   private val invocation = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -69,7 +69,8 @@ object Similarity {
     * kernel with bands=1, bits=12 — ONE codegen'd primitive loop per row
     * instead of 12 interpreted `aggregate(zip_with(...))` folds (the one
     * non-codegen expression chain left on a full-corpus ANN path; guide
-    * §4). Bit-identical to [[lshSignBucketHof]] on EVERY input:
+    * §4). Bit-identical to the 12-fold HOF form (the test-side witness
+    * `KernelWitnesses.lshSignBucketHof`) on EVERY input:
     * same `Random(7)` plane draw order, same ascending-index IEEE dot
     * sequence, same SQL NaN>0 sign semantics, and the trailing
     * `coalesce(_, 0)` reproduces the HOF's null-poisoning (a NULL /
@@ -83,19 +84,6 @@ object Similarity {
         vec.cast(org.apache.spark.sql.types.ArrayType(DoubleType)),
         lshAnnDims, bands = 1, bits = 12, seed = 7), 1),
       lit(0L))
-
-  /** The 12-interpreted-folds formulation — kept as the spec's
-    * independent witness for the kernel form above (and the shape the
-    * DuckDB oracle text mirrors). */
-  private[graft] def lshSignBucketHof(vec: Column): Column = {
-    val bits = lshAnnPlanes.zipWithIndex.map { case (p, i) =>
-      val proj = aggregate(
-        zip_with(vec, lit(p.toArray), (x, w) => x.cast(DoubleType) * w),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L << i)).otherwise(0L)
-    }
-    bits.reduce(_ + _)
-  }
 
   /** Corpus-side band keys: 4 bands × 3 bits of the sign bucket. */
   private[graft] def lshBandKeys(bucket: Column): Column =
@@ -887,8 +875,9 @@ object Similarity {
 
   /** Squared-distance argmin against PLAN-LITERAL centroids — one
     * codegen'd [[graft.functions.ArgminSqDist]] primitive loop per row
-    * (bit-identical to [[argminCidHof]]'s k interpreted folds +
-    * first-position-of-min, VectorKernelsSpec pins it): per-centroid
+    * (bit-identical to k interpreted folds + first-position-of-min, the
+    * test-side witness `KernelWitnesses.argminCidHof`; VectorKernelsSpec
+    * pins it): per-centroid
     * distances accumulate in the same ascending IEEE order as the
     * DuckDB mirror, and exact ties break toward the LOWEST centroid id
     * (`cents` is sorted). Wholly map-side: no shuffle, no join — the
@@ -903,22 +892,6 @@ object Similarity {
     // kernel result (malformed vector) would otherwise materialize as a
     // garbage 0 in external rows (VectorKernelsPropertySpec pins this)
     when(idx.isNotNull, element_at(cids, idx + lit(1)))
-  }
-
-  /** The k-interpreted-folds formulation — the spec's independent
-    * witness that the [[graft.functions.ArgminSqDist]] kernel matches
-    * the first-position-of-min semantics bit for bit. */
-  private[graft] def argminCidHof(vec: Column,
-      cents: Seq[(Long, Array[Double])]): Column = {
-    val dists = cents.map { case (_, c) =>
-      aggregate(zip_with(vec, lit(c), (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x)
-    }
-    val dl = array(dists: _*)
-    val cids = array(cents.map(c => lit(c._1)): _*)
-    val pos = array_position(dl, array_min(dl)).cast("int")
-    // same ANSI ElementAt nullability guard as argminCid
-    when(pos.isNotNull, element_at(cids, pos))
   }
 
   /** Lloyd's k-means fit: `iters` rounds of (map-side assignment
@@ -1001,8 +974,9 @@ object Similarity {
     * `iters` assignment/update rounds over a centroid RELATION (the
     * SQL form of the plan-literal matrix — row_number ORDER BY dist,
     * cid is exactly first-position-of-min over cid-sorted literals).
-    * Exposes `c$iters` (cid, n, cvec list) and `v` (vec_id, vec). */
-  private[queries] def kmeansCtes(k: Int, iters: Int, dims: Int = 64,
+    * Exposes `c$iters` (cid, n, cvec list) and `v` (vec_id, vec). `k` is
+    * a SQL expression: a literal, or a scalar subquery over `v`. */
+  private[queries] def kmeansCtes(k: String, iters: Int, dims: Int = 64,
       srcSql: String =
         "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec FROM embeddings")
       : String = {
@@ -1117,29 +1091,19 @@ object Similarity {
     * budget, and ran as INTERPRETED bytecode — a 7-minute stage at
     * 100× for what the grouped kernel does in seconds. Same IEEE
     * sequence, same lowest-fid tie-break; VectorKernelsSpec pins
-    * bit-equality against the CASE witness.) */
+    * bit-equality against the CASE form, the test-side witness
+    * `KernelWitnesses.fineCidCaseWitness`.) */
   private[graft] def fineCid(vec: Column, cid: Column,
       fine: Map[Long, Seq[(Long, Array[Double])]]): Column =
     graft.functions.VectorKernels.argminSqDistGrouped(vec, cid, fine)
-
-  /** The k1-branch CASE-of-argmin formulation — the spec's independent
-    * witness for [[graft.functions.ArgminSqDistGrouped]] (never on a
-    * hot path: see [[fineCid]]). */
-  private[graft] def fineCidCaseWitness(vec: Column, cid: Column,
-      fine: Map[Long, Seq[(Long, Array[Double])]]): Column = {
-    val sorted = fine.toSeq.sortBy(_._1)
-    sorted.tail.foldLeft(
-      when(cid === lit(sorted.head._1), argminCid(vec, sorted.head._2))) {
-      case (acc, (c, cents)) => acc.when(cid === lit(c), argminCid(vec, cents))
-    }
-  }
 
   /** DuckDB mirror of [[kmeansFitTwoLevel]]: [[kmeansCtes]] for the
     * coarse fit, then coarse assignment (`ac`/`av`), per-cluster fine
     * seeds (`f0`, k2 lowest vec_ids per cid), `iters2` fine rounds
     * (`fa_i`/`fm_i`/`f_i` with composite (cid, fid) keys), ending in
-    * `f$iters2` and the carried `av`. */
-  private[queries] def twoLevelCtes(k1: Int, iters1: Int, k2: Int,
+    * `f$iters2` and the carried `av`. `k1` and `k2` are SQL expressions,
+    * as in [[kmeansCtes]]. */
+  private[queries] def twoLevelCtes(k1: String, iters1: Int, k2: String,
       iters2: Int, dims: Int = 64,
       srcSql: String =
         "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec FROM embeddings")
@@ -1204,7 +1168,7 @@ object Similarity {
   }
 
   private val qEmbedKmeansOracle =
-    s"""WITH ${kmeansCtes(8, 2)}
+    s"""WITH ${kmeansCtes("8", 2)}
        |SELECT c.cid AS cluster_id, t.i - 1 AS pos, c.n AS n_members,
        |  round(c.cvec[t.i], 6) AS centroid
        |FROM c2 c CROSS JOIN range(1, 9) t(i)

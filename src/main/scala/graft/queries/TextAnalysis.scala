@@ -290,20 +290,14 @@ object TextAnalysis {
     // (split-to-singletons → ascii per element → interpreted fold) runs
     // as the native PolyFingerprint codegen loop — same codepoint
     // sequence, same exact modular arithmetic (scaladoc there;
-    // PolyFingerprintSpec pins bit-equality incl. the HOF witness)
+    // PolyFingerprintSpec pins bit-equality against the HOF witness,
+    // KernelWitnesses.textFingerprintHof)
     val fp = graft.functions.PolyFingerprint.fingerprint(col("text"))
     Tables.documents(s, dir).select(
       col("doc_id"), fp.as("fingerprint"),
       substring(col("text"), 1, 16).as("prefix"))
       .orderBy("doc_id")
   }
-
-  /** The interpreted HOF formulation — kept as the spec's independent
-    * witness for the [[graft.functions.PolyFingerprint]] kernel. */
-  private[graft] def textFingerprintHof: Column =
-    aggregate(
-      transform(split(col("text"), ""), ch => ascii(ch).cast(LongType)),
-      lit(0L), (acc, c) => (acc * 31 + c) % 1000000007L)
 
   private val qTextFingerprintOracle =
     """SELECT doc_id,
@@ -735,7 +729,7 @@ object TextAnalysis {
             s"regime (m=$m): kth*m="),
           kthM.cast("string"),
           lit(" <= N="), nTot.cast("string"),
-          lit(" — raise m (SPARK_GRAFT_HH_M) or use q_heavy_hitters_approx" +
+          lit(" — raise m or use q_heavy_hitters_approx" +
             " (exact counts, candidate set within eps=1/m of the true top-k)")))
         .as("_guard"))
     // assert_true evaluates to null on success, so the isNull filter
@@ -1133,14 +1127,12 @@ object TextAnalysis {
   // V costs one distinct-count aggregation over the gram scan — gate
   // machinery, not the production shape: a 100 TB corpus sizes m from
   // its vocabulary ESTIMATE (or uses the approx twin, whose eps=1/m
-  // contract needs no regime at all), via the SPARK_GRAFT_HH_M
-  // override, which still wins outside the Verify gate.
+  // contract needs no regime at all), passing m to the operator.
   // The exact distinct-bigram count is a CORPUS property, so it is
   // memoized per dir (round-19 advisory: q_heavy_hitters and its approx
   // twin each ran the full vocabulary scan inside their registry
   // lambdas — two extra corpus aggregations per board). Only the COUNT
-  // is cached; the knob resolution below stays per-call so a spec-side
-  // SPARK_GRAFT_HH_M / graft.verify flip is still honored.
+  // is cached.
   private val hhVocab =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -1155,12 +1147,12 @@ object TextAnalysis {
     // uncapped, so a silent clamp here would desync engine and oracle
     // arithmetic (round-19 advisory) — refuse loudly instead; a corpus
     // with 2·V over Int.MaxValue (>1e9 distinct bigrams in one gated
-    // table) needs the approx twin or an explicit SPARK_GRAFT_HH_M
+    // table) needs the approx twin or an explicit m
     require(auto <= Int.MaxValue.toLong,
       s"auto-sized heavy-hitters m=$auto exceeds Int.MaxValue — the " +
         "exact entry cannot mirror its oracle at this vocabulary; use " +
-        "q_heavy_hitters_approx or set SPARK_GRAFT_HH_M explicitly")
-    Knobs.scaleKnobWide("SPARK_GRAFT_HH_M", auto.toInt)
+        "q_heavy_hitters_approx, or call qHeavyHitters with an explicit m")
+    auto.toInt
   }
 
   // the oracle-side mirror of the auto-sizing rule, over the same
@@ -1223,12 +1215,12 @@ object TextAnalysis {
     "q_ngram_counts" -> ((s, d) => qNgramCounts(s, d)),
     "q_text_novelty" -> (qTextNovelty _),
     "q_text_confusion" -> (qTextConfusion _),
-    // SPARK_GRAFT_HH_M exists for corpora whose top-k does NOT
-    // concentrate as they grow — e.g. the key-shifted scaled corpus of
-    // `ScaleBench.buildScaledData` (SCALE.md), which deliberately
-    // flattens the gram distribution (disjoint per-copy vocabularies),
-    // so N scales with the factor while kth stays put and the default
-    // 1024 correctly trips the guard.
+    // m is auto-sized from the corpus vocabulary (hhM), so the exact
+    // regime holds even where the top-k does NOT concentrate as the
+    // corpus grows — e.g. the key-shifted scaled corpus of
+    // `ScaleBench.buildScaledData` (SCALE.md), whose disjoint per-copy
+    // vocabularies keep kth put while N scales with the factor (a fixed
+    // m=1024 trips the guard there).
     "q_heavy_hitters" -> ((s, d) => qHeavyHitters(s, d, m = hhM(s, d))),
     // sketch twin: no guard, rows-only on the board (outside the exact
     // regime the candidate set is partition-dependent by design)

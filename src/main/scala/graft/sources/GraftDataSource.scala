@@ -602,19 +602,8 @@ class GraftPartitionReader(p: GraftFilePartition,
       }
     }).getOrElse(Array.empty)
 
-  private def tsUnit(f: StructField): ScalarParse.TsUnit =
-    if (f.metadata.contains("graft.timestampUnit"))
-      f.metadata.getString("graft.timestampUnit") match {
-        case "TsSecond" => ScalarParse.TsSecond
-        case "TsMicro" => ScalarParse.TsMicro
-        case "TsNano" => ScalarParse.TsNano
-        case _ => ScalarParse.TsMilli
-      }
-    else ScalarParse.TsMilli
-
   private def converter(f: StructField): String => Any = {
-    val unsigned = f.metadata.contains("graft.unsigned") &&
-      f.metadata.getBoolean("graft.unsigned")
+    val unsigned = IngestPipeline.isUnsigned(f)
     f.dataType match {
       case BooleanType => v => ScalarParse.parseBool(v).map(Boolean.box).orNull
       case LongType => v =>
@@ -632,7 +621,7 @@ class GraftPartitionReader(p: GraftFilePartition,
       case DateType => v =>
         ScalarParse.parseDateYmd(v).map(Int.box).orNull
       case TimestampNTZType =>
-        val unit = tsUnit(f)
+        val unit = IngestPipeline.tsUnitOf(f)
         v => ScalarParse.parseTimestampMs(v).map { ms =>
           val unitMs = unit match {
             // Scala Long `/` truncates toward zero, same as the

@@ -39,7 +39,7 @@ class ConvertMainSpec extends SparkSpec {
   }
 
   private def writeFixture(rows: Int, badTail: Int): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("graft_cli")
+    val dir = tempDir("graft_cli")
     val f = dir.resolve("fixture.tsv")
     val sb = new StringBuilder("id\tname\tscore\tflag\tn\n")
     (0 until rows).foreach { i =>
@@ -203,7 +203,7 @@ class ConvertMainSpec extends SparkSpec {
   test("parquet footer: ZSTD codec and block-bounded row groups") {
     import spark.implicits._
     val df = (0 until 1000).map(i => (i.toLong, s"s$i")).toDF("a", "b")
-    val out = Files.createTempDirectory("graft_footer").resolve("t.parquet").toString
+    val out = tempDir("graft_footer").resolve("t.parquet").toString
     IngestPipeline.writeParquetSingleFile(df.orderBy("a"), out)
     val reader = footerOf(out)
     try {
@@ -222,7 +222,7 @@ class ConvertMainSpec extends SparkSpec {
     // same option key writerOptions uses, with a tiny limit so a small
     // frame proves the mechanism splits row groups at the bound
     val df = (0 until 1000).map(i => (i.toLong, i.toString)).toDF("a", "b")
-    val dir = Files.createTempDirectory("graft_rg").toString + "/t"
+    val dir = tempDir("graft_rg").toString + "/t"
     df.coalesce(1).write.mode("overwrite")
       .options(IngestPipeline.writerOptions(2) + ("parquet.block.row.count.limit" -> "300"))
       .parquet(dir)
@@ -271,7 +271,7 @@ class ConvertMainSpec extends SparkSpec {
   test("e2e: a DIRECTORY of part files converts through the CLI path") {
     // remote-FS shape: input is a directory, so the exact line pre-count
     // is skipped (estimate path) and all parts union into one output
-    val dir = Files.createTempDirectory("graft_cli_dir")
+    val dir = tempDir("graft_cli_dir")
     val data = Files.createDirectory(dir.resolve("batch"))
     def part(name: String, from: Int, n: Int): Unit =
       Files.writeString(data.resolve(name), (from until from + n)
@@ -293,7 +293,7 @@ class ConvertMainSpec extends SparkSpec {
   test("denominator-less sources get a bytes-derived estimate, marked approximate") {
     // a DIRECTORY of part files takes the no-exact-count path that
     // remote filesystems hit — the estimate must land near the truth
-    val dir = Files.createTempDirectory("graft_progress_est")
+    val dir = tempDir("graft_progress_est")
     def lines(start: Int, n: Int) = (start until start + n)
       .map(i => s"$i\tname_$i\t${i * 0.25}").mkString("id\tname\tscore\n", "\n", "\n")
     Files.writeString(dir.resolve("p1.tsv"), lines(0, 3000))
@@ -304,7 +304,7 @@ class ConvertMainSpec extends SparkSpec {
 
     // a header-only leading part file must not poison the estimate with
     // '~0' — sampling falls through to the first file with data lines
-    val dir2 = Files.createTempDirectory("graft_progress_est_hdr")
+    val dir2 = tempDir("graft_progress_est_hdr")
     Files.writeString(dir2.resolve("a_empty.tsv"), "id\tname\tscore\n")
     Files.writeString(dir2.resolve("b_data.tsv"), lines(0, 3000))
     val est2 = ConvertMain.estimateRowsFromBytes(spark, dir2.toString)
@@ -313,7 +313,7 @@ class ConvertMainSpec extends SparkSpec {
       s"estimate ${est2.get} not within 10% of 3000")
 
     // all part files header-only -> no denominator at all, never Some(0)
-    val dir3 = Files.createTempDirectory("graft_progress_est_none")
+    val dir3 = tempDir("graft_progress_est_none")
     Files.writeString(dir3.resolve("a.tsv"), "id\tname\tscore\n")
     assert(ConvertMain.estimateRowsFromBytes(spark, dir3.toString).isEmpty)
 

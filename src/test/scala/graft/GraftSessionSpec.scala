@@ -11,7 +11,8 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.log.level" -> "WARN"))
     // master and partitions are independent (ConvertMain: local[*] with
     // one partition per available processor)
     val star = GraftSession.conf("local[*]", 3).toMap

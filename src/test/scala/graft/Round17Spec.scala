@@ -14,6 +14,14 @@ class Round17Spec extends AnyFunSuite {
     assert(semdedupLevels(17L, 0, 0) == (3, 3))      // ceil kicks in
     assert(semdedupLevels(24000L, 0, 0) == (13, 13)) // the 10x corpus
     assert(semdedupLevels(600000L, 0, 0) == (28, 28))
+    // exact fourth powers and their successors: the rule is integer-
+    // exact, so k^4 = n keeps k and n = k^4 + 1 steps to k + 1
+    for ((n, k) <- Seq(16L -> 2, 17L -> 3, 81L -> 3, 82L -> 4,
+        2401L -> 7, 2402L -> 8, 614656L -> 28, 614657L -> 29))
+      assert(semdedupLevels(n, 0, 0) == ((k, k)), s"n = $n")
+    // the corpus sizes at sf0.01 and sf0.1
+    assert(semdedupLevels(600L, 0, 0) == (5, 5))
+    assert(semdedupLevels(2400L, 0, 0) == (7, 7))
     // both set: taken verbatim (resolved before this fn in the entry,
     // but the pure rule must agree)
     assert(semdedupLevels(24000L, 32, 20) == (32, 20))
@@ -21,20 +29,5 @@ class Round17Spec extends AnyFunSuite {
     // one auto-sizes — not silently both-auto
     assert(semdedupLevels(24000L, 32, 0) == (32, 13))
     assert(semdedupLevels(24000L, 0, 20) == (13, 20))
-  }
-
-  test("the index bucket knob is Int-ranged: scaleKnobWide rejects " +
-    "values that would have wrapped through toInt") {
-    // the knob rides scaleKnobWide's <=9-digit grammar, so the values
-    // the round-16 advisory exhibited (4294967297 -> 1, 4294967296 ->
-    // 0 under the old Long.toInt path) are REJECTED at parse; pin the
-    // grammar here since env vars can't be injected into a JVM test
-    val grammar = "[0-9]{1,9}"
-    assert(!"4294967297".matches(grammar))
-    assert(!"4294967296".matches(grammar))
-    assert("999999999".matches(grammar))
-    assert("999999999".toInt > 0) // max accepted value fits Int
-    // and the default is in range
-    assert(graft.queries.Dedup.bandIndexBuckets > 0)
   }
 }

@@ -17,7 +17,7 @@ class Round20OptSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf)
     val diff = e.select(
         Similarity.lshSignBucket(col("embedding")).as("k"),
-        Similarity.lshSignBucketHof(col("embedding")).as("h"))
+        graft.functions.KernelWitnesses.lshSignBucketHof(col("embedding")).as("h"))
       .filter(not(col("k") <=> col("h")))
       .count()
     assert(diff === 0L)
@@ -41,7 +41,7 @@ class Round20OptSpec extends SparkSpec {
       spark.sparkContext.parallelize(rows, 2), schema)
     val out = df.select(col("id"),
         Similarity.lshSignBucket(col("embedding")).as("k"),
-        Similarity.lshSignBucketHof(col("embedding")).as("h"))
+        graft.functions.KernelWitnesses.lshSignBucketHof(col("embedding")).as("h"))
       .collect().sortBy(_.getInt(0))
     out.foreach { r =>
       assert(r.getLong(1) === r.getLong(2), s"id=${r.getInt(0)}")

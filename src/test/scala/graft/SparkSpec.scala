@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide SparkSession). */
@@ -14,9 +17,29 @@ object SparkSpec {
   val sf: String = "/root/testdata/sf0.001"
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
+
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under the system temp dir, named `prefix…`. It
+    * and everything written under it are deleted after the suite. */
+  def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach { d =>
+      val walk = Files.walk(d)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p): Unit)
+      finally walk.close()
+    }
+    finally super.afterAll()
 
   /** Run `body` with SQL confs temporarily set, restoring prior values
     * after (the session is shared JVM-wide across suites). */

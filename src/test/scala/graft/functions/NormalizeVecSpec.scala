@@ -19,7 +19,7 @@ class NormalizeVecSpec extends SparkSpec {
     val df = floats(50, 5).toDF("id", "vec")
     val rows = df.select(
       VectorOps.normalized(col("vec")).as("fast"),
-      VectorOps.normalizedHof(col("vec")).as("slow")).collect()
+      KernelWitnesses.normalizedHof(col("vec")).as("slow")).collect()
     rows.foreach { r =>
       val (a, b) = (r.getSeq[Double](0), r.getSeq[Double](1))
       assert(a.length == b.length)

@@ -13,7 +13,7 @@ class PolyFingerprintSpec extends SparkSpec {
     val d = graft.Tables.documents(spark, sf)
     val diff = d.select(
         PolyFingerprint.fingerprint(col("text")).as("k"),
-        graft.queries.TextAnalysis.textFingerprintHof.as("h"))
+        KernelWitnesses.textFingerprintHof.as("h"))
       .filter(not(col("k") <=> col("h")))
       .count()
     assert(diff === 0L)
@@ -28,7 +28,7 @@ class PolyFingerprintSpec extends SparkSpec {
     val df = rows.toDF("text")
     val out = df.select(
         PolyFingerprint.fingerprint(col("text")).as("k"),
-        graft.queries.TextAnalysis.textFingerprintHof.as("h"))
+        KernelWitnesses.textFingerprintHof.as("h"))
       .collect()
     out.foreach { r =>
       assert(r.isNullAt(0) === r.isNullAt(1))

@@ -14,7 +14,7 @@ class SimhashSigAggSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val fresh = graft.queries.Dedup.simhashSig128Of(docs)
       .collect().map(r => (0 to 8).map(r.getLong).toVector).sortBy(_.head).toSeq
-    val witness = graft.queries.Dedup.simhashSig128ColumnsWitness(docs)
+    val witness = KernelWitnesses.simhashSig128ColumnsWitness(docs)
       .collect().map(r => (0 to 8).map(r.getLong).toVector).sortBy(_.head).toSeq
     assert(fresh.nonEmpty && fresh == witness)
   }

@@ -24,7 +24,7 @@ class TimestampMsParseSpec extends SparkSpec {
     val df = cases.toDF("v").select(
       col("v"),
       Parsers.parseTimestampMs(col("v")).as("fused"),
-      Parsers.parseTimestampMsChain(trim(col("v"))).as("chain"))
+      graft.ingest.RetiredCastChains.parseTimestampMsChain(trim(col("v"))).as("chain"))
     val rows = df.collect()
     rows.foreach { r =>
       assert(r.get(1) == r.get(2), s"input='${r.getString(0)}' fused=${r.get(1)} chain=${r.get(2)}")

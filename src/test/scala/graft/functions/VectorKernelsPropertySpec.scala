@@ -90,7 +90,7 @@ class VectorKernelsPropertySpec extends SparkSpec {
     val df = rows.toDF("a", "b")
     val got = df.select(
       VectorKernels.dotD(col("a"), col("b")).as("fast"),
-      VectorOps.dotDHof(col("a"), col("b")).as("slow")).collect()
+      KernelWitnesses.dotDHof(col("a"), col("b")).as("slow")).collect()
     assertBitEqual(got, "graft_dot")
     // the sweep must exercise both branches
     assert(got.exists(_.isNullAt(0)) && got.exists(!_.isNullAt(0)))
@@ -112,7 +112,7 @@ class VectorKernelsPropertySpec extends SparkSpec {
       .toDF("id", "vec")
     val mm = short.select(
       graft.queries.Similarity.argminCid(col("vec"), cents).as("fast"),
-      graft.queries.Similarity.argminCidHof(col("vec"), cents).as("slow"))
+      KernelWitnesses.argminCidHof(col("vec"), cents).as("slow"))
       .collect()
     mm.foreach(r => assert(r.isNullAt(0) && r.isNullAt(1),
       s"length mismatch must be NULL in both forms: $r"))
@@ -122,7 +122,7 @@ class VectorKernelsPropertySpec extends SparkSpec {
     val df = rows.toDF("id", "vec")
     val got = df.select(
       graft.queries.Similarity.argminCid(col("vec"), cents).as("fast"),
-      graft.queries.Similarity.argminCidHof(col("vec"), cents).as("slow"))
+      KernelWitnesses.argminCidHof(col("vec"), cents).as("slow"))
       .collect()
     assertBitEqual(got, "argmin")
     assert(got.exists(_.isNullAt(0)) && got.exists(!_.isNullAt(0)))
@@ -188,7 +188,7 @@ class VectorKernelsPropertySpec extends SparkSpec {
       val df = rows.toDF("cid", "vec")
       val got = df.select(
         graft.queries.Similarity.fineCid(col("vec"), col("cid"), fine).as("fast"),
-        graft.queries.Similarity.fineCidCaseWitness(col("vec"), col("cid"), fine).as("slow"))
+        KernelWitnesses.fineCidCaseWitness(col("vec"), col("cid"), fine).as("slow"))
         .collect()
       assertBitEqual(got, s"argmin_grouped trial $trial")
       assert(got.exists(_.isNullAt(0)) && got.exists(!_.isNullAt(0)),

@@ -22,7 +22,7 @@ class VectorKernelsSpec extends SparkSpec {
     val df = vecs(200, 7).toDF("id", "a", "b")
     val rows = df.select(
       VectorKernels.dotD(col("a"), col("b")).as("fast"),
-      VectorOps.dotDHof(col("a"), col("b")).as("slow")).collect()
+      KernelWitnesses.dotDHof(col("a"), col("b")).as("slow")).collect()
     rows.foreach { r =>
       assert(java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
@@ -39,7 +39,7 @@ class VectorKernelsSpec extends SparkSpec {
     ).toDF("a", "b")
     val rows = df.select(
       VectorKernels.dotD(col("a"), col("b")).as("fast"),
-      VectorOps.dotDHof(col("a"), col("b")).as("slow")).collect()
+      KernelWitnesses.dotDHof(col("a"), col("b")).as("slow")).collect()
     rows.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"null disagreement: $r")
       if (!r.isNullAt(0)) assert(r.getDouble(0) == r.getDouble(1))
@@ -61,7 +61,7 @@ class VectorKernelsSpec extends SparkSpec {
       .toDF("id", "vec")
     val rows = df.select(
       graft.queries.Similarity.argminCid(col("vec"), tied).as("fast"),
-      graft.queries.Similarity.argminCidHof(col("vec"), tied).as("slow"))
+      KernelWitnesses.argminCidHof(col("vec"), tied).as("slow"))
       .collect()
     rows.foreach { r =>
       assert(r.getLong(0) == r.getLong(1), s"argmin disagreement: $r")
@@ -94,7 +94,7 @@ class VectorKernelsSpec extends SparkSpec {
     val df = rows.toDF("id", "cid", "vec")
     val got = df.select(
       graft.queries.Similarity.fineCid(col("vec"), col("cid"), fine).as("fast"),
-      graft.queries.Similarity.fineCidCaseWitness(col("vec"), col("cid"), fine)
+      KernelWitnesses.fineCidCaseWitness(col("vec"), col("cid"), fine)
         .as("slow")).collect()
     got.zipWithIndex.foreach { case (r, i) =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"null disagreement at $i: $r")

@@ -11,7 +11,7 @@ import java.nio.file.Files
 class IngestPipelineSpec extends SparkSpec {
 
   private def tempCsv(content: String, suffix: String = ".csv"): String = {
-    val f = Files.createTempFile("graft", suffix)
+    val f = tempDir("graft").resolve("input" + suffix)
     Files.writeString(f, content)
     f.toString
   }
@@ -81,7 +81,7 @@ class IngestPipelineSpec extends SparkSpec {
   test("ordered single-file sink reproduces input order (O12)") {
     val p = tempCsv("k,v\n3,c\n1,a\n2,b\n")
     val df = IngestPipeline.convert(spark, p, fullScan = true)
-    val out = Files.createTempDirectory("graft_ordered").toString
+    val out = tempDir("graft_ordered").toString
     IngestPipeline.writeParquetSingleOrdered(df, out, Seq("k"))
     val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length == 1) // single file like the reference's writer

@@ -21,6 +21,9 @@ class TypeDecisionSpec extends AnyFunSuite {
     assert(TypeDecision.decideRef(statsOf(Seq("true", "false"))) == "Boolean")
     assert(TypeDecision.decideRef(statsOf(Seq("2024-01-01", "2024-01-02"))) == "Date32")
     assert(TypeDecision.decideRef(statsOf(Seq("3.14", "2.71"))) == "Float64")
+    assert(TypeDecision.decide(statsOf(Seq("true", "false"))) == BooleanType)
+    assert(TypeDecision.decide(statsOf(Seq("2024-01-01", "2024-01-02"))) == DateType)
+    assert(TypeDecision.decide(statsOf(Seq("3.14", "2.71"))) == DoubleType)
   }
 
   test("bool outranks integer: 0/1 column is Boolean (schema.rs:256-258)") {
@@ -40,6 +43,7 @@ class TypeDecisionSpec extends AnyFunSuite {
 
   test("integers beyond u64 → Float64 (schema.rs:270-274)") {
     assert(TypeDecision.decideRef(statsOf(Seq("99999999999999999999999", "1"))) == "Float64")
+    assert(TypeDecision.decide(statsOf(Seq("99999999999999999999999", "1"))) == DoubleType)
   }
 
   test("all-null column → LargeUtf8/String (schema.rs:236-239)") {

@@ -35,9 +35,10 @@ QUERIES="$QUERIES q_join_inner q_join_left q_join_semi q_join_anti \
 # the one family that had no scaled oracle row. Integer-scaled vector
 # sums, LSH banding, kmeans/IVF assignment and the semantic-decontamination
 # screen all change behavior with n (sum magnitudes, collision rates,
-# tie shapes), so they are gated here at 20k vectors / 50k docs. Under
-# Verify the k-knobs pin to their oracle-gated defaults (Knobs), so the
-# DuckDB mirrors replay 1:1.
+# tie shapes), so they are gated here at 20k vectors / 50k docs. Verify
+# runs the plans Bench times; q_dedup_semdedup_2l's auto-sized levels
+# (k1 = k2 = 13 at 24k vectors) are derived the same way in its oracle,
+# so the DuckDB mirrors replay 1:1.
 QUERIES="$QUERIES q_embed_centroid q_embed_covariance q_embed_covariance_full \
   q_embed_kmeans q_embed_pca_power q_embed_quant q_ann_lsh q_ann_ivf \
   q_ann_range q_dedup_semdedup q_dedup_semdedup_2l q_decontaminate_semantic"
@@ -146,7 +147,7 @@ QUERIES="$QUERIES q_context_pack q_hist_equidepth_approx \
 #     distinct bigram count, mirrored in the approx oracle's SQL), so
 #     the exact entry is provably in-regime (m ≥ V ⇒ no partition ever
 #     hits the counter cap ⇒ full-vocabulary candidates ⇒ exact) at
-#     every decade; SPARK_GRAFT_HH_M still overrides outside Verify.
+#     every decade.
 #   q_dedup_embed_slice / q_dedup_minhash_verified_slice — bounded-
 #     oracle GATE TWINS of the two entries whose brute-force oracles
 #     really are O(n^2) (4e8 pairs / 1.25e9 pairs at this decade): the
