@@ -214,30 +214,35 @@ object ConvertMain {
       // runs once per cell and the input is scanned exactly once.
       //
       // The typed rows then meet in ONE partition, sorted back into input
-      // order by the tag (single-file parity with the reference's
-      // reorder buffer, conversion.rs:159-195). A single-partition
+      // order (single-file parity with the reference's reorder buffer,
+      // conversion.rs:159-195) by file, split offset and the tag: Spark
+      // packs splits largest first, so the tag alone would order a
+      // directory's files by size, not by name. A single-partition
       // exchange has no range bounds to sample, so there is no second
       // read of the input; the one-task tail only sorts and writes.
       val castCols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         graft.ingest.CastKernel.castTo(col(f.name), f.dataType,
           IngestPipeline.tsUnitOf(f), IngestPipeline.isUnsigned(f)).as(s"_graft_cast_$i")
       }
+      val order = Seq(col("_metadata.file_path").as("_graft_file"),
+        col("_metadata.file_block_start").as("_graft_block"),
+        monotonically_increasing_id().as("_graft_row"))
       val projected = raw.select(
-        (monotonically_increasing_id().as("_graft_row") +:
-          schema.fieldNames.map(col).toSeq) ++ castCols: _*)
+        (order ++ schema.fieldNames.map(col)) ++ castCols: _*)
       val errExprs = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         val failed = !graft.ingest.NullTokens.isNullToken(col(f.name)) &&
           col(s"_graft_cast_$i").isNull
         sum(when(failed, 1L).otherwise(0L)).as(s"_err_$i")
       }
       val counted = projected.observe(obs, count(lit(1)).as("_rows"), errExprs: _*)
+      val orderCols = Seq("_graft_file", "_graft_block", "_graft_row")
       val typed = counted
-        .select(col("_graft_row") +: schema.fields.toSeq.zipWithIndex.map {
+        .select(orderCols.map(col) ++ schema.fields.toSeq.zipWithIndex.map {
           case (f, i) => col(s"_graft_cast_$i").as(f.name)
         }: _*)
         .repartition(1)
-        .sortWithinPartitions("_graft_row")
-        .drop("_graft_row")
+        .sortWithinPartitions(orderCols.map(col): _*)
+        .drop(orderCols: _*)
       IngestPipeline.writeParquetSingleFile(typed, outputPath)
       obs.get("_rows").asInstanceOf[Long]
     } finally ticker.stop()

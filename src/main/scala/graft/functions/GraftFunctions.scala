@@ -36,11 +36,11 @@ object GraftFunctions {
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_parse_ts_ms" -> { exprs =>
       arity("graft_parse_ts_ms", exprs, 1, 1, "one STRING argument")
-      TimestampMsParse(exprs.head)
+      CellEpochMs(exprs.head)
     },
     "graft_parse_date_ymd" -> { exprs =>
       arity("graft_parse_date_ymd", exprs, 1, 1, "one STRING argument")
-      DateYmdParse(exprs.head)
+      CellDate(exprs.head)
     },
     "graft_normalize_vec" -> { exprs =>
       arity("graft_normalize_vec", exprs, 1, 1, "one ARRAY argument")

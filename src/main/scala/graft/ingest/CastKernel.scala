@@ -4,74 +4,55 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.{CellDouble, CellLong}
+import graft.functions.{CellBool, CellDate, CellDouble, CellLong, CellTimestamp, CellU64Decimal}
 
 /** The reference's typed cast kernels (§1.4, reference analyse.rs:
-  * 108-313) as Column expressions over an all-string scan. Invalid
-  * values become NULL, never errors — explicitly try-semantics, so the
-  * plan behaves identically whether the session runs ANSI on or off.
-  * Everything stays inside whole-stage codegen (no UDFs). The i64, u64
-  * and f64 kernels and the null-token test are fused single-pass byte
-  * expressions ([[graft.functions.CellParse]]): each numeric cell is
-  * one static call instead of a regex gate, a significant-digit regex
-  * and a `try_cast`, with three `trim`s and a `lower` in front.
+  * 108-313) as Column expressions over an all-string scan, one per
+  * inferred type. Each is one static call into
+  * [[graft.functions.CellParse]], the one implementation of the typed
+  * build's per-cell semantics, so the CLI, `applySchema`,
+  * `convertStream`, the JSONL route and the `format("graft")` reader
+  * agree cell for cell. Invalid values become NULL, never errors —
+  * explicitly try-semantics, so the plan behaves identically whether
+  * the session runs ANSI on or off — and a null token is null in every
+  * type. Everything stays inside whole-stage codegen (no UDFs).
   */
 object CastKernel {
 
-  private def gated(c: Column)(body: Column => Column): Column =
-    when(NullTokens.isNullToken(c), lit(null)).otherwise(body(trim(c)))
+  private def cell(c: Column)(kernel: Expression => Expression): Column =
+    ColumnBridge.column(kernel(ColumnBridge.expression(c)))
 
   /** Boolean: token table, else null (analyse.rs:114-126). */
-  def toBoolean(c: Column): Column = Parsers.parseBool(c)
+  def toBoolean(c: Column): Column = cell(c)(CellBool)
 
   /** Int64: optional sign, 1–38 digits (the reference's i128 parse
     * domain, so zero-padded values pass), at most 19 of them significant,
     * then the i64 range check; anything else, overflow included, → null
     * (analyse.rs:128-144 parses i128 then range-checks). */
-  def toLong(c: Column): Column =
-    ColumnBridge.column(CellLong(ColumnBridge.expression(c), unsigned = false))
+  def toLong(c: Column): Column = cell(c)(CellLong(_, unsigned = false))
 
   /** UInt64 → LongType policy (SURVEY §7.4.1): non-negative integers that
     * fit i64; negative → null like the reference (analyse.rs:146-162). */
-  def toUnsignedLong(c: Column): Column =
-    ColumnBridge.column(CellLong(ColumnBridge.expression(c), unsigned = true))
+  def toUnsignedLong(c: Column): Column = cell(c)(CellLong(_, unsigned = true))
 
   /** UInt64 full-fidelity variant: DecimalType(20,0) holds all of u64. */
-  def toUnsignedDecimal(c: Column): Column = gated(c) { t =>
-    val sig = length(regexp_replace(t, "^[+]?0*", ""))
-    val x = when(t.rlike("^[+]?\\d+$") && sig <= 20, t.try_cast("decimal(20,0)"))
-    when(x >= 0 && x <= lit("18446744073709551615").cast(DecimalType(20, 0)), x)
-      .otherwise(lit(null).cast(DecimalType(20, 0)))
-  }
+  def toUnsignedDecimal(c: Column): Column = cell(c)(CellU64Decimal)
 
   /** Float64: f64 parse; non-finite (inf/NaN) → null (analyse.rs:164-180).
     * The syntax is Rust's f64 syntax: Spark's string→double accepts
     * Java-isms (hex "0x10", suffix "1.5d") that the reference rejects. */
-  def toDouble(c: Column): Column =
-    ColumnBridge.column(CellDouble(ColumnBridge.expression(c)))
+  def toDouble(c: Column): Column = cell(c)(CellDouble)
 
-  def toDate(c: Column): Column = gated(c)(t => Parsers.parseDateYmd(t))
+  /** Date32: three formats, day-first (utils.rs:67-79). */
+  def toDate(c: Column): Column = cell(c)(CellDate)
 
   /** Timestamp: parse at ms precision then truncate to the declared unit
     * (analyse.rs:196-250 scales ms → unit; s-unit truncates toward zero). */
   def toTimestamp(c: Column, unit: ScalarParse.TsUnit = ScalarParse.TsMilli): Column =
-    gated(c) { t =>
-      val ms = Parsers.parseTimestampMs(t)
-      val unitMs = unit match {
-        // Truncate toward zero, matching the reference EXACTLY: analyse.rs
-        // s-unit scaling is Rust `ms / 1_000` on the chrono i64, which
-        // rounds toward zero — so pre-1970 fractional seconds round UP
-        // ("1969-12-31 23:59:59.5" → 1970-01-01T00:00:00). Spark's `%`
-        // has Java remainder semantics (sign of dividend), so
-        // `ms - ms % 1000` reproduces that contract in integer math.
-        // The DSv2 reader's s-unit scaling must agree bit-for-bit.
-        case ScalarParse.TsSecond => ms - (ms % lit(1000L))
-        case _ => ms // ms/µs/ns all carry exactly ms precision (§1.4)
-      }
-      timestamp_millis(unitMs).cast(TimestampNTZType)
-    }
+    cell(c)(CellTimestamp(_, seconds = unit == ScalarParse.TsSecond))
 
   /** Time64(Microsecond) — "Heures" in the reference README
     * (/root/reference/README.md:27). The reference ADVERTISES this arm
@@ -86,7 +67,8 @@ object CastKernel {
     * stores — carried as LongType (Spark has no time-of-day type).
     * Invalid syntax / out-of-range fields → null, like every other
     * kernel here. Pure expression tree, stays in codegen. */
-  def toTime64Micros(c: Column): Column = gated(c) { t =>
+  def toTime64Micros(c: Column): Column = {
+    val t = trim(c)
     val re = "^(\\d{2}):(\\d{2})(?::(\\d{2})(?:\\.(\\d{1,6}))?)?$"
     val h = regexp_extract(t, re, 1).try_cast("bigint")
     val m = regexp_extract(t, re, 2).try_cast("bigint")

@@ -1,5 +1,8 @@
 package graft.ingest
 
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.CellParse
 import graft.ingest.ScalarParse._
 
 /** Per-column statistics monoid for schema inference — the Scala twin of
@@ -29,8 +32,11 @@ final case class ColStats(
     if (isNullText(value)) return this
     val t = value.trim
     var s = copy(nonNull = nonNull + 1, maxLen = math.max(maxLen, t.length))
-    if (parseBool(t).isDefined) s = s.copy(boolOk = s.boolOk + 1)
-    if (isDateText(t)) s = s.copy(dateOk = s.dateOk + 1)
+    // the typed build's bool and date kernels; `t` is already
+    // `String.trim`med, so their ASCII-space trim has nothing left to do
+    val cell = UTF8String.fromString(t)
+    if (CellParse.parseBool(cell) >= 0) s = s.copy(boolOk = s.boolOk + 1)
+    if (CellParse.parseDateYmd(cell) != CellParse.NoDate) s = s.copy(dateOk = s.dateOk + 1)
     // timestamp candidacy gate: len ≥ 8 and contains -/:/T (schema.rs:184)
     if (t.length >= 8 && t.exists(ch => ch == '-' || ch == ':' || ch == 'T')) {
       detectUnitTimestamp(t) match {

@@ -176,7 +176,7 @@ object Funcs {
       .when(m === 6, lit("T")).otherwise(lit("no"))
     Tables.lineitem(s, dir).orderBy("l_orderkey", "l_linenumber").select(
       col("l_orderkey"), col("l_linenumber"), raw.as("raw"),
-      Parsers.parseBool(raw).as("parsed"))
+      CastKernel.toBoolean(raw).as("parsed"))
   }
 
   private val qParseBoolOracle = {
@@ -197,7 +197,7 @@ object Funcs {
       .otherwise(date_format(col("o_orderdate"), "MM/dd/yyyy"))
     Tables.orders(s, dir).orderBy("o_orderkey").select(
       col("o_orderkey"), raw.as("raw"),
-      Parsers.parseDateYmd(raw).as("parsed"))
+      CastKernel.toDate(raw).as("parsed"))
   }
 
   private val qParseDateMultiOracle = {
@@ -224,7 +224,7 @@ object Funcs {
       .otherwise((shifted * 1000).cast("string"))
     Tables.orders(s, dir).orderBy("o_orderkey").select(
       col("o_orderkey"), raw.as("raw"),
-      Parsers.parseTimestamp(raw).as("parsed"))
+      CastKernel.toTimestamp(raw).as("parsed"))
   }
 
   private val qParseTsMultiOracle = {

@@ -20,6 +20,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.CellParse
 import graft.ingest.{IngestPipeline, ScalarParse}
 
 /** `spark.read.format("graft").load(path)` — the conversion pipeline as
@@ -40,9 +41,12 @@ import graft.ingest.{IngestPipeline, ScalarParse}
   * unprojected columns are never parsed, mirroring what the parquet
   * path gets from Catalyst for free.
   *
-  * Conversion semantics delegate to the SAME pure kernels the pipeline
-  * uses (ScalarParse/unit scaling/u64 policy) — GraftSourceSpec pins
-  * row-for-row equality against `IngestPipeline.convert`.
+  * Each cell converts through the SAME static kernels the pipeline's
+  * cast expressions call ([[graft.functions.CellParse]]: null tokens,
+  * the one trim rule, s-unit truncation, u64 policy), called on the
+  * token's `UTF8String` — GraftSourceSpec pins row-for-row equality
+  * against `IngestPipeline.convert`, and IngestPathsSpec pins the
+  * reader, the CLI, the stream and the JSONL route against each other.
   *
   * Options: `sep` (override detection), `fullScan` (full-file
   * inference).
@@ -569,7 +573,7 @@ class GraftPartitionReader(p: GraftFilePartition,
 
   private val filterRefs: Array[String] =
     p.filters.flatMap(_.references).distinct
-  private val evalFields: Array[(Int, String => Any)] =
+  private val evalFields: Array[(Int, UTF8String => Any)] =
     filterRefs.map { n =>
       val f = p.full.fields.find(_.name == n).get
       (p.full.fieldIndex(n), converter(f))
@@ -580,20 +584,20 @@ class GraftPartitionReader(p: GraftFilePartition,
   // converted for the filter) or Right(token position, converter).
   // In aggregate mode `required` holds the agg OUTPUT schema, not file
   // columns — the row path is bypassed entirely.
-  private val fields: Array[Either[Int, (Int, String => Any)]] =
+  private val fields: Array[Either[Int, (Int, UTF8String => Any)]] =
     if (p.agg.isDefined) Array.empty
     else p.required.fields.map { f =>
-      evalPos.get(f.name).map(i => Left(i): Either[Int, (Int, String => Any)])
+      evalPos.get(f.name).map(i => Left(i): Either[Int, (Int, UTF8String => Any)])
         .getOrElse(Right((p.full.fieldIndex(f.name), converter(f))))
     }
 
   // pushed aggregation: converters for group-by and aggregated columns
-  private val aggGroupFields: Array[(Int, String => Any)] =
+  private val aggGroupFields: Array[(Int, UTF8String => Any)] =
     p.agg.map(_.groupBy.map { n =>
       val f = p.full.fields.find(_.name == n).get
       (p.full.fieldIndex(n), converter(f))
     }).getOrElse(Array.empty)
-  private val aggInputFields: Array[(Int, String => Any)] =
+  private val aggInputFields: Array[(Int, UTF8String => Any)] =
     p.agg.map(_.funcs.map { fn =>
       if (fn.col.isEmpty) null
       else {
@@ -602,38 +606,29 @@ class GraftPartitionReader(p: GraftFilePartition,
       }
     }).getOrElse(Array.empty)
 
-  private def converter(f: StructField): String => Any = {
-    val unsigned = IngestPipeline.isUnsigned(f)
-    f.dataType match {
-      case BooleanType => v => ScalarParse.parseBool(v).map(Boolean.box).orNull
-      case LongType => v =>
-        ScalarParse.parseI128(v)
-          .filter(x => x.isValidLong && (!unsigned || x >= 0))
-          .map(x => Long.box(x.toLong)).orNull
-      case d: DecimalType => v =>
-        ScalarParse.parseI128(v)
-          .filter(x => x >= 0 && x <= BigInt("18446744073709551615"))
-          .map(x => Decimal(BigDecimal(x), d.precision, d.scale)).orNull
-      case DoubleType => v =>
-        // cast-kernel parity: non-finite converts to null
-        ScalarParse.parseF64(v).filter(d => !d.isNaN && !d.isInfinite)
-          .map(Double.box).orNull
-      case DateType => v =>
-        ScalarParse.parseDateYmd(v).map(Int.box).orNull
-      case TimestampNTZType =>
-        val unit = IngestPipeline.tsUnitOf(f)
-        v => ScalarParse.parseTimestampMs(v).map { ms =>
-          val unitMs = unit match {
-            // Scala Long `/` truncates toward zero, same as the
-            // reference's Rust `ms / 1_000` (analyse.rs s-unit) and
-            // CastKernel's `ms - ms % 1000`.
-            case ScalarParse.TsSecond => (ms / 1000L) * 1000L
-            case _ => ms
-          }
-          Long.box(unitMs * 1000L) // µs storage
-        }.orNull
-      case _ => v => UTF8String.fromString(v)
+  private def converter(f: StructField): UTF8String => Any = f.dataType match {
+    case BooleanType => v => CellParse.parseBool(v) match {
+      case -1 => null
+      case b => Boolean.box(b == 1)
     }
+    case LongType =>
+      val unsigned = IngestPipeline.isUnsigned(f)
+      val out = new UTF8String.LongWrapper
+      v => if (CellParse.parseLong(v, unsigned, out)) Long.box(out.value) else null
+    case _: DecimalType => v => CellParse.parseU64Decimal(v)
+    case DoubleType => v =>
+      val d = CellParse.parseDouble(v)
+      if (d.isNaN) null else Double.box(d)
+    case DateType => v =>
+      val d = CellParse.parseDateYmd(v)
+      if (d == CellParse.NoDate) null else Int.box(d)
+    case TimestampNTZType =>
+      val seconds = IngestPipeline.tsUnitOf(f) == ScalarParse.TsSecond
+      v => {
+        val us = CellParse.parseTimestampMicros(v, seconds)
+        if (us == CellParse.NoTimestamp) null else Long.box(us)
+      }
+    case _ => v => v
   }
 
   private var current: InternalRow = _
@@ -641,7 +636,7 @@ class GraftPartitionReader(p: GraftFilePartition,
   private var topIter: Iterator[InternalRow] = _
 
   // pushed topN: converters for the sort-key columns
-  private val sortFields: Array[(Int, String => Any)] =
+  private val sortFields: Array[(Int, UTF8String => Any)] =
     p.topN.map { k =>
       val f = p.full.fields.find(_.name == k.col).get
       (p.full.fieldIndex(k.col), converter(f))
@@ -656,9 +651,9 @@ class GraftPartitionReader(p: GraftFilePartition,
     else GraftPartitionReader.splitFields(line, p.delim)
 
   private def convertToken(tokens: Array[String], idx: Int,
-                           conv: String => Any): Any = {
-    val v = if (idx < tokens.length) tokens(idx) else null
-    if (v == null || ScalarParse.isNullText(v)) null else conv(v)
+                           conv: UTF8String => Any): Any = {
+    val v = if (idx < tokens.length) UTF8String.fromString(tokens(idx)) else null
+    if (v == null || CellParse.isNullToken(v)) null else conv(v)
   }
 
   // count(*)-style scans (no projected columns, no filters) need only

@@ -17,7 +17,7 @@ class BpeMergesSpec extends SparkSpec {
     // step 3: "l o" = 7 and "o w" = 7 tie → "l o" lexically first
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
       Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = tempDir("graft_bpe").toString
     Seq((1L, text, "en", "src0", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -32,7 +32,7 @@ class BpeMergesSpec extends SparkSpec {
     // "ababab" has pair "a b" ×3 and "b a" ×2; after merging "a b" the
     // sequence must read ab ab ab (all three merged — a single-space
     // encoding would strand the middle occurrence)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe2").toString
+    val dir = tempDir("graft_bpe2").toString
     Seq((1L, "ababab", "en", "src0", 6L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

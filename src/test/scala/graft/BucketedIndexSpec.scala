@@ -200,7 +200,7 @@ class BucketedIndexSpec extends SparkSpec {
     "create/append/compact/migrate all land under graft.index.root, " +
     "candidates bit-identical, probe exchange-free, compaction snapshot " +
     "cleaned up on the index's own filesystem") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idx_root")
+    val root = tempDir("graft_idx_root")
       .toString
     sys.props("graft.index.root") = root
     try withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {

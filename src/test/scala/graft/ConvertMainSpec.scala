@@ -290,6 +290,23 @@ class ConvertMainSpec extends SparkSpec {
       Seq("long", "string", "double"))
   }
 
+  test("a directory converts in file-name order, whatever the file sizes") {
+    // Spark packs splits largest first, so a 3-row a.tsv next to a
+    // 5,000-row b.tsv lands after it in scan order
+    val dir = tempDir("graft_cli_dir_order")
+    val data = Files.createDirectory(dir.resolve("batch"))
+    def part(name: String, n: Int): Unit =
+      Files.writeString(data.resolve(s"$name.tsv"),
+        (0 until n).map(i => s"$name$i\t$i").mkString("key\tn\n", "\n", "\n"))
+    part("a", 3)
+    part("b", 5000)
+    val (out, rows, _) = ConvertMain.run(spark,
+      ConvertMain.Options(Some(data.toString), fullScan = false), _ => ())
+    assert(rows == 5003L)
+    val keys = spark.read.parquet(out).collect().map(_.getString(0)).toSeq
+    assert(keys == (0 until 3).map(i => s"a$i") ++ (0 until 5000).map(i => s"b$i"))
+  }
+
   test("denominator-less sources get a bytes-derived estimate, marked approximate") {
     // a DIRECTORY of part files takes the no-exact-count path that
     // remote filesystems hit — the estimate must land near the truth

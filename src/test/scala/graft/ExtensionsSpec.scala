@@ -26,7 +26,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("minhash LSH surfaces planted near-duplicates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup").toString
+    val dir = tempDir("graft_dedup").toString
     plantedDocs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val pairs = Dedup.qDedupMinhash(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -35,7 +35,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("simhash banding surfaces planted near-duplicates") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup2").toString
+    val dir = tempDir("graft_dedup2").toString
     plantedDocs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val pairs = Dedup.qDedupSimhash(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -44,7 +44,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("exact dedup keeps the lowest doc_id per text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup3").toString
+    val dir = tempDir("graft_dedup3").toString
     plantedDocs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val kept = Dedup.qDedupExact(spark, dir).collect().map(_.getLong(0)).toSet
     assert(!kept.contains(100L)) // exact copy of doc 3 dropped
@@ -74,7 +74,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("partitioned parquet sink lays out hive-style directories") {
-    val out = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val out = tempDir("graft_part").toString
     graft.ingest.IngestPipeline.writeParquetPartitioned(
       Tables.documents(spark, sf), out, Seq("lang"))
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)

@@ -25,7 +25,7 @@ class GlobalIndexSpec extends SparkSpec {
     // all keys crammed into 2 of the 64 bucket ranges: empty buckets
     // must contribute zero offset and seams must stay gap-free
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_gidx").toString
+    val dir = tempDir("graft_gidx").toString
     try {
       val keys = (0L until 300L) ++ (900000L until 900300L)
       keys.toDF("doc_id").write.mode("overwrite")

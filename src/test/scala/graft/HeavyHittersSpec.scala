@@ -68,7 +68,7 @@ class HeavyHittersSpec extends SparkSpec
     * over a purpose-built corpus (they read `$dir/documents.parquet`). */
   private def stageDocs(texts: Seq[String]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hh_fixture")
+    val dir = tempDir("graft_hh_fixture")
     stagedDirs += dir
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text").repartition(4)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class PartitionPruningSpec extends SparkSpec {
 
   test("a filter on the partition key prunes directories at planning time") {
-    val out = Files.createTempDirectory("graft_part").toString
+    val out = tempDir("graft_part").toString
     Tables.documents(spark, sf).write.partitionBy("source")
       .mode("overwrite").parquet(out)
 
@@ -49,7 +49,7 @@ class PartitionPruningSpec extends SparkSpec {
   test("q_curation_partition_layout's read-back touches only the filtered strata") {
     // mirror the registry entry's layout (it cleans up its own temp dir,
     // so the spec stages an identical one to inspect the pruned read)
-    val out = Files.createTempDirectory("graft_part_layout").toString
+    val out = tempDir("graft_part_layout").toString
     Tables.documents(spark, sf).write.partitionBy("lang")
       .mode("overwrite").parquet(out)
     val pruned = spark.read.parquet(out).filter(col("lang").isin("en", "zh"))
@@ -81,7 +81,7 @@ class PartitionPruningSpec extends SparkSpec {
   test("q_curation_partition_layout's layout write rides a NON-DEFAULT " +
     "scratch root (round-18 verdict task 1: graft.scratch.root, the " +
     "same override discipline as the persisted-index root)") {
-    val root = Files.createTempDirectory("graft_scratch_root").toString
+    val root = tempDir("graft_scratch_root").toString
     System.setProperty("graft.scratch.root", root)
     try {
       val got = graft.queries.Curation.qCurationPartitionLayout(spark, sf)

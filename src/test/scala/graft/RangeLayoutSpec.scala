@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
 class RangeLayoutSpec extends SparkSpec {
 
   test("range-sorted layout: disjoint file ranges + row-group skipping on range filters") {
-    val sorted = Files.createTempDirectory("graft_rng_sorted").toString
-    val shuffled = Files.createTempDirectory("graft_rng_shuffled").toString
+    val sorted = tempDir("graft_rng_sorted").toString
+    val shuffled = tempDir("graft_rng_shuffled").toString
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
 

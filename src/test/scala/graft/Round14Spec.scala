@@ -73,7 +73,7 @@ class Round14Spec extends SparkSpec {
 
   test("q_dedup_embed_incremental: replay ids sit strictly above the " +
     "organic range even on an id-shifted corpus (derived offset)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_embinc").toString
+    val dir = tempDir("graft_embinc").toString
     // ids in the 2e6 range — the shape of the key-shifted 10x sweep
     // corpora that broke a fixed-offset scheme
     spark.range(0, 40).select(

@@ -100,7 +100,7 @@ class Round15Spec extends SparkSpec {
   test("simhash sixteenth-pair band keys: every planted Hamming<=1-per-" +
     "band neighbor collides, and probe volume is 33 keys x 4 bands") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_r15sh").toString
+    val dir = tempDir("graft_r15sh").toString
     // two docs one word apart (tiny Hamming), one unrelated
     Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),

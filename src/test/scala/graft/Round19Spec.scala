@@ -16,8 +16,7 @@ class Round19Spec extends SparkSpec {
     // default: the session warehouse dir (the shared filesystem on any
     // real deployment)
     assert(Scratch.root(spark) == spark.sessionState.conf.warehousePath)
-    val override_ = java.nio.file.Files
-      .createTempDirectory("graft_scratch_spec").toString
+    val override_ = tempDir("graft_scratch_spec").toString
     System.setProperty("graft.scratch.root", override_)
     try {
       assert(Scratch.root(spark) == override_)

@@ -41,8 +41,7 @@ class Round20Spec extends SparkSpec {
     "horizon is reaped on first use of a scratch root; non-invocation " +
     "names and the current JVM's dirs survive") {
     import graft.queries.Scratch
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sweep_root").toString
+    val root = tempDir("graft_sweep_root").toString
     val run = new java.io.File(s"$root/graft_scratch/run")
     assert(run.mkdirs())
     val stale = new java.io.File(run, "dead_aaaaaaaaaaaa_3")
@@ -68,8 +67,7 @@ class Round20Spec extends SparkSpec {
     "swept under the default 24h horizon (concurrent sibling JVMs are " +
     "safe)") {
     import graft.queries.Scratch
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sweep_root2").toString
+    val root = tempDir("graft_sweep_root2").toString
     val run = new java.io.File(s"$root/graft_scratch/run")
     assert(run.mkdirs())
     val fresh = new java.io.File(run, "live_bbbbbbbbbbbb_7")
@@ -87,8 +85,7 @@ class Round20Spec extends SparkSpec {
     "under graft_band_index is reaped on the first writeBandIndex " +
     "against that root; explicitly-named production indexes survive") {
     import graft.queries.Dedup
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_idx_sweep").toString
+    val root = tempDir("graft_idx_sweep").toString
     val parent = new java.io.File(s"$root/graft_band_index")
     assert(parent.mkdirs())
     val stale = new java.io.File(parent, "graft_idx_append_cccccccccccc_2")

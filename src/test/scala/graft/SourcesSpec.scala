@@ -9,7 +9,7 @@ class SourcesSpec extends SparkSpec {
   private def docs = Tables.documents(spark, sf)
 
   test("json round-trip preserves rows and values") {
-    val out = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val out = tempDir("graft_json").toString
     docs.write.mode("overwrite").json(out)
     val back = spark.read.json(out)
     assert(back.count() == docs.count())
@@ -19,7 +19,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("orc round-trip preserves schema and values") {
-    val out = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val out = tempDir("graft_orc").toString
     docs.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
     assert(back.schema == docs.schema)
@@ -28,7 +28,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("csv sink + graft ingest re-reads with correct types") {
-    val out = java.nio.file.Files.createTempDirectory("graft_csvrt").toString
+    val out = tempDir("graft_csvrt").toString
     docs.select(col("doc_id").cast("string"), col("lang"),
         col("n_chars").cast("string"))
       .write.mode("overwrite").option("header", "true").option("sep", "|").csv(out)

@@ -25,7 +25,9 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
   /** A fresh directory under the system temp dir, named `prefix…`. It
-    * and everything written under it are deleted after the suite. */
+    * and everything written under it are deleted after the suite (a
+    * test may delete it first). Every temp file a spec makes lives in
+    * one of these. */
   def tempDir(prefix: String): Path = {
     val d = Files.createTempDirectory(prefix)
     tempDirs.add(d)
@@ -34,10 +36,12 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit =
     try tempDirs.forEach { d =>
-      val walk = Files.walk(d)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p): Unit)
-      finally walk.close()
+      if (Files.exists(d)) {
+        val walk = Files.walk(d)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p): Unit)
+        finally walk.close()
+      }
     }
     finally super.afterAll()
 

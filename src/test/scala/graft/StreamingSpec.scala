@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
     * mid-write (round-12 FAILED_READ_FILE). Watch the feed with the
     * dir-slash-star glob. */
   private def stage(df: org.apache.spark.sql.Dataset[_], dir: String, sub: String): Unit = {
-    val tmpRoot = java.nio.file.Files.createTempDirectory("graft_spec_stage")
+    val tmpRoot = tempDir("graft_spec_stage")
     try {
       val tmp = tmpRoot.resolve(sub)
       df.toDF().write.mode("overwrite").parquet(tmp.toString)
@@ -33,7 +33,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming sessionization matches batch on closed sessions") {
     // stage events as a typed parquet the stream can read with a schema
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     val evs = Tables.events(spark, sf)
       .select(col("user_id"), expr("ts div 1000").as("ts_us"))
     evs.write.mode("overwrite").parquet(dir)
@@ -77,7 +77,7 @@ class StreamingSpec extends SparkSpec {
     // flushed keys leave the state store, so end-of-run state rows =
     // users minus flushed users — strictly below the all-time key count
     // the NoTimeout form would hold.
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_b").toString
+    val dir = tempDir("graft_stream_b").toString
     val evs = Tables.events(spark, sf)
       .select(col("user_id"), expr("ts div 1000").as("ts_us"), col("ts_ts"))
     val mid = {
@@ -125,7 +125,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming funnel (keyed state) matches the batch step counts across batches") {
     import graft.streaming.Funnel
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = tempDir("graft_funnel").toString
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), col("ts"), col("event_type"))
       .as[Funnel.FEv].collect().sortBy(_.ts)
@@ -155,7 +155,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming transitions (keyed last-event state) match the batch matrix across batches") {
     import graft.streaming.Transitions
-    val dir = java.nio.file.Files.createTempDirectory("graft_trans").toString
+    val dir = tempDir("graft_trans").toString
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), expr("ts div 1000").as("ts"),
         col("event_id"), col("event_type"))
@@ -187,7 +187,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("watermarked tumbling-window stream agrees with the batch twin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream2").toString
+    val dir = tempDir("graft_stream2").toString
     val evs = Tables.events(spark, sf).select(col("ts_ts").as("ts"),
       col("event_type"), col("value"))
     evs.write.mode("overwrite").parquet(dir)
@@ -220,7 +220,7 @@ class StreamingSpec extends SparkSpec {
     // can't rank, but min_by/max_by over the (ts, event_id) struct is
     // the same total order expressed as a mergeable aggregate — so ONE
     // semantic definition has both a batch and a streaming plan.
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ohlc").toString
+    val dir = tempDir("graft_stream_ohlc").toString
     val evs = Tables.events(spark, sf)
       .select(col("ts_ts").as("tsc"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
@@ -262,7 +262,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join matches the batch twin across batches") {
     import graft.streaming.Correlate
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj").toString
+    val dir = tempDir("graft_ssj").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("ts_ts"), col("event_type"))
       .filter(col("event_type").isin("click", "purchase"))
@@ -298,9 +298,9 @@ class StreamingSpec extends SparkSpec {
 
   test("watermarked interval join: late rows drop deterministically, parquet read-back parity") {
     import graft.streaming.Correlate
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ssj_late_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ssj_late_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssj_late_ck").toString
+    val srcDir = tempDir("graft_ssj_late_src").toString
+    val outDir = tempDir("graft_ssj_late_out").toString
+    val ckpt = tempDir("graft_ssj_late_ck").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("ts_ts"), col("event_type"))
       .filter(col("event_type").isin("click", "purchase"))
@@ -359,7 +359,7 @@ class StreamingSpec extends SparkSpec {
 
   test("left-outer stream-stream join: unmatched clicks emit once the watermark proves them") {
     import graft.streaming.Correlate
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj_outer").toString
+    val dir = tempDir("graft_ssj_outer").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("ts_ts"), col("event_type"))
       .filter(col("event_type").isin("click", "purchase"))
@@ -429,7 +429,7 @@ class StreamingSpec extends SparkSpec {
     val df = events.toDF("event_id", "user_id", "t_us", "event_type")
       .select(col("event_id"), col("user_id"),
         timestamp_micros(col("t_us")).as("ts_ts"), col("event_type"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ssj_once").toString
+    val dir = tempDir("graft_ssj_once").toString
     stage(df.filter(col("event_id") <= 6), dir, "b1")
 
     def split(d: org.apache.spark.sql.DataFrame) =
@@ -467,7 +467,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dropDuplicatesWithinWatermark dedups with bounded state") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wmdedup").toString
+    val dir = tempDir("graft_wmdedup").toString
     val ev = Tables.events(spark, sf).select(col("event_id"), col("ts_ts"))
     ev.union(ev).write.mode("overwrite").parquet(dir) // every event doubled
     val q = spark.readStream.schema(ev.schema).parquet(dir)
@@ -485,7 +485,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dedup and stream-static dim join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream3").toString
+    val dir = tempDir("graft_stream3").toString
     // duplicate every event once → dropDuplicates must halve it
     val evs = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("value"))
@@ -515,7 +515,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ingest: late-arriving TSV files flow through the cast kernels") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ingest")
+    val dir = tempDir("graft_stream_ingest")
     java.nio.file.Files.writeString(dir.resolve("part1.tsv"),
       "n\td\n1\t2024-01-01\n2\t2024-01-02\n")
     val typed = graft.ingest.IngestPipeline.convertStream(spark, dir.toString)
@@ -538,7 +538,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming ingest e2e: parquet sink + checkpoint resume, exactly-once vs batch") {
-    val root = java.nio.file.Files.createTempDirectory("graft_stream_e2e")
+    val root = tempDir("graft_stream_e2e")
     val inDir = java.nio.file.Files.createDirectory(root.resolve("in"))
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -652,8 +652,8 @@ class StreamingSpec extends SparkSpec {
     // bridge that gives a stream access to ANY batch sink — each
     // micro-batch appends its partition files, and the reader sees
     // only committed files (dot-prefixed temps are hidden)
-    val src = java.nio.file.Files.createTempDirectory("graft_sink_src").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_out").toString
+    val src = tempDir("graft_sink_src").toString
+    val out = tempDir("graft_sink_out").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val (b1, b2) = {
@@ -688,7 +688,7 @@ class StreamingSpec extends SparkSpec {
     // pinned here: (a) replays whose original is WITHIN the watermark
     // window dedup exactly like batch DISTINCT; (b) replays older than
     // the watermark are accounted explicitly rather than assumed away.
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_sdd_src").toString
+    val srcDir = tempDir("graft_sdd_src").toString
     val ev = Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("ts_ts"), col("event_type"))
     val rows = ev.orderBy("ts_ts").collect()
@@ -747,7 +747,7 @@ class StreamingSpec extends SparkSpec {
     // reproduce the batch count table bit-for-bit once all files are
     // processed — partial aggregation and state merge cannot lose or
     // double-count grams across micro-batches.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ngram_stream").toString
+    val dir = tempDir("graft_ngram_stream").toString
     val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
     val rows = docs.collect()
     val (b1, b2) = rows.splitAt(rows.length / 2)
@@ -792,7 +792,7 @@ class StreamingSpec extends SparkSpec {
       s"typed fold diverges from window form: missing=${(windowed -- typed).take(3)} extra=${(typed -- windowed).take(3)}")
     // surface 3: the stream over a ts-ordered 2-batch feed emits exactly
     // the batch form's CLOSED versions (open tails stay in state)
-    val dir = java.nio.file.Files.createTempDirectory("graft_scd2_stream").toString
+    val dir = tempDir("graft_scd2_stream").toString
     val rows = evs.orderBy("ts_us", "event_id").collect()
     val (b1, b2) = rows.splitAt(rows.length * 2 / 3)
     import spark.implicits._
@@ -854,7 +854,7 @@ class StreamingSpec extends SparkSpec {
       rows.toDF("user_id", "ts_us", "event_id", "event_type", "value")
         .withColumn("ts_ts", timestamp_micros(col("ts_us")))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_tws").toString
+    val dir = tempDir("graft_tws").toString
     stage(frame(b1), dir, "b1")
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prior = scala.util.Try(spark.conf.get(providerKey)).toOption
@@ -922,8 +922,7 @@ class StreamingSpec extends SparkSpec {
         val (b1, b2) = rows.splitAt(splitAfter)
         def frame(rs: Seq[(Long, Long, Long, String)]) =
           rs.toDF("user_id", "ts_us", "event_id", "event_type")
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft_attr$splitAfter").toString
+        val dir = tempDir(s"graft_attr$splitAfter").toString
         stage(frame(b1), dir, "b1")
         val enc = org.apache.spark.sql.Encoders.product[Attribution.Touch]
         val q = Attribution.creditStream(

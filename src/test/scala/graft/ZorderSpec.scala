@@ -46,8 +46,8 @@ class ZorderSpec extends SparkSpec {
     // the parquet footer min/max stats prune a supplier filter to a
     // fraction of the materialized rows; the partkey-sorted control
     // layout materializes ~everything for the same filter.
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zw").toString
-    val pkDir = java.nio.file.Files.createTempDirectory("graft_zw_pk").toString
+    val zDir = tempDir("graft_zw").toString
+    val pkDir = tempDir("graft_zw_pk").toString
     val li = spark.read.parquet(s"$sf01/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
     val mx = li.agg(max(col("l_partkey")).as("pmax"), max(col("l_suppkey")).as("smax"))

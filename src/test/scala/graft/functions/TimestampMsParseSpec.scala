@@ -1,12 +1,12 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.ingest.Parsers
 import org.apache.spark.sql.functions._
 
-/** The fused native expression must agree with the pure-built-in chain
-  * (and with ScalarParse, which the reference-parity tests pin) on every
-  * edge case, under both codegen and interpreted evaluation. */
+/** The SQL-function expressions `graft_parse_ts_ms` and
+  * `graft_parse_date_ymd` must agree with the pure-built-in chain (and
+  * with CellParse's kernels, which the reference-parity tests pin) on
+  * every edge case, under both codegen and interpreted evaluation. */
 class TimestampMsParseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,7 +23,7 @@ class TimestampMsParseSpec extends SparkSpec {
   test("fused expression agrees with the built-in chain on all edges") {
     val df = cases.toDF("v").select(
       col("v"),
-      Parsers.parseTimestampMs(col("v")).as("fused"),
+      CellOptions.parseTimestampMs(col("v")).as("fused"),
       graft.ingest.RetiredCastChains.parseTimestampMsChain(trim(col("v"))).as("chain"))
     val rows = df.collect()
     rows.foreach { r =>
@@ -36,10 +36,10 @@ class TimestampMsParseSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
       val got = cases.toDF("v")
-        .select(Parsers.parseTimestampMs(col("v")).as("fused")).collect()
+        .select(CellOptions.parseTimestampMs(col("v")).as("fused")).collect()
         .map(r => if (r.isNullAt(0)) null else r.getLong(0))
       val want = cases.map(v =>
-        graft.ingest.ScalarParse.parseTimestampMs(v).map(Long.box).orNull)
+        CellOptions.parseTimestampMs(v).map(Long.box).orNull)
       assert(got.toSeq == want)
     } finally {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
@@ -59,10 +59,10 @@ class TimestampMsParseSpec extends SparkSpec {
     val dateCases = Seq("1970-01-01", "02/01/1970", "13/01/1970", "01/13/1970",
       "2024-02-30", "2024-02-29", "invalid", "", " 2024-01-01 ", "31/12/1999")
     def run(): Seq[Any] = dateCases.toDF("v")
-      .select(Parsers.parseDateYmd(col("v")).as("d")).collect()
+      .select(CellOptions.parseDateYmd(col("v")).as("d")).collect()
       .map(r => if (r.isNullAt(0)) null else r.getDate(0).toLocalDate.toEpochDay.toInt).toSeq
     val want = dateCases.map(v =>
-      graft.ingest.ScalarParse.parseDateYmd(v).map(Int.box).orNull)
+      CellOptions.parseDateYmd(v).map(Int.box).orNull)
     assert(run().map(x => if (x == null) null else Int.box(x.asInstanceOf[Int])) == want)
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
@@ -75,7 +75,7 @@ class TimestampMsParseSpec extends SparkSpec {
 
   test("null propagates") {
     val got = Seq[Option[String]](None, Some("1000000000")).toDF("v")
-      .select(Parsers.parseTimestampMs(col("v"))).collect()
+      .select(CellOptions.parseTimestampMs(col("v"))).collect()
     assert(got(0).isNullAt(0) && got(1).getLong(0) == 1000000000000L)
   }
 }

@@ -48,7 +48,7 @@ class FixtureSpec extends SparkSpec {
       "Timestamp(Nanosecond, None)", "Decimal32", "Decimal128(38, 10)")
       .mkString("\t")
     val body = (0 until 2000).map(tsvLine).mkString("\n")
-    val p = Files.createTempFile("graft_fixture", ".tsv")
+    val p = Files.createTempFile(tempDir("graft_fixture"), "graft_fixture", ".tsv")
     Files.writeString(p, header + "\n" + body + "\n")
 
     assert(IngestPipeline.detectDelimiter(spark, p.toString) == '\t')

@@ -11,7 +11,7 @@ import java.nio.file.Files
 class JsonlIngestSpec extends SparkSpec {
 
   private def tempJsonl(lines: String*): String = {
-    val f = Files.createTempFile("graft_jsonl", ".jsonl")
+    val f = Files.createTempFile(tempDir("graft_jsonl"), "graft_jsonl", ".jsonl")
     Files.writeString(f, lines.mkString("", "\n", "\n"))
     f.toString
   }
@@ -73,7 +73,7 @@ class JsonlIngestSpec extends SparkSpec {
   }
 
   test("CLI format routing: a .jsonl input converts e2e through ConvertMain") {
-    val dir = Files.createTempDirectory("graft_cli_jsonl")
+    val dir = tempDir("graft_cli_jsonl")
     val f = dir.resolve("events.jsonl")
     // bad values land AFTER the 1,000-line inference sample, so `score`
     // infers DOUBLE from the clean sample and the tail genuinely fails
@@ -98,9 +98,9 @@ class JsonlIngestSpec extends SparkSpec {
 
   test("looksLikeJsonl: JSON object line yes; TSV/CSV and bare JSON scalars no") {
     val j = tempJsonl("""{"a":1}""")
-    val t = Files.createTempFile("graft_sniff", ".tsv")
+    val t = Files.createTempFile(tempDir("graft_sniff"), "graft_sniff", ".tsv")
     Files.writeString(t, "a\tb\n1\t2\n")
-    val s = Files.createTempFile("graft_sniff2", ".jsonl")
+    val s = Files.createTempFile(tempDir("graft_sniff2"), "graft_sniff2", ".jsonl")
     Files.writeString(s, "42\n43\n")
     assert(JsonlIngest.looksLikeJsonl(spark, j))
     assert(!JsonlIngest.looksLikeJsonl(spark, t.toString))
@@ -108,7 +108,7 @@ class JsonlIngestSpec extends SparkSpec {
   }
 
   test("streaming JSONL: schema pins once, later files flow through the same casts") {
-    val dir = Files.createTempDirectory("graft_jsonl_stream")
+    val dir = tempDir("graft_jsonl_stream")
     // k starts at 10: a lone "1" would be claimed by the ladder's
     // bool-beats-int preference (TypeDecisionSpec), which is not what
     // this test is about
@@ -147,7 +147,7 @@ class JsonlIngestSpec extends SparkSpec {
   }
 
   test("CLI full-scan flag routes through the JSONL reader too") {
-    val dir = Files.createTempDirectory("graft_cli_jsonl_full")
+    val dir = tempDir("graft_cli_jsonl_full")
     val f = dir.resolve("d.jsonl")
     val head = (1 to 1000).map(i => s"""{"v":$i}""")
     val tail = (1 to 200).map(_ => """{"v":"text"}""")

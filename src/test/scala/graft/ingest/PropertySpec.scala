@@ -12,6 +12,7 @@ import org.scalacheck.rng.Seed
   */
 class PropertySpec extends AnyFunSuite {
   import ScalarParse._
+  import graft.functions.CellOptions.{parseBool, parseDateYmd, parseTimestampMs}
 
   private val anyString: Gen[String] = Gen.oneOf(
     Gen.asciiPrintableStr,

@@ -52,7 +52,7 @@ class ReferenceFixtureSpec extends SparkSpec {
     "Timestamp(Nanosecond, None)", "Decimal32", "Decimal128(38, 10)")
 
   private lazy val fixture: String = {
-    val dir = Files.createTempDirectory("graft_ref_fixture")
+    val dir = tempDir("graft_ref_fixture")
     val f = dir.resolve("fake.tsv")
     val content = (headers.mkString("\t") +:
       (0 until rows).map(genRow(_).mkString("\t"))).mkString("", "\n", "\n")

@@ -1,16 +1,25 @@
 package graft.ingest
 
+import java.time.LocalDate
+import java.time.format.{DateTimeFormatter, ResolverStyle}
+
+import scala.util.Try
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** The Column-expression chains the fused cell kernels replaced, kept
-  * verbatim as parity witnesses. Not used at runtime.
-  *  - for graft.functions.CellParse (CellParseSpec): a regex syntax
-  *    gate, a significant-digit gate and `try_cast`, behind the
-  *    trim/lower null-token test;
-  *  - for graft.functions.TimestampMsParse (TimestampMsParseSpec): the
-  *    parse_timestamp_ms text and epoch-range chains.
+/** The implementations the fused cell kernels of graft.functions.CellParse
+  * replaced, kept verbatim as parity witnesses (CellParseSpec,
+  * TimestampMsParseSpec). Not used at runtime.
+  *  - the i64/u64/u64-decimal/f64 Column chains: a regex syntax gate, a
+  *    significant-digit gate and `try_cast`, behind the trim/lower
+  *    null-token test;
+  *  - the bool token chain (`lower(trim(c))` against the two tables);
+  *  - the String date and timestamp parsers as they were before their
+  *    bodies moved into CellParse, `String.trim` included, and the
+  *    typed-build arms built on them;
+  *  - the built-in parse_timestamp_ms text and epoch-range chains.
   */
 object RetiredCastChains {
 
@@ -30,6 +39,108 @@ object RetiredCastChains {
     val sig = length(regexp_replace(t, "^[+]?0*", ""))
     val x = when(t.rlike("^[+]?\\d{1,38}$") && sig <= 19, t.try_cast("bigint"))
     when(x >= 0L, x).otherwise(lit(null).cast(LongType))
+  }
+
+  def toUnsignedDecimal(c: Column): Column = gated(c) { t =>
+    val sig = length(regexp_replace(t, "^[+]?0*", ""))
+    val x = when(t.rlike("^[+]?\\d+$") && sig <= 20, t.try_cast("decimal(20,0)"))
+    when(x >= 0 && x <= lit("18446744073709551615").cast(DecimalType(20, 0)), x)
+      .otherwise(lit(null).cast(DecimalType(20, 0)))
+  }
+
+  private val trueTokens = Seq("true", "1", "t", "y", "yes", "on")
+  private val falseTokens = Seq("false", "0", "f", "n", "no", "off")
+
+  /** Bool token table (utils.rs:59-65). Spark's cast(BooleanType) lacks
+    * on/off, so an explicit when-chain is required. */
+  def parseBool(c: Column): Column = {
+    val t = lower(trim(c))
+    when(t.isin(trueTokens: _*), lit(true))
+      .when(t.isin(falseTokens: _*), lit(false))
+      .otherwise(lit(null).cast(BooleanType))
+  }
+
+  private val dateFormats: Seq[DateTimeFormatter] = Seq(
+    "uuuu-M-d", "d/M/uuuu", "M/d/uuuu"
+  ).map(p => DateTimeFormatter.ofPattern(p).withResolverStyle(ResolverStyle.STRICT))
+
+  /** 3-format date parse, day-first beats month-first (utils.rs:67-79).
+    * Returns days since 1970-01-01. */
+  def parseDateYmd(v: String): Option[Int] = {
+    val t = v.trim
+    if (!(t.count(_ == '-') >= 2 || t.count(_ == '/') >= 2)) None
+    else dateFormats.view
+      .flatMap(f => Try(LocalDate.parse(t, f)).toOption)
+      .headOption
+      .flatMap(d => Try(Math.toIntExact(d.toEpochDay)).toOption)
+  }
+
+  private val IsoDateTime =
+    """^(\d{4})-(\d{1,2})-(\d{1,2})[ T](\d{1,2}):(\d{1,2}):(\d{1,2})(?:\.(\d{1,9}))?$""".r
+  private val DmyDateTime =
+    """^(\d{1,2})/(\d{1,2})/(\d{4}) (\d{1,2}):(\d{1,2}):(\d{1,2})$""".r
+  private val YmdSlashDateTime =
+    """^(\d{4})/(\d{1,2})/(\d{1,2}) (\d{1,2}):(\d{1,2}):(\d{1,2})$""".r
+
+  private def toEpochMs(y: Int, mo: Int, d: Int, h: Int, mi: Int, s: Int,
+                        frac: String): Option[Long] =
+    Try {
+      val date = LocalDate.of(y, mo, d)
+      require(h < 24 && mi < 60 && s < 60)
+      val ms =
+        if (frac == null || frac.isEmpty) 0L
+        else frac.padTo(3, '0').take(3).toLong
+      date.toEpochDay * 86400000L + h * 3600000L + mi * 60000L + s * 1000L + ms
+    }.toOption
+
+  /** Everything parsed at ms precision (utils.rs:81-118): 6 datetime
+    * formats, then epoch-range heuristics. */
+  def parseTimestampMs(v: String): Option[Long] = {
+    val t = v.trim
+    if (t.isEmpty) return None
+    val viaText = t match {
+      case IsoDateTime(y, mo, d, h, mi, s, f) =>
+        toEpochMs(y.toInt, mo.toInt, d.toInt, h.toInt, mi.toInt, s.toInt, f)
+      case DmyDateTime(d, mo, y, h, mi, s) =>
+        toEpochMs(y.toInt, mo.toInt, d.toInt, h.toInt, mi.toInt, s.toInt, "")
+      case YmdSlashDateTime(y, mo, d, h, mi, s) =>
+        toEpochMs(y.toInt, mo.toInt, d.toInt, h.toInt, mi.toInt, s.toInt, "")
+      case _ => None
+    }
+    val body = if (t.startsWith("+") || t.startsWith("-")) 1 else 0
+    val bigIntegerText = t.length > body &&
+      (body until t.length).forall(i => Character.digit(t.charAt(i), 10) >= 0)
+    viaText.orElse {
+      Option.when(bigIntegerText)(BigInt(t)).flatMap { x =>
+        if (x >= 1000000000L && x < 4000000000L) Some(x.toLong * 1000)
+        else if (x >= 1000000000000L && x < 4000000000000L) Some(x.toLong)
+        else if (x >= 1000000000000000L && x < 4000000000000000L) Some((x / 1000).toLong)
+        else if (x >= BigInt("1000000000000000000")) Some((x / 1000000).toLong)
+        else None
+      }
+    }
+  }
+
+  private val dateYmdUdf = udf((v: String) => Option(v).flatMap(parseDateYmd))
+  private val timestampMsUdf = udf((v: String) => Option(v).flatMap(parseTimestampMs))
+
+  /** `graft_parse_date_ymd`: the String parser on the raw cell. */
+  def dateYmd(c: Column): Column = date_from_unix_date(dateYmdUdf(c))
+
+  /** `graft_parse_ts_ms`: the String parser on the raw cell. */
+  def timestampMs(c: Column): Column = timestampMsUdf(c)
+
+  /** The typed build's date arm: the String parser behind the gate. */
+  def toDate(c: Column): Column = gated(c)(t => dateYmd(trim(t)))
+
+  /** The typed build's timestamp arm: ms, truncated toward zero for the
+    * s unit, then TIMESTAMP_NTZ. An ms value whose µs overflow a long
+    * made `timestamp_millis` throw; it is null here, as in the kernel. */
+  def toTimestamp(c: Column, seconds: Boolean): Column = gated(c) { t =>
+    val ms = timestampMs(trim(t))
+    val unitMs = if (seconds) ms - (ms % lit(1000L)) else ms
+    when(unitMs.between(Long.MinValue / 1000, Long.MaxValue / 1000),
+      timestamp_millis(unitMs).cast(TimestampNTZType))
   }
 
   def toDouble(c: Column): Column = gated(c) { t =>
@@ -79,8 +190,8 @@ object RetiredCastChains {
   }
 
   /** Full parse_timestamp_ms: text formats first, then epoch ranges —
-    * the built-in composition `Parsers.parseTimestampMs` (the fused
-    * graft.functions.TimestampMsParse) replaced; TimestampMsParseSpec. */
+    * the built-in composition the fused timestamp kernel replaced;
+    * TimestampMsParseSpec. */
   def parseTimestampMsChain(c: Column): Column =
     coalesce(parseTimestampMsText(c), parseTimestampMsEpoch(c))
 }

@@ -1,10 +1,14 @@
 package graft.ingest
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.CellOptions.{parseBool, parseDateYmd, parseTimestampMs}
+import graft.functions.CellParse.{dateShaped, isBigIntegerText}
 import graft.ingest.ScalarParse._
 
 /** Reference parser parity, ported 1:1 from
-  * /root/reference/tests/utils_tests.rs plus SURVEY §1.3/§1.4 subtleties.
+  * /root/reference/tests/utils_tests.rs plus SURVEY §1.3/§1.4 subtleties:
+  * the inference votes (ScalarParse) and the typed build's bool, date
+  * and timestamp kernels (CellParse).
   */
 class ScalarParseSpec extends AnyFunSuite {
 

@@ -135,7 +135,7 @@ class DedupGatePreconditionSpec extends graft.SparkSpec {
     // [200000,200600): with the former +100000/+200000 constants these
     // organic docs would conflate with wave replays; the derived
     // max(doc_id)+1 offset must clear them on any corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft_txtoff").toString
+    val dir = tempDir("graft_txtoff").toString
     val base = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"))

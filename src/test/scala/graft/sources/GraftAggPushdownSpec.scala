@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
 class GraftAggPushdownSpec extends SparkSpec {
 
   private lazy val fixture: String = {
-    val dir = Files.createTempDirectory("graft_aggpush")
+    val dir = tempDir("graft_aggpush")
     // two part files → two partitions → the final agg genuinely merges
     (0 until 2).foreach { part =>
       val f = dir.resolve(s"part$part.tsv")
@@ -90,7 +90,7 @@ class GraftAggPushdownSpec extends SparkSpec {
   }
 
   test("gzip input: same rows, same inference, same pushdowns as the plain file") {
-    val dir = Files.createTempDirectory("graft_gz")
+    val dir = tempDir("graft_gz")
     val rows = ("id\tgrp\tscore" +:
       (0 until 500).map(i => s"$i\tg${i % 3}\t${i * 0.5}")).mkString("", "\n", "\n")
     Files.write(dir.resolve("plain.tsv"), rows.getBytes("UTF-8"))

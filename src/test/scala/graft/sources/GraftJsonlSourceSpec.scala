@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
 class GraftJsonlSourceSpec extends SparkSpec {
 
   private lazy val fixture: String = {
-    val dir = Files.createTempDirectory("graft_jsonl_src")
+    val dir = tempDir("graft_jsonl_src")
     val f = dir.resolve("data.jsonl")
     val lines = (0 until 3000).map { i =>
       val tag = s"t${i % 7}"
@@ -96,7 +96,7 @@ class GraftJsonlSourceSpec extends SparkSpec {
 
   test("JSONL writer round-trips through the reader, newlines included") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_jsonl_writer").resolve("out").toString
+    val dir = tempDir("graft_jsonl_writer").resolve("out").toString
     val df = Seq(
       (1L, Some("line1\nline2"), Some(2.5), Some(true)),
       (2L, Some("""quote " and \ slash"""), None, Some(false)),
@@ -123,7 +123,7 @@ class GraftJsonlSourceSpec extends SparkSpec {
   test("raw nested capture survives surrogate pairs before the value") {
     // token char-offsets count UTF-16 units; an emoji (surrogate pair)
     // before the nested value must not shift the captured substring
-    val dir = Files.createTempDirectory("graft_jsonl_emoji")
+    val dir = tempDir("graft_jsonl_emoji")
     val f = dir.resolve("d.jsonl")
     Files.writeString(f,
       "{\"a\":\"x😀y\",\"b\":{\"k\":1},\"c\":[2,3]}\n")
@@ -135,7 +135,7 @@ class GraftJsonlSourceSpec extends SparkSpec {
   }
 
   test("duplicate keys: LAST occurrence wins in both JSONL paths") {
-    val dir = Files.createTempDirectory("graft_jsonl_dup")
+    val dir = tempDir("graft_jsonl_dup")
     val f = dir.resolve("d.jsonl")
     Files.writeString(f, """{"a":"first","a":"second","b":"x"}""" + "\n")
     val viaSource = spark.read.format("graft").load(f.toString).collect()(0)
@@ -145,7 +145,7 @@ class GraftJsonlSourceSpec extends SparkSpec {
   }
 
   test("gzipped JSONL reads through the same path, one partition per member") {
-    val dir = Files.createTempDirectory("graft_jsonl_gz")
+    val dir = tempDir("graft_jsonl_gz")
     val f = dir.resolve("data.jsonl.gz")
     val out = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(f))
@@ -160,7 +160,7 @@ class GraftJsonlSourceSpec extends SparkSpec {
   }
 
   test("micro-batch stream: later JSONL files convert incrementally") {
-    val dir = Files.createTempDirectory("graft_jsonl_stream_src")
+    val dir = tempDir("graft_jsonl_stream_src")
     Files.writeString(dir.resolve("a.jsonl"), """{"n":10,"s":"x"}""" + "\n")
     val stream = spark.readStream.format("graft").load(dir.toString)
     assert(stream.isStreaming)

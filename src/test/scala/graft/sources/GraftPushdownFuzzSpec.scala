@@ -20,7 +20,7 @@ class GraftPushdownFuzzSpec extends SparkSpec {
 
   private lazy val fixture: String = {
     val rnd = new Random(20260812L)
-    val dir = Files.createTempDirectory("graft_pushdown_fuzz")
+    val dir = tempDir("graft_pushdown_fuzz")
     // two part files — exercises the multi-partition directory path.
     // Rows 0-999 are clean so the 1,000-row inference sample decides the
     // intended types (id/v LONG, score DOUBLE, flag BOOLEAN); null
@@ -89,7 +89,7 @@ class GraftPushdownFuzzSpec extends SparkSpec {
 
   private lazy val jsonlFixture: String = {
     val rnd = new Random(20260814L)
-    val dir = Files.createTempDirectory("graft_pushdown_fuzz_jsonl")
+    val dir = tempDir("graft_pushdown_fuzz_jsonl")
     // same shape as the delimited fixture: a clean 1,000-line inference
     // head, then a dirty tail with JSON nulls, MISSING keys (the JSONL
     // analogue of short rows), numeric parse failures, and the odd
@@ -138,7 +138,7 @@ class GraftPushdownFuzzSpec extends SparkSpec {
     // U+E000 in Java String order but ABOVE it in UTF8String binary
     // (code-point) order, which is what Spark uses post-scan. A pushed
     // range filter must agree with the unpushed plan on such data.
-    val dir = Files.createTempDirectory("graft_pushdown_utf8")
+    val dir = tempDir("graft_pushdown_utf8")
     val supp = new String(Character.toChars(0x10000)) // 𐀀
     val bmp = "" // private-use BMP char
     Files.writeString(dir.resolve("d.tsv"),

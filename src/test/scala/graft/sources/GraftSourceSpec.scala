@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
 class GraftSourceSpec extends SparkSpec {
 
   private lazy val fixture: String = {
-    val dir = Files.createTempDirectory("graft_dsv2")
+    val dir = tempDir("graft_dsv2")
     val f = dir.resolve("data.tsv")
     val content = ("id\tname\tscore\tflag\tts\tn" +:
       (0 until 1200).map { i =>
@@ -175,7 +175,7 @@ class GraftSourceSpec extends SparkSpec {
   }
 
   test("CRLF line endings and quoted fields parse like Spark's CSV source") {
-    val dir = Files.createTempDirectory("graft_dsv2_crlf")
+    val dir = tempDir("graft_dsv2_crlf")
     val f = dir.resolve("crlf.csv")
     // CRLF file with a quoted field containing the delimiter + "" escape
     val content = "id,txt,n\r\n1,\"a,b\",10\r\n2,\"say \"\"hi\"\"\",20\r\n3,plain,30\r\n"
@@ -192,7 +192,7 @@ class GraftSourceSpec extends SparkSpec {
   }
 
   test("malformed rows: short rows null-pad, long rows drop extras (PERMISSIVE parity)") {
-    val dir = Files.createTempDirectory("graft_dsv2_bad")
+    val dir = tempDir("graft_dsv2_bad")
     val f = dir.resolve("bad.tsv")
     Files.write(f, "a\tb\tc\n1\tx\t10\n2\ty\n3\tz\t30\textra\n".getBytes("UTF-8"))
     val viaSource = spark.read.format("graft").load(f.toString)
@@ -206,7 +206,7 @@ class GraftSourceSpec extends SparkSpec {
   }
 
   test("pre-1970 fractional seconds: DSv2 and pipeline TRUNCATE identically (s-unit)") {
-    val dir = Files.createTempDirectory("graft_dsv2_pre1970")
+    val dir = tempDir("graft_dsv2_pre1970")
     val f = dir.resolve("old.tsv")
     // one fractional digit votes the TsSecond unit; negative epoch values
     // pin the reference-parity contract: Rust `ms / 1_000` truncates
@@ -250,7 +250,7 @@ class GraftSourceSpec extends SparkSpec {
   }
 
   test("dot-prefixed and underscore-prefixed files are skipped as hidden") {
-    val dir = Files.createTempDirectory("graft_dsv2_hidden")
+    val dir = tempDir("graft_dsv2_hidden")
     Files.write(dir.resolve("data.tsv"),
       "k\tv\n1\ta\n2\tb\n".getBytes("UTF-8"))
     Files.write(dir.resolve(".data.tsv.crc"), Array[Byte](1, 2, 3, 4))
@@ -268,7 +268,7 @@ class GraftSourceSpec extends SparkSpec {
   }
 
   test("directory input reads every part file, one partition each") {
-    val dir = Files.createTempDirectory("graft_dsv2_dir")
+    val dir = tempDir("graft_dsv2_dir")
     (0 until 3).foreach { p =>
       Files.write(dir.resolve(s"part-$p.tsv"),
         (s"k\tv" +: (0 until 10).map(i => s"${p * 100 + i}\tx$i"))

@@ -17,7 +17,7 @@ class GraftSplitSpec extends SparkSpec {
   // ~120 KB fixture; values chosen so several rows end exactly at
   // varied byte offsets (ids of different digit widths, CRLF absent).
   private lazy val fixture: String = {
-    val dir = Files.createTempDirectory("graft_split")
+    val dir = tempDir("graft_split")
     val f = dir.resolve("big.tsv")
     val content = ("id\tname\tscore\tflag" +:
       (0 until 4000).map { i =>
@@ -89,7 +89,7 @@ class GraftSplitSpec extends SparkSpec {
   }
 
   test("gzip stays one partition per member regardless of the split knob") {
-    val dir = Files.createTempDirectory("graft_split_gz")
+    val dir = tempDir("graft_split_gz")
     val f = dir.resolve("data.tsv.gz")
     val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(f))
     out.write(("id\tv" +: (0 until 2000).map(i => s"$i\t${i * 2}"))

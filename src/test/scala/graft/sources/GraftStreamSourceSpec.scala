@@ -22,13 +22,13 @@ class GraftStreamSourceSpec extends SparkSpec {
   /** Stage a complete file into the watched dir atomically (write
     * outside, rename in) — the writer contract the source documents. */
   private def stage(dir: String, name: String, content: String): Unit = {
-    val tmp = Files.createTempFile("graft_stream_src", ".tsv")
+    val tmp = Files.createTempFile(tempDir("graft_stream_src"), "graft_stream_src", ".tsv")
     Files.write(tmp, content.getBytes("UTF-8"))
     Files.move(tmp, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
   }
 
   test("readStream format(graft): incremental file conversion matches the batch read") {
-    val dir = Files.createTempDirectory("graft_stream_dsv2").toString
+    val dir = tempDir("graft_stream_dsv2").toString
     stage(dir, "a.tsv", tsv(0 until 500))
 
     val sink = "graft_stream_sink"
@@ -71,7 +71,7 @@ class GraftStreamSourceSpec extends SparkSpec {
   }
 
   test("pushed filter reaches the streaming scan and prunes rows") {
-    val dir = Files.createTempDirectory("graft_stream_push").toString
+    val dir = tempDir("graft_stream_push").toString
     stage(dir, "a.tsv", tsv(0 until 300))
     val sink = "graft_stream_push_sink"
     spark.catalog.dropTempView(sink)

@@ -83,7 +83,7 @@ class GraftWriterFuzzSpec extends SparkSpec {
   test("randomized frames round-trip value-equal through write -> read") {
     val rnd = new Random(20260812L)
     Seq('\t', ',', ';', '|').zipWithIndex.foreach { case (sep, trial) =>
-      val dir = Files.createTempDirectory(s"graft_wfuzz_$trial").toString
+      val dir = tempDir(s"graft_wfuzz_$trial").toString
       val rows = randomRows(rnd, 400)
       val df = spark.createDataFrame(rows.asJava, schema)
       df.write.format("graft").option("sep", sep.toString)
@@ -108,7 +108,7 @@ class GraftWriterFuzzSpec extends SparkSpec {
   test("randomized frames round-trip value-equal through the JSONL writer") {
     val rnd = new Random(20260814L)
     (0 until 3).foreach { trial =>
-      val dir = Files.createTempDirectory(s"graft_wfuzz_jsonl_$trial").toString
+      val dir = tempDir(s"graft_wfuzz_jsonl_$trial").toString
       // JSONL carries what the delimited form cannot: embedded newlines
       // ride as \n escapes, so add them to the adversarial pool here
       val rows = randomRows(rnd, 400).map { r =>

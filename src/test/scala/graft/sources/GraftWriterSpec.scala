@@ -40,7 +40,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("write → read round-trips values, nulls, and quoting") {
-    val dir = Files.createTempDirectory("graft_w_rt").toString
+    val dir = tempDir("graft_w_rt").toString
     sampleDf.write.format("graft").mode("append").save(dir)
     val back = spark.read.format("graft").load(dir)
     // inference re-derives the same types from the rendered text
@@ -55,7 +55,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("escaped quotes and separators survive in the raw file per RFC-4180") {
-    val dir = Files.createTempDirectory("graft_w_quote")
+    val dir = tempDir("graft_w_quote")
     sampleDf.coalesce(1).write.format("graft").mode("append")
       .save(dir.toString)
     val file = Files.list(dir).iterator().asScala
@@ -68,7 +68,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("sep option changes delimiter and quoting target") {
-    val dir = Files.createTempDirectory("graft_w_csv")
+    val dir = tempDir("graft_w_csv")
     sampleDf.coalesce(1).write.format("graft").option("sep", ",")
       .mode("append").save(dir.toString)
     val file = Files.list(dir).iterator().asScala
@@ -80,7 +80,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("overwrite truncates prior data files; append accumulates") {
-    val dir = Files.createTempDirectory("graft_w_modes").toString
+    val dir = tempDir("graft_w_modes").toString
     sampleDf.write.format("graft").mode("append").save(dir)
     sampleDf.write.format("graft").mode("append").save(dir)
     assert(spark.read.format("graft").load(dir).count() == 8)
@@ -92,7 +92,7 @@ class GraftWriterSpec extends SparkSpec {
     // truncate defers old-file deletion to commit(): a job that dies in
     // a task must not have emptied the directory (delete-then-write
     // would leave readers zero rows)
-    val dir = Files.createTempDirectory("graft_w_failsafe").toString
+    val dir = tempDir("graft_w_failsafe").toString
     sampleDf.write.format("graft").mode("append").save(dir)
     val bad = spark.createDataFrame(Seq(
       Row(9L, "breaks\nhere")).asJava,
@@ -109,7 +109,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("file names embed the write's queryId: appends never collide, temps sweep by id") {
-    val dir = Files.createTempDirectory("graft_w_names")
+    val dir = tempDir("graft_w_names")
     sampleDf.coalesce(1).write.format("graft").mode("append").save(dir.toString)
     sampleDf.coalesce(1).write.format("graft").mode("append").save(dir.toString)
     val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
@@ -134,7 +134,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("gzip output round-trips and is actually gzipped") {
-    val dir = Files.createTempDirectory("graft_w_gz")
+    val dir = tempDir("graft_w_gz")
     sampleDf.write.format("graft").option("compression", "gzip")
       .mode("append").save(dir.toString)
     val files = Files.list(dir).iterator().asScala
@@ -148,7 +148,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("embedded line terminators: default fails with the column name, strip mode round-trips") {
-    val dir = Files.createTempDirectory("graft_w_nl").toString
+    val dir = tempDir("graft_w_nl").toString
     val df = spark.createDataFrame(Seq(
       Row(1L, "one\nline\rbreaks\r\nhere"), Row(2L, "clean")).asJava,
       StructType(Seq(StructField("id", LongType), StructField("s", StringType))))
@@ -167,7 +167,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("unsupported column types fail fast with a named column") {
-    val dir = Files.createTempDirectory("graft_w_badtype").toString
+    val dir = tempDir("graft_w_badtype").toString
     val df = spark.range(3).select(col("id"), array(col("id")).as("arr"))
     val e = intercept[Exception] {
       df.write.format("graft").mode("append").save(dir)
@@ -180,7 +180,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("round trip through a REAL table: lineitem parquet → graft text → back") {
-    val dir = Files.createTempDirectory("graft_w_li").toString
+    val dir = tempDir("graft_w_li").toString
     // int32 / instant columns widen to the reference grammar (i64 /
     // zoneless ms timestamp) on read-back; pre-widen here so the round
     // trip is the identity
@@ -201,7 +201,7 @@ class GraftWriterSpec extends SparkSpec {
   }
 
   test("narrow types write widened: int/instant → i64/ntz with equal values") {
-    val dir = Files.createTempDirectory("graft_w_widen").toString
+    val dir = tempDir("graft_w_widen").toString
     val df = spark.range(5).select(
       col("id"),
       col("id").cast(IntegerType).as("i32"),
