@@ -26,9 +26,10 @@ import graft.ingest.{IngestPipeline, ProgressTicker}
   *    (conversion.rs:103-110) and a rows/s summary (conversion.rs:112-119).
   *
   * The output is a single input-ordered parquet FILE (not a directory):
-  * single-writer parity with the reference's ArrowWriter. The
-  * distributed 100 TB path is `IngestPipeline.writeParquet[Partitioned]`
-  * — this main is the small-file compatibility surface.
+  * single-writer parity with the reference's ArrowWriter. A distributed
+  * 100 TB sink writes one file per task with the same
+  * `IngestPipeline.writerOptions` — this main is the small-file
+  * compatibility surface.
   */
 object ConvertMain {
 

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.functions.{avg, col, count, lit, max}
+import org.apache.spark.sql.functions.{col, count, lit, max}
 
 /** Dumps `explain("formatted")` for registry queries into files — the
   * plan-shape evidence behind SCALE.md's claims and the before/after
@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions.{avg, col, count, lit, max}
   *
   * Usage: `sbt "runMain graft.PlanDump <outDir> <suffix> [q_a q_b ...]"`
   * writes `<outDir>/<name>_<suffix>.txt` per name. With no names it
-  * dumps the [[headline]] set plus three plans outside the registry:
-  * the graft source's filter+column and aggregate pushdowns and the
-  * SQL-form native functions. Plans are dumped at the BENCH session
+  * dumps the [[headline]] set plus two plans outside the registry: the
+  * graft source's pruned scan under Spark's Filter and HashAggregate,
+  * and the SQL-form native functions. Plans are dumped at the BENCH session
   * shape (local[$SPARK_GRAFT_CPUS], shuffle partitions = cpus, AQE on,
   * sf dir from SPARK_GRAFT_SF_DIR) so the dumped Exchange/join strategy
   * matches what the bench actually runs.
@@ -163,16 +163,11 @@ object PlanDump {
         (0 until 100).map(i => s"$i\tname_$i\t${i * 0.5}"))
         .mkString("", "\n", "\n").getBytes("UTF-8"))
       out.close()
-      val demo = spark.read.format("graft").load(f.toString)
-      // filters + projection pushed into the reader — the delimited-text
-      // twin of the parquet PushedFilters evidence
-      write("graft_source_pushdown",
-        demo.filter(col("id") > 50L && col("score") < 40.0).select("id", "name"))
-      // partial aggregate pushdown: the scan emits per-group partial
-      // states (PushedAggregates/GroupBy), the final HashAggregate above
-      // merges partitions
-      write("graft_source_agg_pushdown",
-        demo.groupBy(col("name")).agg(count(lit(1)), max(col("id")), avg(col("score"))))
+      // a plain typed scan: the pruned ReadSchema (id, name — score is
+      // never converted) under Spark's own Filter and HashAggregate
+      write("graft_source_scan",
+        spark.read.format("graft").load(f.toString).filter(col("id") > 50L)
+          .groupBy(col("name")).agg(count(lit(1)), max(col("id"))))
     } finally graft.queries.Scratch.delete(spark, dir)
     // a pure-SQL user's near-dup probe plan: graft_minhash_bands /
     // graft_word_ngrams appear as native expressions inside the project

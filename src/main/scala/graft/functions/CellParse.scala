@@ -329,7 +329,8 @@ object CellParse {
         if (x >= 1000000000L && x < 4000000000L) Some(x.toLong * 1000)
         else if (x >= 1000000000000L && x < 4000000000000L) Some(x.toLong)
         else if (x >= 1000000000000000L && x < 4000000000000000L) Some((x / 1000).toLong)
-        else if (x >= BigInt("1000000000000000000")) Some((x / 1000000).toLong)
+        else if (x >= BigInt("1000000000000000000"))
+          Some(x / 1000000).filter(_.isValidLong).map(_.toLong)
         else None
       }
     }.getOrElse(NoTimestamp)

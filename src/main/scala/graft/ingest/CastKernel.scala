@@ -54,34 +54,6 @@ object CastKernel {
   def toTimestamp(c: Column, unit: ScalarParse.TsUnit = ScalarParse.TsMilli): Column =
     cell(c)(CellTimestamp(_, seconds = unit == ScalarParse.TsSecond))
 
-  /** Time64(Microsecond) — "Heures" in the reference README
-    * (/root/reference/README.md:27). The reference ADVERTISES this arm
-    * but never implements it: analyse.rs:108-313 has no Time64 case, so
-    * a hand-built Time64 schema (the tests/analyse_tests.rs:14-20
-    * library-API pattern) falls into the `_ =>` wildcard
-    * (analyse.rs:300-312), which builds a LargeUtf8 array that cannot
-    * construct a RecordBatch against a Time64 field. We complete the
-    * advertised library-API contract instead of reproducing the broken
-    * fallback: HH:MM[:SS[.ffffff]] time-of-day parsed to MICROSECONDS
-    * SINCE MIDNIGHT — the exact int64 payload Arrow's Time64(µs) array
-    * stores — carried as LongType (Spark has no time-of-day type).
-    * Invalid syntax / out-of-range fields → null, like every other
-    * kernel here. Pure expression tree, stays in codegen. */
-  def toTime64Micros(c: Column): Column = {
-    val t = trim(c)
-    val re = "^(\\d{2}):(\\d{2})(?::(\\d{2})(?:\\.(\\d{1,6}))?)?$"
-    val h = regexp_extract(t, re, 1).try_cast("bigint")
-    val m = regexp_extract(t, re, 2).try_cast("bigint")
-    val sStr = regexp_extract(t, re, 3)
-    val sec = when(sStr === "", lit(0L)).otherwise(sStr.try_cast("bigint"))
-    val fStr = regexp_extract(t, re, 4)
-    val frac = when(fStr === "", lit(0L))
-      .otherwise(rpad(fStr, 6, "0").try_cast("bigint"))
-    when(t.rlike(re) && h <= 23 && m <= 59 && sec <= 59,
-      (h * 3600L + m * 60L + sec) * 1000000L + frac)
-      .otherwise(lit(null).cast(LongType))
-  }
-
   /** Utf8/LargeUtf8: identity modulo null tokens (analyse.rs:252-274). */
   def toStringCol(c: Column): Column = NullTokens.normalize(c)
 

@@ -17,14 +17,15 @@ import org.apache.spark.sql.types._
   *    expressions (CastKernel). The reference's producer/worker/writer
   *    thread topology, block sizing, reorder buffer and backpressure all
   *    collapse into Spark's scan partitioning + whole-stage codegen;
-  *  - sink: ZSTD parquet (the reference writes ZSTD level 5 —
-  *    conversion.rs:167-170).
+  *  - sink: one ZSTD-5 parquet file with block-sized row groups
+  *    (`writeParquetSingleFile`, conversion.rs:159-195).
   *
   * At 100 TB the same plan holds: the scan splits by
-  * `spark.sql.files.maxPartitionBytes`, casts are per-partition
-  * codegen'd projections (no shuffle anywhere), and the sink writes one
-  * file per task instead of the reference's single ordered file (its
-  * BTreeMap reorder buffer is a single-writer artifact; order-insensitive
+  * `spark.sql.files.maxPartitionBytes` and casts are per-partition
+  * codegen'd projections (no shuffle anywhere). A distributed sink is
+  * a plain `df.write.options(writerOptions(n)).parquet(dir)`: one file
+  * per task instead of the reference's single ordered file (its BTreeMap
+  * reorder buffer is a single-writer artifact; order-insensitive
   * verification is the distributed contract — SURVEY §7.4.4).
   */
 object IngestPipeline {
@@ -195,51 +196,6 @@ object IngestPipeline {
     "parquet.compression.codec.zstd.level" -> "5",
     "parquet.block.row.count.limit" -> rowGroupRows(nCols).toString)
 
-  /** O13: ZSTD parquet sink (reference: ZSTD level 5, conversion.rs:167). */
-  def writeParquet(df: DataFrame, out: String): Unit =
-    df.write.mode("overwrite").options(writerOptions(df.columns.length)).parquet(out)
-
-  /** O16: error accounting. The reference keeps process-global atomics
-    * counting parse failures (analyse.rs:15-23) and prints them at the
-    * end; the distributed equivalent is one aggregation pass counting,
-    * per column, cells that are present (not a null token) yet fail
-    * their typed cast — i.e. genuine conversion errors, distinguished
-    * from legitimate nulls. Runs as a single job over the same scan.
-    */
-  def conversionErrorCounts(raw: DataFrame, schema: StructType): Map[String, Long] = {
-    val counters = errorCountExprs(schema)
-    val row = raw.agg(counters.head, counters.tail: _*).collect()(0)
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      f.name -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-    }.toMap
-  }
-
-  /** The per-column genuine-failure counters as aggregate expressions,
-    * aliased positionally (`_err_0`, `_err_1`, …) so they can't collide
-    * with user column names. Used by the standalone `countErrors`
-    * aggregation above (one dedicated pass). ConvertMain instead derives
-    * the same counters from its single cast projection via
-    * `Dataset.observe`, so the CLI path evaluates each kernel once. */
-  def errorCountExprs(schema: StructType): Seq[Column] =
-    schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      val c = col(f.name)
-      val failed = !NullTokens.isNullToken(c) &&
-        CastKernel.castTo(c, f.dataType, tsUnitOf(f), isUnsigned(f)).isNull
-      sum(when(failed, 1L).otherwise(0L)).as(s"_err_$i")
-    }
-
-  /** O12: the reference's deterministic input-ordered single-file output
-    * (BTreeMap reorder buffer, conversion.rs:177-189) — a single-writer
-    * artifact. For strict parity: move every row into one partition and
-    * sort it there by an explicit key. A single-partition exchange needs
-    * no range bounds, so unlike `orderBy` it never samples (re-reads) the
-    * input first. The distributed default is writeParquet[Partitioned]
-    * with order-insensitive verification (SURVEY §7.4.4).
-    */
-  def writeParquetSingleOrdered(df: DataFrame, out: String, orderCols: Seq[String]): Unit =
-    df.repartition(1).sortWithinPartitions(orderCols.map(col): _*)
-      .write.mode("overwrite").options(writerOptions(df.columns.length)).parquet(out)
-
   /** A single parquet FILE at `out` (not a directory): Spark writes a
     * one-task directory, then the lone part file is renamed onto the
     * target path — byte-level layout parity with the reference's
@@ -261,12 +217,4 @@ object IngestPipeline {
     fs.rename(part, target)
     fs.delete(tmpPath, true)
   }
-
-  /** Hive-style partitioned sink — beyond the reference's single-file
-    * writer, this is the 100 TB layout: one directory per partition
-    * value enables partition pruning on read, and each task writes its
-    * own file (no single-writer bottleneck, no reorder buffer). */
-  def writeParquetPartitioned(df: DataFrame, out: String, cols: Seq[String]): Unit =
-    df.write.mode("overwrite").options(writerOptions(df.columns.length))
-      .partitionBy(cols: _*).parquet(out)
 }

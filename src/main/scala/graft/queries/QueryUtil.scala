@@ -69,10 +69,6 @@ object QueryUtil {
     * trimmed-aggregate shape). */
   def dsumIf(cond: Column, c: Column): Column =
     isum(when(cond, cents(c))).cast(DoubleType) / 100.0
-  /** Order-independent double sum of an already-decimal expression
-    * (verification-form sites only — per-row decimal multiplies do NOT
-    * scale; see the class doc). */
-  def dsumDec(c: Column): Column = sum(c).cast(DoubleType)
   /** Deterministic double avg of a 2-decimal column. */
   def davg(c: Column): Column =
     round(isum(cents(c)).cast(DoubleType) / 100.0 / count(c), 4)
@@ -92,14 +88,11 @@ object QueryUtil {
 
   // DuckDB-side equivalents (string SQL fragments) — formulation-
   // identical to the Column forms above, op for op.
-  def moneySql(e: String): String = s"CAST($e AS DECIMAL(12,2))"
-  def rateSql(e: String): String = s"CAST($e AS DECIMAL(4,2))"
   def centsSql(e: String): String = s"CAST(floor(($e) * 100 + 0.5) AS BIGINT)"
   def dsumSql(e: String): String =
     s"CAST(SUM(${centsSql(e)}) AS DOUBLE) / 100.0"
   def dsumIfSql(cond: String, e: String): String =
     s"CAST(SUM(CASE WHEN $cond THEN ${centsSql(e)} END) AS DOUBLE) / 100.0"
-  def dsumDecSql(e: String): String = s"CAST(SUM($e) AS DOUBLE)"
   def davgSql(e: String): String =
     s"ROUND(CAST(SUM(${centsSql(e)}) AS DOUBLE) / 100.0 / COUNT($e), 4)"
   def dsumDiscSql(price: String, disc: String): String =

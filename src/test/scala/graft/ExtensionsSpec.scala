@@ -75,7 +75,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("partitioned parquet sink lays out hive-style directories") {
     val out = tempDir("graft_part").toString
-    graft.ingest.IngestPipeline.writeParquetPartitioned(
+    graft.ingest.PipelineSinks.writeParquetPartitioned(
       Tables.documents(spark, sf), out, Seq("lang"))
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
     assert(dirs.exists(_.startsWith("lang=")))

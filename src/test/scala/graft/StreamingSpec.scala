@@ -123,69 +123,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("streaming funnel (keyed state) matches the batch step counts across batches") {
-    import graft.streaming.Funnel
-    val dir = tempDir("graft_funnel").toString
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[Funnel.FEv].collect().sortBy(_.ts)
-    val (b1, b2) = ev.splitAt(ev.length / 2)
-    stage(spark.createDataset(b1.toSeq), dir, "b1")
-    val stream = spark.readStream
-      .schema("user_id LONG, ts LONG, event_type STRING")
-      .parquet(s"$dir/*").as[Funnel.FEv]
-    val q = Funnel.funnelStream(stream).writeStream.outputMode("update")
-      .format("memory").queryName("funnel_out").start()
-    try {
-      q.processAllAvailable()
-      // second ts-ordered half arrives later — state carries progress over
-      stage(spark.createDataset(b2.toSeq), dir, "b2")
-      q.processAllAvailable()
-      val stages = spark.table("funnel_out").as[Funnel.StageUpdate].collect()
-        .groupBy(_.user_id).map { case (u, us) => u -> us.map(_.stage).max }
-      val streamCounts = Map(
-        "1_view" -> stages.count(_._2 >= 1).toLong,
-        "2_click" -> stages.count(_._2 >= 2).toLong,
-        "3_purchase" -> stages.count(_._2 >= 3).toLong)
-      val batch = graft.queries.Events.qEventsFunnel(spark, sf).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(streamCounts == batch, s"stream $streamCounts vs batch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming transitions (keyed last-event state) match the batch matrix across batches") {
-    import graft.streaming.Transitions
-    val dir = tempDir("graft_trans").toString
-    val ev = Tables.events(spark, sf)
-      .select(col("user_id"), expr("ts div 1000").as("ts"),
-        col("event_id"), col("event_type"))
-      .as[Transitions.TEv].collect().sortBy(e => (e.ts, e.event_id))
-    val (b1, b2) = ev.splitAt(ev.length / 2)
-    stage(spark.createDataset(b1.toSeq), dir, "b1")
-    val stream = spark.readStream
-      .schema("user_id LONG, ts LONG, event_id LONG, event_type STRING")
-      .parquet(s"$dir/*").as[Transitions.TEv]
-    val q = Transitions.transitionStream(stream).writeStream
-      .outputMode("append").format("memory").queryName("trans_out").start()
-    try {
-      q.processAllAvailable()
-      // the second ts-ordered half arrives later: the carried last-event
-      // state must stitch the cross-batch transitions seamlessly
-      stage(spark.createDataset(b2.toSeq), dir, "b2")
-      q.processAllAvailable()
-      val streamed = spark.table("trans_out").as[Transitions.Step].collect()
-        .groupBy(identity).map { case (s, xs) =>
-          (s.from_type, s.to_type) -> xs.length.toLong }
-      // batch matrix minus the 'end' absorbing rows (a stream cannot
-      // know an open sequence's last event)
-      val batch = graft.queries.Events.qEventsTransitions(spark, sf).collect()
-        .filter(_.getString(1) != "end")
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(streamed == batch,
-        s"missing=${(batch.toSet -- streamed.toSet).take(3)} extra=${(streamed.toSet -- batch.toSet).take(3)}")
-    } finally q.stop()
-  }
-
   test("watermarked tumbling-window stream agrees with the batch twin") {
     val dir = tempDir("graft_stream2").toString
     val evs = Tables.events(spark, sf).select(col("ts_ts").as("ts"),
@@ -583,38 +520,6 @@ class StreamingSpec extends SparkSpec {
     assert(s.length == 4, s"expected 4 rows, got ${s.length} (duplicate reprocessing?)")
     assert(s.toSeq == b.toSeq, s"stream=${s.toSeq}\nbatch=${b.toSeq}")
     assert(s.count(_.isNullAt(1)) == 1 && s.count(_.isNullAt(2)) == 1)
-  }
-
-  test("streaming context packing matches the batch prefix-sum form") {
-    import graft.streaming.PackStream
-    // batch truth from the oracle-checked query
-    val batch = graft.queries.Curation.qContextPack(spark, sf).collect()
-      .map(r => (r.getString(1), r.getLong(0)) ->
-        (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-
-    val docs = Tables.documents(spark, sf)
-      .select(col("source"), col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
-      .as[PackStream.Doc].collect().sortBy(d => (d.source, d.doc_id))
-
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[PackStream.Doc](spark)
-    val q = PackStream.packStream(input.toDS())
-      .writeStream.outputMode("append")
-      .format("memory").queryName("pack_out").start()
-    try {
-      // feed in TWO micro-batches split mid-stream: the carried state
-      // must keep every source's fill line continuous across the split
-      val (first, second) = docs.splitAt(docs.length / 2)
-      input.addData(first); q.processAllAvailable()
-      input.addData(second); q.processAllAvailable()
-      val streamed = spark.table("pack_out").collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      assert(streamed.size == docs.length)
-      assert(streamed == batch,
-        s"first diff: ${(streamed.toSet -- batch.toSet).take(2)}")
-    } finally q.stop()
   }
 
   test("streaming curation: stateful dedup + quality filter matches the batch form") {

@@ -102,26 +102,6 @@ class CastKernelSpec extends SparkSpec {
     assert(r(1) == java.time.LocalDateTime.parse("1970-01-01T00:00:00"))
   }
 
-  test("toTime64Micros: µs-since-midnight, ranges enforced (README.md:27 arm)") {
-    // the reference README advertises Time64(Microsecond) but
-    // analyse.rs has no arm (the `_ =>` wildcard builds an incompatible
-    // LargeUtf8 array) — this kernel completes the advertised contract
-    assert(runKernel(Seq(
-      "00:00:00", "12:34", "12:34:56", "12:34:56.789", "23:59:59.999999",
-      "24:00", "12:60", "12:34:60", "12:34:56.1234567", "1:02:03",
-      "noon", "NULL", "", "  12:34:56  "), CastKernel.toTime64Micros)
-      == Seq(
-        0L,
-        (12L * 3600 + 34 * 60) * 1000000L,
-        (12L * 3600 + 34 * 60 + 56) * 1000000L,
-        (12L * 3600 + 34 * 60 + 56) * 1000000L + 789000L,
-        (23L * 3600 + 59 * 60 + 59) * 1000000L + 999999L,
-        null, null, null, null, null,
-        null, null, null,
-        // whitespace is trimmed before the parse, like every kernel
-        (12L * 3600 + 34 * 60 + 56) * 1000000L))
-  }
-
   test("toStringCol/toBinary: null tokens → null, raw kept (analyse.rs:252-298)") {
     assert(runKernel(Seq("  x  ", "NULL", " ", "ok"), CastKernel.toStringCol)
       == Seq("  x  ", null, null, "ok"))

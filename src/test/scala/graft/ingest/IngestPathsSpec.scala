@@ -140,19 +140,21 @@ class IngestPathsSpec extends SparkSpec {
   }
 
   test("an epoch whose microseconds overflow a long is a null timestamp on every path") {
+    // 10^22 ns is 10^16 ms, whose µs overflow a long; 2^64·10^6 ns is
+    // an ms value that itself overflows a long
     val rows = (0 until 1000).map(i => Seq(i.toString, f"2020-01-01 00:00:${i % 60}%02d.123")) :+
-      Seq("1000", "10000000000000000000000")
+      Seq("1000", "10000000000000000000000") :+ Seq("1001", "18446744073709551616000000")
     val cols = Seq("id", "ts")
     val csv = writeCsv(tempDir("graft_paths_us"), "us.csv", rows, cols)
     val jsonl = writeJsonl(tempDir("graft_paths_us_jsonl"), "us.jsonl", rows, cols)
     val msgs = scala.collection.mutable.ArrayBuffer.empty[String]
     val (out, _, errs) = ConvertMain.run(spark,
       ConvertMain.Options(Some(csv.toString), fullScan = false), msgs += _)
-    assert(errs == 1L && msgs.contains("[COLUMN ERRORS] ts: 1 parse failures"))
+    assert(errs == 2L && msgs.contains("[COLUMN ERRORS] ts: 2 parse failures"))
     val typed = assertSame((("ConvertMain.run" -> spark.read.parquet(out)) +:
       streamAndReader(csv, "paths_us_stream")) :+
       ("JsonlIngest.convert" -> JsonlIngest.convert(spark, jsonl.toString)))
-    assert(typed(1000).isNullAt(1) && !typed(999).isNullAt(1))
+    assert(typed(1000).isNullAt(1) && typed(1001).isNullAt(1) && !typed(999).isNullAt(1))
   }
 
   test("a tab-padded number and null token type alike on every path") {

@@ -72,7 +72,7 @@ class IngestPipelineSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n", LongType, true),
       org.apache.spark.sql.types.StructField("d", DateType, true)))
-    val errs = IngestPipeline.conversionErrorCounts(raw, schema)
+    val errs = PipelineSinks.conversionErrorCounts(raw, schema)
     // BAD fails the long cast; not-a-date fails the date cast;
     // NULL and empty are null TOKENS, not errors
     assert(errs == Map("n" -> 1L, "d" -> 1L))
@@ -82,7 +82,7 @@ class IngestPipelineSpec extends SparkSpec {
     val p = tempCsv("k,v\n3,c\n1,a\n2,b\n")
     val df = IngestPipeline.convert(spark, p, fullScan = true)
     val out = tempDir("graft_ordered").toString
-    IngestPipeline.writeParquetSingleOrdered(df, out, Seq("k"))
+    PipelineSinks.writeParquetSingleOrdered(df, out, Seq("k"))
     val files = new java.io.File(out).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length == 1) // single file like the reference's writer
     val back = spark.read.parquet(out).collect()

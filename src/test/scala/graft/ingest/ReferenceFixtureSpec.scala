@@ -99,7 +99,7 @@ class ReferenceFixtureSpec extends SparkSpec {
       java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
         .plusNanos(msOff * 1000000L))
     // zero conversion errors on the clean fixture
-    val errs = IngestPipeline.conversionErrorCounts(raw, schema)
+    val errs = PipelineSinks.conversionErrorCounts(raw, schema)
     assert(errs.values.sum == 0L, errs.filter(_._2 > 0).toString)
   }
 }

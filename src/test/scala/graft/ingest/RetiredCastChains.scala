@@ -115,7 +115,10 @@ object RetiredCastChains {
         if (x >= 1000000000L && x < 4000000000L) Some(x.toLong * 1000)
         else if (x >= 1000000000000L && x < 4000000000000L) Some(x.toLong)
         else if (x >= 1000000000000000L && x < 4000000000000000L) Some((x / 1000).toLong)
-        else if (x >= BigInt("1000000000000000000")) Some((x / 1000000).toLong)
+        // an ms value that overflows a long is no timestamp, as in the
+        // fused kernel (it used to wrap here too)
+        else if (x >= BigInt("1000000000000000000"))
+          Some(x / 1000000).filter(_.isValidLong).map(_.toLong)
         else None
       }
     }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** JSONL through the graft DSv2 source: the JSON tokenizer behind the
-  * SAME pushdown machinery as the delimited path — schema inference via
-  * the shared ladder, filter pushdown, column-pruned parsing, raw
+  * SAME typed scan as the delimited path — schema inference via the
+  * shared ladder, filters and aggregates above the scan, column-pruned
+  * parsing, raw
   * nested capture, PERMISSIVE malformed lines, byte-range splits (JSONL
   * has no header, so every newline-aligned split is a clean row
   * boundary), and the micro-batch stream. */
@@ -52,9 +53,6 @@ class GraftJsonlSourceSpec extends SparkSpec {
 
   test("filters push into the JSON reader and prune the parse") {
     val df = read().filter(col("score") > 700.0).select("id", "score")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("score"),
-      s"filter not pushed:\n${plan.take(800)}")
     assert(df.count() == 199) // ids 2801..2999
   }
 
@@ -83,9 +81,7 @@ class GraftJsonlSourceSpec extends SparkSpec {
     val df = read().groupBy("tag")
       .agg(count(lit(1)).as("n"), sum(col("id")).as("sum_id"),
         min(col("score")).as("min_s"), max(col("score")).as("max_s"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregates"), s"agg not pushed:\n${plan.take(800)}")
-    // parity against the unpushed pipeline form
+    // parity against the pipeline form
     val want = graft.ingest.JsonlIngest.convert(spark, fixture)
       .groupBy("tag")
       .agg(count(lit(1)).as("n"), sum(col("id")).as("sum_id"),

@@ -59,30 +59,21 @@ class GraftSourceSpec extends SparkSpec {
     val df = spark.read.format("graft").load(fixture)
       .filter(col("id") > 1000L && col("flag") === true)
       .select("id", "score")
-    // 1. the scan advertises the pushed predicates...
-    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("PushedFilters: [") && scan.contains("GreaterThan(id,1000)"),
-      s"filters not pushed: ${scan.take(400)}")
-    assert(scan.contains("IsNotNull(id)") || scan.contains("EqualTo(flag,true)"),
-      s"expected conjuncts pushed: ${scan.take(400)}")
-    // 2. ...and the result is identical to the same predicate applied
-    // post-scan by Spark over the unfiltered pipeline output
+    // the result is identical to the same predicate over the pipeline
+    // output
     val expected = IngestPipeline.convert(spark, fixture)
       .filter(col("id") > 1000L && col("flag") === true)
       .select("id", "score").orderBy("id").collect()
     val got = df.orderBy("id").collect()
     assert(got.length == expected.length && got.sameElements(expected),
-      s"pushed=${got.length} rows vs post-scan=${expected.length}")
+      s"source=${got.length} rows vs pipeline=${expected.length}")
     // survivors: ids 1002..1198 even → 99 rows
     assert(got.length == 99)
   }
 
   test("filter pushdown: null-producing casts keep SQL semantics (<> drops nulls)") {
-    // rows 1150+ have n='oops' → null n; `n <> 30` must drop them (UNKNOWN),
-    // and Not(EqualTo) must be pushed, not residual
+    // rows 1150+ have n='oops' → null n; `n <> 30` must drop them (UNKNOWN)
     val df = spark.read.format("graft").load(fixture).filter(col("n") =!= 30L)
-    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("Not(EqualTo(n,30))"), s"Not not pushed: ${scan.take(400)}")
     val expected = IngestPipeline.convert(spark, fixture)
       .filter(col("n") =!= 30L).count()
     assert(df.count() == expected)
@@ -90,88 +81,63 @@ class GraftSourceSpec extends SparkSpec {
   }
 
   test("filter pushdown: unsupported predicates stay residual and still apply") {
-    // length(name) is not a sources.Filter the reader understands —
-    // Catalyst keeps it as a post-scan filter and results stay correct
+    // length(name) has no sources.Filter form; Spark's Filter applies it
+    // with the plain comparison
     val df = spark.read.format("graft").load(fixture)
       .filter(length(col("name")) === lit(6) && col("id") < 100L)
-    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("LessThan(id,100)"), s"supported conjunct not pushed: ${scan.take(400)}")
     // name_0..name_9 → length 6, ids 0..9 under 100
     assert(df.count() == 10)
   }
 
   test("filter pushdown: filter on a pruned-away column still evaluates in the reader") {
-    // flag is neither projected nor post-scan-filtered once pushed; the
-    // reader must parse it for evaluation and emit only id
+    // flag is filtered on but not projected: the scan reads it for
+    // Spark's Filter, and the query emits only id
     val df = spark.read.format("graft").load(fixture)
       .filter(col("flag") === false).select("id")
-    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
-    // Catalyst canonicalizes `flag === false` to Not(EqualTo(flag,true))
-    assert(scan.contains("Not(EqualTo(flag,true))"), s"not pushed: ${scan.take(400)}")
-    assert(!scan.contains("ReadSchema: struct<id: bigint, flag"), "flag should be pruned from output")
     assert(df.count() == 600) // odd ids
     assert(df.agg(min("id")).head.getLong(0) == 1L)
   }
 
-  test("limit pushdown: the scan stops early and reports the pushed limit") {
+  test("limit over a graft read returns the first rows, after a filter too") {
     val df = spark.read.format("graft").load(fixture).limit(7)
-    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("PushedLimit: 7"), s"limit not pushed: ${scan.take(300)}")
     assert(df.count() == 7)
-    // values match the unpushed plan's head (single file => input order)
+    // values are the file's head (single file => input order)
     val ids = df.select("id").collect().map(_.getLong(0)).sorted
     assert(ids.sameElements(0L until 7L), s"got ${ids.mkString(",")}")
-    // limit composes with a pushed filter: limit counts SURVIVING rows
+    // limit after a filter counts SURVIVING rows
     val filtered = spark.read.format("graft").load(fixture)
       .filter(col("flag") === true).limit(5)
-    val fscan = filtered.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(fscan.contains("PushedLimit: 5") && fscan.contains("EqualTo(flag,true)"),
-      s"filter+limit not both pushed: ${fscan.take(300)}")
     val fids = filtered.select("id").collect().map(_.getLong(0)).sorted
     assert(fids.sameElements(Array(0L, 2L, 4L, 6L, 8L)), s"got ${fids.mkString(",")}")
   }
 
-  test("topN pushdown: bounded heap returns the global top rows, nulls placed per spec") {
+  test("orderBy.limit over a graft read returns the global top rows, nulls placed per spec") {
     val df = spark.read.format("graft").load(fixture)
       .orderBy(col("id").desc).limit(3)
-    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("PushedTopN: ORDER BY id DESC"),
-      s"topN not pushed: ${scan.take(300)}")
     assert(df.select("id").collect().map(_.getLong(0)).toSeq ==
       Seq(1199L, 1198L, 1197L))
     // multi-key with nulls: n is null for the post-sample failure rows,
     // so NULLS FIRST surfaces exactly those, tie-broken by id
     val nf = spark.read.format("graft").load(fixture)
       .orderBy(col("n").asc_nulls_first, col("id").asc).limit(5)
-    val nscan = nf.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(nscan.contains("PushedTopN: ORDER BY n ASC NULLS FIRST, id ASC"),
-      s"multi-key topN not pushed: ${nscan.take(300)}")
     val rows = nf.select("id", "n").collect()
     assert(rows.map(_.getLong(0)).toSeq == (1150L to 1154L).toSeq &&
       rows.forall(_.isNullAt(1)),
       s"got ${rows.mkString(", ")}")
-    // parity with the unpushed plan (descending score over doubles)
-    val pushedVals = spark.read.format("graft").load(fixture)
+    // descending score over doubles
+    val topVals = spark.read.format("graft").load(fixture)
       .orderBy(col("score").desc).limit(7).select("id").collect().map(_.getLong(0)).toSeq
-    assert(pushedVals == (1193L to 1199L).reverse.toSeq, s"got $pushedVals")
+    assert(topVals == (1193L to 1199L).reverse.toSeq, s"got $topVals")
   }
 
-  test("runtime filtering: a broadcast join's key set prunes rows inside the reader") {
+  test("a broadcast join over a graft read returns exactly the matching rows") {
     import org.apache.spark.sql.functions.broadcast
     val fact = spark.read.format("graft").load(fixture)
-    // small dim holding 3 ids; the filter makes the build side
-    // "selective", which is what the pruning rule requires
+    // small dim holding 3 ids
     val dim = spark.range(100).filter("id < 3").selectExpr("id * 7 AS k")
-    withSQLConf("spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
-      "spark.sql.optimizer.dynamicPartitionPruning.fallbackFilterRatio" -> "10.0") {
-      val joined = fact.join(broadcast(dim), fact("id") === dim("k"))
-      val rows = joined.select("id").collect().map(_.getLong(0)).sorted
-      assert(rows.sameElements(Array(0L, 7L, 14L)), s"got ${rows.mkString(",")}")
-      // the executed plan's scan carries a runtime (dynamic pruning) filter
-      val scan = joined.queryExecution.executedPlan.toString
-      assert(scan.contains("RuntimeFilters: [") && scan.contains("dynamicpruning"),
-        s"no runtime filter on the graft scan:\n${scan.take(1500)}")
-    }
+    val joined = fact.join(broadcast(dim), fact("id") === dim("k"))
+    val rows = joined.select("id").collect().map(_.getLong(0)).sorted
+    assert(rows.sameElements(Array(0L, 7L, 14L)), s"got ${rows.mkString(",")}")
   }
 
   test("CRLF line endings and quoted fields parse like Spark's CSV source") {
@@ -245,7 +211,7 @@ class GraftSourceSpec extends SparkSpec {
   test("count(*) over a graft read skips field parsing but counts every line") {
     val df = spark.read.format("graft").load(fixture)
     assert(df.count() == 1200) // pruned-to-zero-columns fast path
-    // and with a pushed filter, eval columns still parse
+    // and with a filter, the filter's column still parses
     assert(df.filter(col("id") < 100L).count() == 100)
   }
 
