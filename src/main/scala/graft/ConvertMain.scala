@@ -170,19 +170,11 @@ object ConvertMain {
   private def convert(spark: SparkSession, inputPath: String, outputPath: String,
                       fullScan: Boolean, err: String => Unit): (String, Long, Long) = {
     val t0 = System.nanoTime()
-    // Format routing (beyond the reference, which is delimited-only):
-    // a first line that parses as a JSON object routes the input
-    // through the JSONL reader; everything downstream — inference,
-    // fused cast+observe projection, ordered single-file sink, error
-    // accounting — is format-agnostic over the all-string frame.
-    val isJsonl = graft.ingest.JsonlIngest.looksLikeJsonl(spark, inputPath)
-    val raw =
-      if (isJsonl) graft.ingest.JsonlIngest.readRaw(spark, inputPath,
-        if (fullScan)
-          graft.ingest.JsonlIngest.discoverKeysFull(spark, inputPath)
-        else graft.ingest.JsonlIngest.discoverKeys(spark, inputPath))
-      else IngestPipeline.readRaw(spark, inputPath,
-        IngestPipeline.detectDelimiter(spark, inputPath))
+    // Format routing (beyond the reference, which is delimited-only; see
+    // readRawAny): everything downstream — inference, fused cast+observe
+    // projection, ordered single-file sink, error accounting — is
+    // format-agnostic over the all-string frame.
+    val (raw, isJsonl) = IngestPipeline.readRawAny(spark, inputPath, fullScan)
     val schema = IngestPipeline.inferSchema(raw, fullScan)
     err(s"[OK] schema detected: ${schema.fields.length} columns")
     err(s"[CONF] row-group block = ${IngestPipeline.rowGroupRows(schema.fields.length)} rows")
@@ -195,8 +187,11 @@ object ConvertMain {
     val (totalRows, approxTotal) = {
       val p = Paths.get(inputPath)
       if (Files.isRegularFile(p)) {
-        // JSONL has no header line to discount
-        val lines = scala.util.Using.resource(Files.lines(p))(_.count())
+        // counted through the reader's decompression (a .gz counts its
+        // text); JSONL has no header line to discount
+        val lines = scala.util.Using.resource(new java.io.BufferedReader(
+          new java.io.InputStreamReader(graft.sources.GraftPartitionReader
+            .maybeDecompress(inputPath, Files.newInputStream(p)), "UTF-8")))(_.lines().count())
         (Some(if (isJsonl) lines else lines - 1), false)
       } else (estimateRowsFromBytes(spark, inputPath), true)
     }
@@ -204,49 +199,53 @@ object ConvertMain {
     val ticker = new ProgressTicker(spark, totalRows, err, approxTotal = approxTotal)
     ticker.start()
     val obs = org.apache.spark.sql.Observation("graft_convert")
-    val rows = try {
-      // Plan: scan → [tag + cast + observe] → single-partition exchange
-      // → sort → write. Everything per cell runs in the parallel scan
-      // stage: each row is tagged with its scan position, every column is
-      // cast, and the per-column error counters ride the same projection
-      // via Dataset.observe — the distributed twin of the reference's
-      // inline atomics (analyse.rs:15-23) — reading the CAST RESULT (null
-      // on a non-null non-token input = genuine failure), so each kernel
-      // runs once per cell and the input is scanned exactly once.
+    val metrics = try {
+      // Plan: all-string graft scan → [tag + cast + observe] →
+      // single-partition exchange → sort → write. Everything per cell
+      // runs in the parallel scan stage: each row is tagged with its scan
+      // position, every column is cast, and the per-column error counters
+      // ride the same projection via Dataset.observe — the distributed
+      // twin of the reference's inline atomics (analyse.rs:15-23) —
+      // reading the CAST RESULT (null on a non-null non-token input =
+      // genuine failure), so each kernel runs once per cell and the input
+      // is scanned exactly once.
       //
       // The typed rows then meet in ONE partition, sorted back into input
       // order (single-file parity with the reference's reorder buffer,
-      // conversion.rs:159-195) by file, split offset and the tag: Spark
-      // packs splits largest first, so the tag alone would order a
-      // directory's files by size, not by name. A single-partition
-      // exchange has no range bounds to sample, so there is no second
-      // read of the input; the one-task tail only sorts and writes.
+      // conversion.rs:159-195) by the tag alone: the graft scan plans its
+      // partitions in (file name, offset) order, so partition index then
+      // row position is input order. A single-partition exchange has no
+      // range bounds to sample, so there is no second read of the input;
+      // the one-task tail only sorts and writes.
       val castCols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         graft.ingest.CastKernel.castTo(col(f.name), f.dataType,
           IngestPipeline.tsUnitOf(f), IngestPipeline.isUnsigned(f)).as(s"_graft_cast_$i")
       }
-      val order = Seq(col("_metadata.file_path").as("_graft_file"),
-        col("_metadata.file_block_start").as("_graft_block"),
-        monotonically_increasing_id().as("_graft_row"))
       val projected = raw.select(
-        (order ++ schema.fieldNames.map(col)) ++ castCols: _*)
+        (monotonically_increasing_id().as("_graft_row") +: schema.fieldNames.map(col)) ++
+          castCols: _*)
       val errExprs = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         val failed = !graft.ingest.NullTokens.isNullToken(col(f.name)) &&
           col(s"_graft_cast_$i").isNull
         sum(when(failed, 1L).otherwise(0L)).as(s"_err_$i")
       }
       val counted = projected.observe(obs, count(lit(1)).as("_rows"), errExprs: _*)
-      val orderCols = Seq("_graft_file", "_graft_block", "_graft_row")
       val typed = counted
-        .select(orderCols.map(col) ++ schema.fields.toSeq.zipWithIndex.map {
+        .select(col("_graft_row") +: schema.fields.toSeq.zipWithIndex.map {
           case (f, i) => col(s"_graft_cast_$i").as(f.name)
         }: _*)
         .repartition(1)
-        .sortWithinPartitions(orderCols.map(col): _*)
-        .drop(orderCols: _*)
+        .sortWithinPartitions("_graft_row")
+        .drop("_graft_row")
       IngestPipeline.writeParquetSingleFile(typed, outputPath)
-      obs.get("_rows").asInstanceOf[Long]
+      obs.get
     } finally ticker.stop()
+    // an input with no data row leaves the observation empty (no
+    // `_rows` key at all): 0 rows and 0 errors, which the footer check
+    // below confirms
+    def metric(name: String): Long =
+      metrics.get(name).collect { case n: java.lang.Number => n.longValue() }.getOrElse(0L)
+    val rows = metric("_rows")
 
     // Output-side integrity check (metadata only, no data scan): the
     // written file's parquet footer must account for every observed
@@ -257,12 +256,8 @@ object ConvertMain {
       throw new IllegalStateException(
         s"output $outputPath has $written rows in its parquet footer, expected $rows")
 
-    val metrics = obs.get
     val errorCounts = schema.fields.zipWithIndex.map { case (f, i) =>
-      f.name -> (metrics(s"_err_$i") match {
-        case null => 0L
-        case n: java.lang.Number => n.longValue()
-      })
+      f.name -> metric(s"_err_$i")
     }.toMap
     errorReport(errorCounts).foreach(err)
     val totalErrors = errorCounts.values.sum

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.{GraftDataSource, GraftPartitionReader}
+
 /** The reference's end-to-end conversion pipeline (O1–O13,
   * /root/reference/src/conversion.rs) re-expressed Spark-first:
   *
@@ -13,15 +15,17 @@ import org.apache.spark.sql.types._
   *    (schema.rs:11) via `limit(n).collect` (tiny, exact), or a
   *    distributed per-partition stats fold for full-file mode — the
   *    stats monoid is exactly Spark's partial+final aggregation shape;
-  *  - conversion: ONE all-string CSV scan + a `select` of codegen'd cast
-  *    expressions (CastKernel). The reference's producer/worker/writer
+  *  - conversion: ONE all-string `format("graft")` scan + a `select` of
+  *    codegen'd cast expressions (CastKernel). The graft tokenizer is the
+  *    only text parser on the ingest path (the reference's one parser
+  *    set, conversion.rs:197-223). The reference's producer/worker/writer
   *    thread topology, block sizing, reorder buffer and backpressure all
   *    collapse into Spark's scan partitioning + whole-stage codegen;
   *  - sink: one ZSTD-5 parquet file with block-sized row groups
   *    (`writeParquetSingleFile`, conversion.rs:159-195).
   *
-  * At 100 TB the same plan holds: the scan splits by
-  * `spark.sql.files.maxPartitionBytes` and casts are per-partition
+  * At 100 TB the same plan holds: the scan splits by Spark's file-source
+  * split size (`FilePartition.maxSplitBytes`) and casts are per-partition
   * codegen'd projections (no shuffle anywhere). A distributed sink is
   * a plain `df.write.options(writerOptions(n)).parquet(dir)`: one file
   * per task instead of the reference's single ordered file (its BTreeMap
@@ -30,39 +34,51 @@ import org.apache.spark.sql.types._
   */
 object IngestPipeline {
 
-  /** O2: read the first line of the file, count candidate delimiters.
-    * Uses Hadoop FS so it works on any supported filesystem, reading at
-    * most one buffered line — not a Spark job. */
-  def detectDelimiter(spark: SparkSession, path: String): Char = {
-    val p0 = new org.apache.hadoop.fs.Path(path)
-    val fs = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a directory of part files delimits like its first data file
-    val p = if (fs.getFileStatus(p0).isDirectory)
-      fs.listStatus(p0)
-        .filter(s => s.isFile && graft.sources.GraftDataSource.isDataFile(s.getPath.getName))
-        .map(_.getPath).minBy(_.getName.toString)
-    else p0
-    val in = graft.sources.GraftPartitionReader.maybeDecompress(
-      p.getName, fs.open(p))
-    try {
-      val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-      ScalarParse.detectDelimiter(Option(reader.readLine()).getOrElse(""))
-    } finally in.close()
+  /** O2: count candidate delimiters on the input's first line — one
+    * buffered driver read of one line, not a Spark job. */
+  def detectDelimiter(spark: SparkSession, path: String): Char =
+    ScalarParse.detectDelimiter(
+      GraftDataSource.firstLine(spark.sessionState.newHadoopConf(), path))
+
+  /** Raw all-string read through the graft tokenizer: no inference (its
+    * rules live in [[inferSchema]]), PERMISSIVE like the reference
+    * (analyse.rs:41-106: short rows null-pad, long rows drop extras,
+    * `""` escapes a quote) and null tokens already null. The column
+    * names come from the header, split on the driver by [[headerNames]]. */
+  def readRaw(spark: SparkSession, path: String, delimiter: Char): DataFrame = {
+    val header = GraftPartitionReader.splitFields(
+      GraftDataSource.firstLine(spark.sessionState.newHadoopConf(), path), delimiter)
+    spark.read.format("graft").option("sep", delimiter.toString)
+      .schema(allString(headerNames(header, spark.sessionState.conf.caseSensitiveAnalysis)))
+      .load(path)
   }
 
-  /** Raw all-string read: header on, no Spark inference (its rules differ
-    * from the reference's — SURVEY §4.2), PERMISSIVE so short rows
-    * null-pad and bad rows never abort (analyse.rs:41-106 parity). */
-  def readRaw(spark: SparkSession, path: String, delimiter: Char): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("sep", delimiter.toString)
-      .option("mode", "PERMISSIVE")
-      .option("inferSchema", "false")
-      // RFC-4180 "" doubling like the reference's csv crate (Spark's
-      // default escape is backslash, which the reference does not use)
-      .option("escape", "\"")
-      .csv(path)
+  /** Column names from header cells, by Spark's CSV header rule so names
+    * stay what they were: an empty cell is `_c<i>`, and a name repeated
+    * (case-insensitively unless the session is case-sensitive) takes its
+    * position as a suffix — `a, A, "", a` → `a0, A1, _c2, a3`. */
+  private[graft] def headerNames(cells: Seq[String], caseSensitive: Boolean): Seq[String] = {
+    def key(c: String) = if (caseSensitive) c else c.toLowerCase(java.util.Locale.ROOT)
+    val repeated = cells.filter(_.nonEmpty).groupBy(key).filter(_._2.size > 1).keySet
+    cells.zipWithIndex.map { case (c, i) =>
+      if (c.isEmpty) s"_c$i" else if (repeated(key(c))) s"$c$i" else c
+    }
+  }
+
+  /** The all-string frame of any ingest input, and whether it is JSONL:
+    * a JSON-object first line routes it through key discovery and the
+    * JSON tokenizer; anything else is delimited text split on `sep`, else
+    * on the detected delimiter. */
+  def readRawAny(spark: SparkSession, path: String, fullScan: Boolean,
+                 sep: Option[Char] = None): (DataFrame, Boolean) =
+    if (JsonlIngest.looksLikeJsonl(spark, path))
+      (JsonlIngest.readRaw(spark, path,
+        if (fullScan) JsonlIngest.discoverKeysFull(spark, path)
+        else JsonlIngest.discoverKeys(spark, path)), true)
+    else (readRaw(spark, path, sep.getOrElse(detectDelimiter(spark, path))), false)
+
+  private[ingest] def allString(names: Seq[String]): StructType =
+    StructType(names.map(StructField(_, StringType, nullable = true)))
 
   /** O3–O5: infer per-column types. Default: bounded 1,000-row sample
     * (MAX_LIGNES_INFERENCE, schema.rs:11) collected to the driver — the
@@ -168,16 +184,8 @@ object IngestPipeline {
                     schema: Option[StructType] = None): DataFrame = {
     val d = delimiter.getOrElse(detectDelimiter(spark, path))
     val pinned = schema.getOrElse(inferSchema(readRaw(spark, path, d), fullScan = false))
-    val allString = StructType(pinned.fields.map(f =>
-      StructField(f.name, org.apache.spark.sql.types.StringType, nullable = true)))
-    val rawStream = spark.readStream
-      .option("header", "true")
-      .option("sep", d.toString)
-      .option("mode", "PERMISSIVE")
-      .option("escape", "\"")
-      .schema(allString)
-      .csv(path)
-    applySchema(rawStream, pinned)
+    applySchema(spark.readStream.format("graft").option("sep", d.toString)
+      .schema(allString(pinned.fieldNames.toSeq)).load(path), pinned)
   }
 
   /** O9: the reference's adaptive block sizing (conversion.rs:52-58) —

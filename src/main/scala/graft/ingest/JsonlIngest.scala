@@ -3,8 +3,9 @@ package graft.ingest
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.GraftDataSource
 
 /** JSON-lines ingest through the SAME inference ladder and cast kernels
   * as the delimited-text pipeline — the modern "tabular" a training-data
@@ -28,9 +29,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Scale: the sample collect is bounded (1,000 lines, like
   * MAX_LIGNES_INFERENCE, schema.rs:11); the conversion itself is one
-  * all-string scan (`text` source splits by maxPartitionBytes) + one
-  * codegen'd `from_json` + cast projection — no shuffle anywhere, the
-  * same no-shuffle shape as the CSV path.
+  * all-string `format("graft")` scan (the JSON half of the one ingest
+  * tokenizer, byte-range splits like the delimited path) + one
+  * codegen'd cast projection — no shuffle anywhere, the same no-shuffle
+  * shape as the delimited path.
   */
 object JsonlIngest {
 
@@ -91,18 +93,14 @@ object JsonlIngest {
     sampled ++ (all.toSet -- sampled).toSeq.sorted
   }
 
-  /** Raw all-string read: one `text` scan + `from_json` against an
-    * all-string struct. Spark's Jackson parser captures non-string
-    * tokens under a StringType field as their raw text (numbers and
-    * booleans keep their literal spelling; nested objects/arrays their
-    * JSON), which is exactly the "cell text" contract the ladder
-    * expects. Malformed lines yield a null struct → all-null row. */
-  def readRaw(spark: SparkSession, path: String, keys: Seq[String]): DataFrame = {
-    val allString = StructType(keys.map(StructField(_, StringType, nullable = true)))
-    spark.read.text(path)
-      .select(from_json(col("value"), allString).as("j"))
-      .select(keys.map(k => col("j").getField(k).as(k)): _*)
-  }
+  /** Raw all-string read through the graft source's JSON tokenizer
+    * (`GraftPartitionReader.jsonFields`): every top-level value as its
+    * raw token text (numbers and booleans keep their literal spelling;
+    * nested objects/arrays their JSON), which is exactly the "cell
+    * text" contract the ladder expects. Missing keys and JSON null are
+    * null, and a malformed line is an all-null row. */
+  def readRaw(spark: SparkSession, path: String, keys: Seq[String]): DataFrame =
+    spark.read.format("graft").schema(IngestPipeline.allString(keys)).load(path)
 
   /** Full pipeline: JSONL file/directory → typed DataFrame, typing rules
     * identical to `IngestPipeline.convert`. `fullScan` widens BOTH
@@ -117,32 +115,21 @@ object JsonlIngest {
     IngestPipeline.applySchema(raw, IngestPipeline.inferSchema(raw, fullScan))
   }
 
-  /** Content sniff for the CLI's format routing: the input is JSONL when
-    * its first line parses as a JSON object with at least one key. One
-    * buffered line read (the same bounded pre-pass as delimiter
-    * detection — O2's shape, a format probe instead of a comma count);
-    * directories probe their first data file. */
+  /** Content sniff for the CLI's and the graft source's format routing:
+    * the input is JSONL when its first line (`GraftDataSource.firstLine`)
+    * parses as a JSON object with at least one key — O2's one-line
+    * pre-pass, a format probe instead of a comma count. */
   def looksLikeJsonl(spark: SparkSession, path: String): Boolean = {
-    val p0 = new org.apache.hadoop.fs.Path(path)
-    val fs = p0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = if (fs.getFileStatus(p0).isDirectory)
-      fs.listStatus(p0)
-        .filter(s => s.isFile && graft.sources.GraftDataSource.isDataFile(s.getPath.getName))
-        .map(_.getPath).minBy(_.getName.toString)
-    else p0
-    val in = graft.sources.GraftPartitionReader.maybeDecompress(p.getName, fs.open(p))
-    try {
-      val reader = new java.io.BufferedReader(new java.io.InputStreamReader(in, "UTF-8"))
-      val first = Option(reader.readLine()).getOrElse("")
-      first.dropWhile(_.isWhitespace).startsWith("{") && topLevelKeys(first).nonEmpty
-    } finally in.close()
+    val first = GraftDataSource.firstLine(spark.sessionState.newHadoopConf(), path)
+    first.dropWhile(_.isWhitespace).startsWith("{") && topLevelKeys(first).nonEmpty
   }
 
   /** Streaming form, mirroring `IngestPipeline.convertStream`: keys and
     * types pin ONCE from the files already present, then new files flow
-    * through the same `from_json` + cast projection continuously. The
-    * same RESTART CONTRACT applies — pass the first run's schema when
-    * resuming from a checkpoint (see convertStream's scaladoc). */
+    * through the same graft JSON tokenizer + cast projection
+    * continuously. The same RESTART CONTRACT applies — pass the first
+    * run's schema when resuming from a checkpoint (see convertStream's
+    * scaladoc). */
   def convertStream(spark: SparkSession, path: String,
                     schema: Option[StructType] = None,
                     sampleRows: Int = 1000): DataFrame = {
@@ -150,13 +137,8 @@ object JsonlIngest {
       val keys = discoverKeys(spark, path, sampleRows)
       IngestPipeline.inferSchema(readRaw(spark, path, keys), fullScan = false)
     }
-    val allString = StructType(pinned.fields.map(f =>
-      StructField(f.name, StringType, nullable = true)))
-    val rawStream = spark.readStream
-      .schema(StructType(Seq(StructField("value", StringType, nullable = true))))
-      .text(path)
-      .select(from_json(col("value"), allString).as("j"))
-      .select(pinned.fieldNames.map(k => col("j").getField(k).as(k)).toSeq: _*)
+    val rawStream = spark.readStream.format("graft")
+      .schema(IngestPipeline.allString(pinned.fieldNames.toSeq)).load(path)
     IngestPipeline.applySchema(rawStream, pinned)
   }
 }

@@ -11,8 +11,9 @@ import graft.functions.IsNullToken
   * (reference utils.rs:48-57): empty/space-only, or case-insensitive
   * null/none/nan/n/a/na → SQL NULL in every type.
   *
-  * Spark CSV's `nullValue` accepts one token, so raw columns are read as
-  * strings and normalized here. The test is one fused native expression
+  * The graft reader nulls these tokens per cell itself; this Column
+  * form serves the cast kernels' string arm, the CLI's error counters
+  * and the SQL entries. The test is one fused native expression
   * ([[graft.functions.IsNullToken]]), inside whole-stage codegen, no UDF;
   * it runs for every cell of a conversion.
   */

@@ -4,7 +4,8 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -13,6 +14,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -34,9 +36,16 @@ import graft.ingest.{IngestPipeline, ScalarParse}
   * small graft read can broadcast). Filters, limits, top-N and
   * aggregates are Spark's own operators above it.
   *
-  * Scale behavior: uncompressed files larger than
-  * `spark.sql.files.maxPartitionBytes` split into byte ranges aligned
-  * to the next newline (Hadoop LineRecordReader convention — see
+  * It is the one tokenizer of the ingest path: the all-string reads,
+  * the streams and the CLI all read through it. A path (file, directory
+  * or glob) is listed by [[GraftDataSource.dataFiles]]; a line empty
+  * after `String.trim` is not a record, each delimited file's first
+  * non-blank line is its header, and a file's leading U+FEFF is dropped.
+  *
+  * Scale behavior: uncompressed files larger than Spark's file-source
+  * split size (`FilePartition.maxSplitBytes`: `maxPartitionBytes`,
+  * `openCostInBytes`, default parallelism) split into byte ranges
+  * aligned to the next newline (Hadoop LineRecordReader convention — see
   * GraftRangeLineSource), so one giant TSV reads as wide as the
   * cluster; smaller files are one partition each and a directory of N
   * part files reads ≥N-wide. gzip members are undividable streams and
@@ -63,21 +72,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val spark = SparkSession.active
-    val path = pathOf(options)
-    // a JSON-object first line routes the source through the JSONL
-    // reader (same content sniff as the CLI); the inference ladder and
-    // the typed scan are shared with the delimited path
-    val raw =
-      if (graft.ingest.JsonlIngest.looksLikeJsonl(spark, path))
-        graft.ingest.JsonlIngest.readRaw(spark, path,
-          if (options.getBoolean("fullScan", false))
-            graft.ingest.JsonlIngest.discoverKeysFull(spark, path)
-          else graft.ingest.JsonlIngest.discoverKeys(spark, path))
-      else IngestPipeline.readRaw(spark, path,
-        GraftDataSource.sepOption(options)
-          .getOrElse(IngestPipeline.detectDelimiter(spark, path)))
-    IngestPipeline.inferSchema(raw, options.getBoolean("fullScan", false))
+    // the same content sniff and all-string read as the CLI
+    val fullScan = options.getBoolean("fullScan", false)
+    IngestPipeline.inferSchema(IngestPipeline.readRawAny(SparkSession.active,
+      pathOf(options), fullScan, GraftDataSource.sepOption(options))._1, fullScan)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
@@ -162,25 +160,18 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
 
     override def planInputPartitions(): Array[InputPartition] = {
       val spark = SparkSession.active
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new Path(path)
-      val fs = root.getFileSystem(conf)
-      val statuses =
-        if (fs.getFileStatus(root).isDirectory)
-          fs.listStatus(root)
-            .filter(s => s.isFile && GraftDataSource.isDataFile(s.getPath.getName))
-            .sortBy(_.getPath.toString)
-        else Array(fs.getFileStatus(root))
+      val statuses = GraftDataSource.dataFiles(spark.sessionState.newHadoopConf(), path)
       // Byte-range splits: a single giant uncompressed file must not
-      // serialize onto one core. The split unit is
-      // spark.sql.files.maxPartitionBytes — the same knob Spark's own
-      // file sources use — with offsets aligned to the next newline
-      // reader-side (Hadoop LineRecordReader convention, see
-      // GraftRangeLineSource). The reference's conversion path is
-      // line-based and quote-unaware (conversion.rs:197-223), so
-      // newline-aligned offsets preserve its semantics. gzip members
-      // are honestly unsplittable streams and stay file-per-partition.
-      val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
+      // serialize onto one core. The split size is Spark's own
+      // file-source rule, with offsets aligned to the next newline
+      // reader-side (see GraftRangeLineSource). The reference's
+      // conversion path is line-based and quote-unaware
+      // (conversion.rs:197-223), so newline-aligned offsets preserve its
+      // semantics. gzip members are honestly unsplittable streams and
+      // stay file-per-partition. Partitions keep the listing's (file
+      // name, offset) order: the input order ConvertMain writes.
+      val maxBytes = FilePartition.maxSplitBytes(spark,
+        Seq(PartitionDirectory(InternalRow.empty, statuses.toArray)))
       statuses.flatMap { st =>
         val f = st.getPath.toString
         if (f.endsWith(".gz") || st.getLen <= maxBytes)
@@ -203,17 +194,9 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
       * estimate of scan size. */
     override def estimateStatistics(): Statistics = new Statistics {
       private val bytes: Long =
-        try {
-          val conf = SparkSession.active.sessionState.newHadoopConf()
-          val root = new Path(path)
-          val fs = root.getFileSystem(conf)
-          val st = fs.getFileStatus(root)
-          if (st.isDirectory)
-            fs.listStatus(root)
-              .filter(s => s.isFile && GraftDataSource.isDataFile(s.getPath.getName))
-              .map(_.getLen).sum
-          else st.getLen
-        } catch { case _: Exception => Long.MaxValue }
+        try GraftDataSource.dataFiles(
+          SparkSession.active.sessionState.newHadoopConf(), path).map(_.getLen).sum
+        catch { case _: Exception => Long.MaxValue }
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes)
       override def numRows(): java.util.OptionalLong =
@@ -244,46 +227,20 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
 }
 
 /** Streaming offset: the sorted list of data files already emitted.
-  * JSON is a plain string array (escaped), so checkpoint recovery
-  * round-trips through deserializeOffset. A production-hardened form
-  * would compact this into a file log like Spark's FileStreamSource;
-  * the offset-as-listing form keeps the exactly-once set-difference
+  * JSON is a plain string array, so checkpoint recovery round-trips
+  * through deserializeOffset. A production-hardened form would compact
+  * this into a file log like Spark's FileStreamSource; the
+  * offset-as-listing form keeps the exactly-once set-difference
   * semantics explicit and is bounded by feed-dir file count. */
 private[sources] case class GraftFilesOffset(files: Seq[String])
   extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String =
-    files.map(f => "\"" + f.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\"").mkString("[", ",", "]")
+  override def json(): String = GraftFilesOffset.mapper.writeValueAsString(files.toArray)
 }
 
 private[sources] object GraftFilesOffset {
-  /** Minimal parser for the array-of-strings json() emits. */
-  def fromJson(json: String): GraftFilesOffset = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new java.lang.StringBuilder()
-    var i = 0
-    var inStr = false
-    while (i < json.length) {
-      val c = json.charAt(i)
-      if (!inStr) { if (c == '"') { inStr = true; cur.setLength(0) } }
-      else c match {
-        case '"' => inStr = false; out += cur.toString
-        case '\\' =>
-          i += 1
-          json.charAt(i) match {
-            case 'u' => cur.append(Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar); i += 4
-            case e => cur.append(e)
-          }
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    GraftFilesOffset(out.toSeq)
-  }
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  def fromJson(json: String): GraftFilesOffset =
+    GraftFilesOffset(mapper.readValue(json, classOf[Array[String]]).toSeq)
 }
 
 private class GraftMicroBatchStream(path: String, full: StructType,
@@ -292,16 +249,8 @@ private class GraftMicroBatchStream(path: String, full: StructType,
     jsonl: Boolean = false)
   extends MicroBatchStream {
 
-  private def listFiles(): Seq[String] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf.value)
-    val st = fs.getFileStatus(root)
-    (if (st.isDirectory)
-      fs.listStatus(root)
-        .filter(s => s.isFile && GraftDataSource.isDataFile(s.getPath.getName))
-        .map(_.getPath.toString)
-    else Array(path)).sorted.toSeq
-  }
+  private def listFiles(): Seq[String] =
+    GraftDataSource.dataFiles(conf.value, path).map(_.getPath.toString)
 
   override def initialOffset(): streaming.Offset = GraftFilesOffset(Nil)
   override def latestOffset(): streaming.Offset = GraftFilesOffset(listFiles())
@@ -335,6 +284,37 @@ object GraftDataSource {
   def isDataFile(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
+  /** The data files a read covers, sorted by path: the one listing
+    * behind every graft read, batch or stream, and [[firstLine]]. `path`
+    * is a file, a directory (its files) or a glob (each match; a matched
+    * directory gives its files). Hidden names are skipped, except a file
+    * named outright. */
+  def dataFiles(conf: Configuration, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val glob = path.exists("{}[]*?\\".contains(_))
+    Option(fs.globStatus(p)).toSeq.flatten.flatMap { st =>
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).filter(c => c.isFile && isDataFile(c.getPath.getName)).toSeq
+      else if (glob && !isDataFile(st.getPath.getName)) Nil
+      else Seq(st)
+    }.sortBy(_.getPath.toString)
+  }
+
+  /** The first non-blank line of the data files, a leading U+FEFF
+    * dropped: a delimited input's header and every input's format and
+    * delimiter probe. One buffered driver read, not a Spark job; an input
+    * with no data file or no such line fails naming the path. */
+  def firstLine(conf: Configuration, path: String): String = {
+    val files = dataFiles(conf, path)
+    require(files.nonEmpty, s"no data file at $path")
+    files.iterator.map { st =>
+      val in = GraftLineSource.open(st.getPath.getFileSystem(conf), st.getPath.toString)
+      try in.nextLine() finally in.close()
+    }.find(_ != null).getOrElse(
+      throw new IllegalArgumentException(s"no data line in $path"))
+  }
+
   /** The `sep` option must be exactly one character — silently taking
     * `head` would read a literally-typed "\\t" as '\\'. */
   def sepOption(options: CaseInsensitiveStringMap): Option[Char] =
@@ -361,33 +341,17 @@ case class GraftFilePartition(file: String, full: StructType,
   * `hadoopConf` arrives from the driver via the reader factory's
   * SerializableConfiguration (Configuration itself isn't
   * serializable), so session `spark.hadoop.*` settings — object-store
-  * credentials, custom filesystems — apply executor-side. The no-conf
-  * constructor (defaults only) remains for direct library use. */
-class GraftPartitionReader(p: GraftFilePartition,
-                           hadoopConf: org.apache.hadoop.conf.Configuration)
+  * credentials, custom filesystems — apply executor-side. */
+class GraftPartitionReader(p: GraftFilePartition, hadoopConf: Configuration)
   extends PartitionReader[InternalRow] {
 
-  def this(p: GraftFilePartition) =
-    this(p, new org.apache.hadoop.conf.Configuration())
-
-  private val fs = new Path(p.file).getFileSystem(hadoopConf)
   // Line source: whole-stream (gzip, or an unsplit file) or a
-  // byte-range slice of an uncompressed file. A split reader at
-  // start > 0 discards the partial line it lands inside, and EVERY
-  // split reads through the line straddling its end (which the next
-  // split then discards) — the Hadoop LineRecordReader convention, so
-  // contiguous splits see each line exactly once. The header lives in
-  // the split containing offset 0 only.
-  private val in: GraftLineSource =
-    if (p.file.endsWith(".gz") || (p.start == 0L && p.length < 0L))
-      new GraftStreamLineSource(new java.io.BufferedReader(
-        new java.io.InputStreamReader(
-          GraftPartitionReader.maybeDecompress(p.file, fs.open(new Path(p.file))),
-          "UTF-8")))
-    else
-      new GraftRangeLineSource(fs.open(new Path(p.file)), p.start,
-        if (p.length < 0L) Long.MaxValue else p.start + p.length)
-  if (p.start == 0L && !p.jsonl) in.readLine() // header (JSONL has none)
+  // byte-range slice of an uncompressed file (see GraftLineSource.open).
+  // The header — a delimited file's first non-blank line — lives in the
+  // split containing offset 0 only.
+  private val in = GraftLineSource.open(
+    new Path(p.file).getFileSystem(hadoopConf), p.file, p.start, p.length)
+  if (p.start == 0L && !p.jsonl) in.nextLine() // header (JSONL has none)
 
   // JSON tokenizer: top-level key -> token position in the FULL schema
   private val jsonIdx: Map[String, Int] =
@@ -424,17 +388,16 @@ class GraftPartitionReader(p: GraftFilePartition,
 
   private var current: InternalRow = _
 
-  /** Read a line, tokenize it (the RFC-4180 split for delimited files,
+  /** Read a record line, tokenize it (the RFC-4180 split for delimited files,
     * the JSON tokenizer for JSONL partitions), convert the pruned fields
     * and emit the row. A count-only scan (no fields) never splits the
     * line at all. */
   override def next(): Boolean = {
-    val raw = in.readLine()
-    if (raw == null) { current = null; return false }
+    // both line sources end a line at LF, CR or CRLF, like the
+    // reference's csv reader and Spark's CSV source
+    val line = in.nextLine()
+    if (line == null) { current = null; return false }
     if (fields.isEmpty) { current = GraftPartitionReader.emptyRow; return true }
-    // readLine strips \n but keeps a CRLF file's \r — drop it, like
-    // the reference's csv reader (and Spark's CSV source) do
-    val line = if (raw.nonEmpty && raw.last == '\r') raw.dropRight(1) else raw
     val tokens =
       if (p.jsonl) GraftPartitionReader.jsonFields(line, jsonIdx, p.full.length)
       else GraftPartitionReader.splitFields(line, p.delim)
@@ -454,18 +417,44 @@ class GraftPartitionReader(p: GraftFilePartition,
   override def close(): Unit = in.close()
 }
 
-/** Minimal line-at-a-time abstraction so the reader's row loop is
-  * agnostic to whether it is draining a whole stream or a byte range
-  * of one. */
-private[sources] trait GraftLineSource {
-  def readLine(): String
+/** Line-at-a-time source, so the reader's row loop is agnostic to
+  * whether it is draining a whole stream or a byte range of one.
+  * [[nextLine]] applies the record rules every graft read shares. */
+private[sources] abstract class GraftLineSource(atFileStart: Boolean) {
+  protected def readLine(): String
   def close(): Unit
+
+  private var first = atFileStart
+
+  /** The next record line, or null at the end: a line that is empty
+    * after `String.trim` is not a record (Spark's CSV source skips the
+    * same lines), and a file's first line drops a leading U+FEFF, as
+    * Hadoop's LineRecordReader does. */
+  def nextLine(): String = {
+    var line = readLine()
+    if (first && line != null) {
+      first = false
+      if (line.startsWith("\uFEFF")) line = line.substring(1)
+    }
+    while (line != null && line.forall(_ <= ' ')) line = readLine()
+    line
+  }
 }
 
-private[sources] final class GraftStreamLineSource(r: java.io.BufferedReader)
-  extends GraftLineSource {
-  override def readLine(): String = r.readLine()
-  override def close(): Unit = r.close()
+private[sources] object GraftLineSource {
+  /** A whole-stream source for gzip or an unsplit file (`length` -1),
+    * else a byte-range source over `[start, start + length)`. */
+  def open(fs: org.apache.hadoop.fs.FileSystem, file: String,
+           start: Long = 0L, length: Long = -1L): GraftLineSource =
+    if (file.endsWith(".gz") || (start == 0L && length < 0L)) {
+      val r = new java.io.BufferedReader(new java.io.InputStreamReader(
+        GraftPartitionReader.maybeDecompress(file, fs.open(new Path(file))), "UTF-8"))
+      new GraftLineSource(atFileStart = true) {
+        override protected def readLine(): String = r.readLine()
+        override def close(): Unit = r.close()
+      }
+    } else new GraftRangeLineSource(fs.open(new Path(file)), start,
+      if (length < 0L) Long.MaxValue else start + length)
 }
 
 /** Byte-range line reader over an uncompressed file. Uses Hadoop's
@@ -478,7 +467,7 @@ private[sources] final class GraftStreamLineSource(r: java.io.BufferedReader)
   * partition the file's lines exactly. */
 private[sources] final class GraftRangeLineSource(
     in: org.apache.hadoop.fs.FSDataInputStream, start: Long, end: Long)
-  extends GraftLineSource {
+  extends GraftLineSource(atFileStart = start == 0L) {
   in.seek(start)
   private val reader = new org.apache.hadoop.util.LineReader(in)
   private val text = new org.apache.hadoop.io.Text()
@@ -487,7 +476,7 @@ private[sources] final class GraftRangeLineSource(
   // newline (the previous split read this line in full)
   if (start > 0L) pos += reader.readLine(text)
 
-  override def readLine(): String = {
+  override protected def readLine(): String = {
     if (pos > end) return null
     val n = reader.readLine(text)
     if (n == 0) null

@@ -137,6 +137,60 @@ class ConvertMainSpec extends SparkSpec {
     }
   }
 
+  test("a gzip TSV converts through the CLI like the plain file") {
+    val fixture = writeFixture(rows = 1200, badTail = 50)
+    val gz = tempDir("graft_cli_gz").resolve("fixture.tsv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gz))
+    try Files.copy(fixture, out) finally out.close()
+    val (plainOut, plainRows, plainErrs) = ConvertMain.run(spark,
+      ConvertMain.Options(Some(fixture.toString), fullScan = false), _ => ())
+    val (gzOut, gzRows, gzErrs) = ConvertMain.run(spark,
+      ConvertMain.Options(Some(gz.toString), fullScan = false), _ => ())
+    assert(gzOut == gz.getParent.resolve("fixture.tsv.parquet").toString)
+    assert((gzRows, gzErrs) == ((plainRows, plainErrs)))
+    val plain = spark.read.parquet(plainOut)
+    val viaGz = spark.read.parquet(gzOut)
+    assert(viaGz.schema == plain.schema)
+    assert(viaGz.collect().toSeq == plain.collect().toSeq)
+  }
+
+  test("a header-only file converts to a zero-row parquet with its header's columns") {
+    val f = tempDir("graft_cli_header_only").resolve("h.tsv")
+    Files.writeString(f, "id\tname\tscore\n")
+    val (out, rows, errs) = ConvertMain.run(spark,
+      ConvertMain.Options(Some(f.toString), fullScan = false), _ => ())
+    assert(rows == 0L && errs == 0L)
+    val back = spark.read.parquet(out)
+    assert(back.columns.toSeq == Seq("id", "name", "score"))
+    assert(back.count() == 0L)
+  }
+
+  test("an empty directory fails with an IllegalArgumentException naming the path") {
+    val dir = Files.createDirectory(tempDir("graft_cli_empty_dir").resolve("in"))
+    Files.write(dir.resolve("_SUCCESS"), Array.emptyByteArray)
+    val cli = intercept[IllegalArgumentException] {
+      ConvertMain.run(spark, ConvertMain.Options(Some(dir.toString), fullScan = false), _ => ())
+    }
+    assert(cli.getMessage.contains(dir.toString), cli.getMessage)
+    val reader = intercept[IllegalArgumentException] {
+      spark.read.format("graft").load(dir.toString).collect()
+    }
+    assert(reader.getMessage.contains(dir.toString), reader.getMessage)
+  }
+
+  test("an empty file fails with an IllegalArgumentException naming the path") {
+    val f = tempDir("graft_cli_empty_file").resolve("e.tsv")
+    Files.write(f, Array.emptyByteArray)
+    val e = intercept[IllegalArgumentException] {
+      ConvertMain.run(spark, ConvertMain.Options(Some(f.toString), fullScan = false), _ => ())
+    }
+    assert(e.getMessage.contains(f.toString), e.getMessage)
+    val reader = intercept[IllegalArgumentException] {
+      spark.read.format("graft").load(f.toString).collect()
+    }
+    assert(reader.getMessage.contains(f.toString), reader.getMessage)
+  }
+
   test("stdin input ('-') converts to stdin.parquet in the working directory") {
     val tsv = "a\tb\n1\tx\n2\ty\n"
     val oldIn = System.in

@@ -128,15 +128,36 @@ class IngestPathsSpec extends SparkSpec {
   test("CR/LF-padded cells: the CLI, the stream, the graft reader and the JSONL route on JSONL") {
     val rows = table(CellParseSpec.corpus)
     val jsonl = writeJsonl(tempDir("graft_paths_crlf"), "cells.jsonl", rows, header)
-    val typed = assertSame((("ConvertMain.run" -> viaCli(jsonl)) +:
-      streamAndReader(jsonl, "paths_jsonl_stream")) :+
-      ("JsonlIngest.convert" -> JsonlIngest.convert(spark, jsonl.toString)))
+    def routes(file: Path, stream: String) = (("ConvertMain.run" -> viaCli(file)) +:
+      streamAndReader(file, stream)) :+
+      ("JsonlIngest.convert" -> JsonlIngest.convert(spark, file.toString))
+    val plain = routes(jsonl, "paths_jsonl_stream")
+    val typed = assertSame(plain)
+    // a BOM-prefixed copy routes as JSONL and types the same on every path
+    val bom = Files.writeString(tempDir("graft_paths_crlf_bom").resolve("cells.jsonl"),
+      "\uFEFF" + Files.readString(jsonl))
+    assertSame(("plain file" -> plain.head._2) +: routes(bom, "paths_jsonl_bom_stream"))
     def row(c: String) = typed(1000 + CellParseSpec.corpus.indexOf(c))
     Seq("\r42", "\n42", "\r\n42").foreach { c =>
       assert(row(c).isNullAt(2) && row(c).getString(9) == c, c.replace("\r", "<CR>").replace("\n", "<LF>"))
     }
     // the i64 kernels' one-terminator quirk: a final CR, LF or CRLF parses
     Seq("42\r", "42\n", "42\r\n").foreach(c => assert(row(c).getLong(2) == 42L))
+  }
+
+  test("a BOM, repeated and empty header names and blank lines read alike on every path") {
+    // an empty line, a spaces-only line and a tab-only line are not records
+    val tsv = Files.writeString(tempDir("graft_paths_blank").resolve("blank.tsv"),
+      "\uFEFFa\tA\t\ta\n11\tx\t10\t2024-01-01\n\n12\ty\t20\t2024-01-02\n" +
+        "   \n\t\t\n13\tz\t30\t2024-01-03\n")
+    val results = Seq("ConvertMain.run" -> viaCli(tsv),
+      "IngestPipeline.convert" -> IngestPipeline.convert(spark, tsv.toString)) ++
+      streamAndReader(tsv, "paths_blank_stream")
+    results.foreach { case (name, df) =>
+      assert(df.columns.toSeq == Seq("a0", "A1", "_c2", "a3"), name)
+      assert(df.orderBy("a0").collect().toSeq == (1 to 3).map(i => Row(10L + i,
+        "xyz".substring(i - 1, i), 10L * i, java.sql.Date.valueOf(s"2024-01-0$i"))), name)
+    }
   }
 
   test("an epoch whose microseconds overflow a long is a null timestamp on every path") {
