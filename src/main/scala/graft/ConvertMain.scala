@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{IngestPipeline, ProgressTicker}
@@ -26,10 +26,11 @@ import graft.ingest.{IngestPipeline, ProgressTicker}
   *    (conversion.rs:103-110) and a rows/s summary (conversion.rs:112-119).
   *
   * The output is a single input-ordered parquet FILE (not a directory):
-  * single-writer parity with the reference's ArrowWriter. A distributed
-  * 100 TB sink writes one file per task with the same
-  * `IngestPipeline.writerOptions` — this main is the small-file
-  * compatibility surface.
+  * single-file parity with the reference's ArrowWriter. Each scan split
+  * casts and encodes its own block-bounded row groups in parallel, and
+  * `IngestPipeline.writeParquetSingleFile` appends them in split order.
+  * A distributed 100 TB sink keeps the per-task files instead, with the
+  * same `IngestPipeline.writerOptions`.
   */
 object ConvertMain {
 
@@ -81,50 +82,42 @@ object ConvertMain {
   }
 
   /** Progress denominator when exact line-counting isn't cheap (remote
-    * FS, directory of part files): total data bytes ÷ average bytes/row
-    * sampled from the first file's first `sampleLines` lines. One
-    * buffered read of ≤1000 lines; never fails the conversion. */
+    * FS, directory of part files): per data file, in file-name order
+    * ([[graft.sources.GraftDataSource.dataFiles]]), its bytes after the
+    * header ÷ the average bytes/row of its first `sampleLines` lines,
+    * summed. A file with no data line counts 0 rows; an input where no
+    * file has one has no estimate. Buffered reads of ≤ `sampleLines`
+    * lines per file; never fails the conversion. */
   private[graft] def estimateRowsFromBytes(spark: SparkSession, path: String,
                                            sampleLines: Int = 1000): Option[Long] =
     try {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val status = fs.getFileStatus(hp)
-      val (files, totalBytes) =
-        if (status.isDirectory) {
-          val fl = fs.listStatus(hp).filter(s => s.isFile &&
-            graft.sources.GraftDataSource.isDataFile(s.getPath.getName))
-          (fl.map(_.getPath), fl.map(_.getLen).sum)
-        } else (Array(hp), status.getLen)
-      if (files.isEmpty || totalBytes == 0L) None
-      else {
-        // Sample the first file that actually holds data lines: a
-        // header-only (or empty) leading part file must not turn the
-        // whole conversion's denominator into a misleading '/~0'.
-        def sample(p: org.apache.hadoop.fs.Path): Option[(Long, Double)] = {
-          val in = new java.io.BufferedReader(
-            new java.io.InputStreamReader(fs.open(p), "UTF-8"))
-          try {
-            Option(in.readLine()).flatMap { header =>
-              val headerBytes = header.getBytes("UTF-8").length + 1L
-              var n = 0
-              var bytes = 0L
-              var line = in.readLine()
-              while (line != null && n < sampleLines) {
-                bytes += line.getBytes("UTF-8").length + 1L
-                n += 1
-                line = in.readLine()
-              }
-              if (n == 0) None
-              else Some((headerBytes, bytes.toDouble / n))
+      val conf = spark.sparkContext.hadoopConfiguration
+      // (header bytes, mean bytes per data row) of one file's head
+      def sample(st: org.apache.hadoop.fs.FileStatus): Option[(Long, Double)] = {
+        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+          st.getPath.getFileSystem(conf).open(st.getPath), "UTF-8"))
+        try {
+          Option(in.readLine()).flatMap { header =>
+            val headerBytes = header.getBytes("UTF-8").length + 1L
+            var n = 0
+            var bytes = 0L
+            var line = in.readLine()
+            while (line != null && n < sampleLines) {
+              bytes += line.getBytes("UTF-8").length + 1L
+              n += 1
+              line = in.readLine()
             }
-          } finally in.close()
-        }
-        files.iterator.flatMap(p => sample(p).iterator).nextOption().map {
-          case (headerBytes, bytesPerRow) => math.max(0L,
-            ((totalBytes - headerBytes * files.length) / bytesPerRow).toLong)
+            if (n == 0) None
+            else Some((headerBytes, bytes.toDouble / n))
+          }
+        } finally in.close()
+      }
+      val perFile = graft.sources.GraftDataSource.dataFiles(conf, path).flatMap { st =>
+        sample(st).map { case (headerBytes, bytesPerRow) =>
+          math.max(0L, ((st.getLen - headerBytes) / bytesPerRow).toLong)
         }
       }
+      if (perFile.isEmpty) None else Some(perFile.sum)
     } catch { case _: Exception => None }
 
   /** Record count from the parquet footer — metadata-only read. */
@@ -200,43 +193,33 @@ object ConvertMain {
     ticker.start()
     val obs = org.apache.spark.sql.Observation("graft_convert")
     val metrics = try {
-      // Plan: all-string graft scan → [tag + cast + observe] →
-      // single-partition exchange → sort → write. Everything per cell
-      // runs in the parallel scan stage: each row is tagged with its scan
-      // position, every column is cast, and the per-column error counters
-      // ride the same projection via Dataset.observe — the distributed
-      // twin of the reference's inline atomics (analyse.rs:15-23) —
-      // reading the CAST RESULT (null on a non-null non-token input =
-      // genuine failure), so each kernel runs once per cell and the input
-      // is scanned exactly once.
+      // Plan: all-string graft scan → [cast + observe] → parquet write,
+      // ONE parallel stage with no exchange. Every column is cast, and
+      // the per-column error counters ride the same projection via
+      // Dataset.observe — the distributed twin of the reference's inline
+      // atomics (analyse.rs:15-23) — reading the CAST RESULT (null on a
+      // non-null non-token input = genuine failure), so each kernel runs
+      // once per cell and the input is scanned exactly once.
       //
-      // The typed rows then meet in ONE partition, sorted back into input
-      // order (single-file parity with the reference's reorder buffer,
-      // conversion.rs:159-195) by the tag alone: the graft scan plans its
-      // partitions in (file name, offset) order, so partition index then
-      // row position is input order. A single-partition exchange has no
-      // range bounds to sample, so there is no second read of the input;
-      // the one-task tail only sorts and writes.
+      // Each scan split then encodes its own block-bounded row groups,
+      // and the writer appends the parts in task-partition order: the
+      // graft scan plans its partitions in (file name, offset) order, so
+      // that is input order (single-file parity with the reference's
+      // reorder buffer, conversion.rs:159-195, without a one-task tail).
       val castCols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         graft.ingest.CastKernel.castTo(col(f.name), f.dataType,
           IngestPipeline.tsUnitOf(f), IngestPipeline.isUnsigned(f)).as(s"_graft_cast_$i")
       }
-      val projected = raw.select(
-        (monotonically_increasing_id().as("_graft_row") +: schema.fieldNames.map(col)) ++
-          castCols: _*)
+      val projected = raw.select(schema.fieldNames.map(col).toSeq ++ castCols: _*)
       val errExprs = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
         val failed = !graft.ingest.NullTokens.isNullToken(col(f.name)) &&
           col(s"_graft_cast_$i").isNull
         sum(when(failed, 1L).otherwise(0L)).as(s"_err_$i")
       }
-      val counted = projected.observe(obs, count(lit(1)).as("_rows"), errExprs: _*)
-      val typed = counted
-        .select(col("_graft_row") +: schema.fields.toSeq.zipWithIndex.map {
+      val typed = projected.observe(obs, count(lit(1)).as("_rows"), errExprs: _*)
+        .select(schema.fields.toSeq.zipWithIndex.map {
           case (f, i) => col(s"_graft_cast_$i").as(f.name)
         }: _*)
-        .repartition(1)
-        .sortWithinPartitions("_graft_row")
-        .drop("_graft_row")
       IngestPipeline.writeParquetSingleFile(typed, outputPath)
       obs.get
     } finally ticker.stop()

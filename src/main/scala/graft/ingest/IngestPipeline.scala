@@ -1,5 +1,13 @@
 package graft.ingest
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,8 +29,9 @@ import graft.sources.{GraftDataSource, GraftPartitionReader}
   *    set, conversion.rs:197-223). The reference's producer/worker/writer
   *    thread topology, block sizing, reorder buffer and backpressure all
   *    collapse into Spark's scan partitioning + whole-stage codegen;
-  *  - sink: one ZSTD-5 parquet file with block-sized row groups
-  *    (`writeParquetSingleFile`, conversion.rs:159-195).
+  *  - sink: one ZSTD-5 parquet file of per-split, block-bounded row
+  *    groups in split order (`writeParquetSingleFile`: each task encodes
+  *    its own, the driver appends them; conversion.rs:159-195).
   *
   * At 100 TB the same plan holds: the scan splits by Spark's file-source
   * split size (`FilePartition.maxSplitBytes`) and casts are per-partition
@@ -204,25 +213,79 @@ object IngestPipeline {
     "parquet.compression.codec.zstd.level" -> "5",
     "parquet.block.row.count.limit" -> rowGroupRows(nCols).toString)
 
-  /** A single parquet FILE at `out` (not a directory): Spark writes a
-    * one-task directory, then the lone part file is renamed onto the
-    * target path — byte-level layout parity with the reference's
-    * ArrowWriter output (one file, ZSTD-5, block-sized row groups).
-    * The caller supplies already-ordered data (see ConvertMain). */
+  /** A single parquet FILE at `out` (not a directory), holding `df`'s
+    * rows in partition order. Each task encodes its own part file (its
+    * row groups bounded by [[writerOptions]]); the parts' row groups are
+    * then appended into one file by byte copy, in task-partition order
+    * ([[concatParquet]]: no re-encoding, page indexes kept). That is the
+    * order `coalesce(1)` would concatenate partitions in, without
+    * funnelling every row through one task. A lone part file is just
+    * renamed onto the target. Layout parity with the reference's
+    * ArrowWriter output: one file, ZSTD-5, block-bounded row groups. */
   def writeParquetSingleFile(df: DataFrame, out: String): Unit = {
     val tmpDir = out + ".graft-tmp"
-    df.coalesce(1).write.mode("overwrite")
-      .options(writerOptions(df.columns.length)).parquet(tmpDir)
+    df.write.mode("overwrite").options(writerOptions(df.columns.length)).parquet(tmpDir)
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val tmpPath = new org.apache.hadoop.fs.Path(tmpDir)
+    val tmpPath = new Path(tmpDir)
     val fs = tmpPath.getFileSystem(conf)
-    val part = fs.listStatus(tmpPath)
-      .map(_.getPath).filter(_.getName.startsWith("part-"))
-      .ensuring(_.length == 1, "coalesce(1) must produce exactly one part file")
-      .head
-    val target = new org.apache.hadoop.fs.Path(out)
+    val parts = partOrder(
+      fs.listStatus(tmpPath).map(_.getPath).filter(_.getName.startsWith("part-")).toSeq)
+    require(parts.nonEmpty, s"the parquet write to $tmpDir left no part file")
+    val single =
+      if (parts.length == 1) parts.head
+      else {
+        val joined = new Path(tmpPath, "_joined.parquet")
+        concatParquet(parts, joined, conf)
+        joined
+      }
+    val target = new Path(out)
     if (fs.exists(target)) fs.delete(target, false)
-    fs.rename(part, target)
+    fs.rename(single, target)
     fs.delete(tmpPath, true)
+  }
+
+  private val PartName = """part-(\d+)-.*-c(\d+)(?:\..*)?""".r
+
+  /** Spark's part files (`part-<task>-<job uuid>-c<nnn>.<ext>`) in write
+    * order: by numeric task partition id, then by the task's file
+    * counter. Name order would put `part-100000` before `part-99999`. */
+  private[graft] def partOrder(parts: Seq[Path]): Seq[Path] =
+    parts.map { p =>
+      p.getName match {
+        case PartName(task, file) => ((task.toLong, file.toLong), p)
+        case other => throw new IllegalStateException(s"unexpected part file name: $other")
+      }
+    }.sortBy(_._1).map(_._2)
+
+  /** Append every row group of `parts`, in order, into one new parquet
+    * file at `out`: each column chunk is copied as bytes, with its bloom
+    * filter, column index and offset index (the offsets rebased), under
+    * the first part's key-value metadata (Spark's row schema). The parts
+    * must share one parquet schema. */
+  private[graft] def concatParquet(parts: Seq[Path], out: Path, conf: Configuration): Unit = {
+    val inputs = parts.map(HadoopInputFile.fromPath(_, conf))
+    val meta = Using.resource(ParquetFileReader.open(inputs.head))(_.getFooter.getFileMetaData)
+    val schema = meta.getSchema
+    Using.resource(new ParquetFileWriter(HadoopOutputFile.fromPath(out, conf), schema,
+      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE, 0, null,
+      ParquetProperties.builder().build())) { writer =>
+      writer.start()
+      inputs.foreach { in =>
+        Using.resources(ParquetFileReader.open(in), in.newStream()) { (reader, from) =>
+          require(reader.getFooter.getFileMetaData.getSchema == schema,
+            s"part ${in.getPath} has a different parquet schema than ${inputs.head.getPath}")
+          reader.getFooter.getBlocks.asScala.foreach { block =>
+            writer.startBlock(block.getRowCount)
+            block.getColumns.asScala.foreach { chunk =>
+              writer.appendColumnChunk(schema.getColumnDescription(chunk.getPath.toArray),
+                from, chunk, reader.readBloomFilter(chunk), reader.readColumnIndex(chunk),
+                reader.readOffsetIndex(chunk))
+            }
+            writer.endBlock()
+          }
+        }
+      }
+      writer.end(meta.getKeyValueMetaData)
+    }
   }
 }

@@ -41,8 +41,9 @@ final class ProgressTicker(spark: SparkSession, totalRows: Option[Long],
     override def run(): Unit = {
       val history = scala.collection.mutable.ArrayDeque.empty[(Long, Long)]
       var lastPrinted = -1L
-      while (running) {
-        Thread.sleep(tickMillis)
+      // a `stop()` that lands during the sleep interrupts it, and the
+      // re-check after it keeps a line from following the final report
+      while (running && sleepTick() && running) {
         val now = System.currentTimeMillis()
         val pos = rowsRead.get()
         history.append((now, pos))
@@ -64,14 +65,23 @@ final class ProgressTicker(spark: SparkSession, totalRows: Option[Long],
     }
   }
 
+  /** One tick's sleep; false once `stop()` interrupts it. */
+  private def sleepTick(): Boolean =
+    try { Thread.sleep(tickMillis); true }
+    catch { case _: InterruptedException => false }
+
   def start(): Unit = {
     spark.sparkContext.addSparkListener(listener)
     running = true
     ticker.start()
   }
 
+  /** Ends the ticker: once this returns, no further line is printed
+    * and the ticker thread has exited. */
   def stop(): Unit = {
     running = false
+    ticker.interrupt()
+    ticker.join()
     spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -951,11 +951,14 @@ object Similarity {
         .agg(count(lit(1)).as("n"), (dimSums ++ dimGuards): _*)
         .collect() // k rows × dims cells — bounded, scale-invariant
       rows.foreach { r =>
-        val (mind, maxd) = (r.getInt(2 + dims), r.getInt(3 + dims))
-        require(mind == dims && maxd == dims,
+        // a cluster of null vectors has null size bounds: the same
+        // contract failure, not an NPE from getInt
+        def bound(i: Int): Option[Int] = if (r.isNullAt(i)) None else Some(r.getInt(i))
+        val (mind, maxd) = (bound(2 + dims), bound(3 + dims))
+        require(mind.contains(dims) && maxd.contains(dims),
           s"kmeansFit uniform-dims contract: centroid dims = $dims but " +
             s"cluster ${if (r.isNullAt(0)) "null" else r.getLong(0)} " +
-            s"holds vectors sized [$mind, $maxd]")
+            s"holds vectors sized [${mind.getOrElse("null")}, ${maxd.getOrElse("null")}]")
       }
       fitted = rows.toSeq.map { r =>
         val n = r.getLong(1)

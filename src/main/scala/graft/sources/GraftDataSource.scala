@@ -44,11 +44,11 @@ import graft.ingest.{IngestPipeline, ScalarParse}
   *
   * Scale behavior: uncompressed files larger than Spark's file-source
   * split size (`FilePartition.maxSplitBytes`: `maxPartitionBytes`,
-  * `openCostInBytes`, default parallelism) split into byte ranges
-  * aligned to the next newline (Hadoop LineRecordReader convention — see
-  * GraftRangeLineSource), so one giant TSV reads as wide as the
-  * cluster; smaller files are one partition each and a directory of N
-  * part files reads ≥N-wide. gzip members are undividable streams and
+  * `openCostInBytes`, default parallelism) split into Spark's split
+  * count of equal byte ranges, aligned to the next newline (Hadoop
+  * LineRecordReader convention — see GraftRangeLineSource), so one
+  * giant TSV reads as wide as the cluster; smaller files are one
+  * partition each and a directory of N part files reads ≥N-wide. gzip members are undividable streams and
   * honestly stay file-per-partition.
   *
   * Each cell converts through the SAME static kernels the pipeline's
@@ -176,13 +176,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
         val f = st.getPath.toString
         if (f.endsWith(".gz") || st.getLen <= maxBytes)
           Seq(GraftFilePartition(f, full, required, delim, jsonl = jsonl))
-        else {
-          val nSplits = ((st.getLen + maxBytes - 1) / maxBytes).toInt
-          (0 until nSplits).map { i =>
-            val off = i.toLong * maxBytes
-            GraftFilePartition(f, full, required, delim,
-              off, math.min(maxBytes, st.getLen - off), jsonl = jsonl)
-          }
+        else GraftDataSource.balancedRanges(st.getLen, maxBytes).map { case (off, len) =>
+          GraftFilePartition(f, full, required, delim, off, len, jsonl = jsonl)
         }
       }.map(p => p: InputPartition).toArray
     }
@@ -299,6 +294,16 @@ object GraftDataSource {
       else if (glob && !isDataFile(st.getPath.getName)) Nil
       else Seq(st)
     }.sortBy(_.getPath.toString)
+  }
+
+  /** `len` bytes cut into Spark's split count, `ceil(len / maxBytes)`,
+    * of equal (offset, length) ranges: lengths differ by at most one
+    * byte, so no split is a remainder sliver and the slowest task of a
+    * one-stage conversion carries no more than its share. */
+  private[graft] def balancedRanges(len: Long, maxBytes: Long): Seq[(Long, Long)] = {
+    val n = (len + maxBytes - 1) / maxBytes
+    val (base, longer) = (len / n, len % n)
+    (0L until n).map(i => (i * base + math.min(i, longer), base + (if (i < longer) 1L else 0L)))
   }
 
   /** The first non-blank line of the data files, a leading U+FEFF

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.ingest.{IngestPipeline, ProgressTicker}
 import org.apache.spark.sql.functions._
 
@@ -95,6 +97,98 @@ class ConvertMainSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("a split conversion is one parallel stage: a row group per split, in input order") {
+    // every cell kind the writer encodes, a TimestampNTZ column included
+    val fixture = tempDir("graft_cli_split").resolve("typed.tsv")
+    Files.write(fixture, (0 until 6000).map { i =>
+      val day = f"2024-01-${1 + i % 28}%02d"
+      f"$i\tname_$i\t${i * 0.5}\t${i % 2 == 0}\t$day\t$day ${i % 24}%02d:${i % 60}%02d:07"
+    }.mkString("id\tname\tscore\tflag\tday\tts\n", "\n", "\n").getBytes("UTF-8"))
+    // the unsplit conversion: one scan task, so one part file, the
+    // rows of the single-task plan
+    val (out, _, _) = ConvertMain.run(spark,
+      ConvertMain.Options(Some(fixture.toString), fullScan = false), _ => ())
+    val unsplit = spark.read.parquet(out).collect().toSeq
+    Files.delete(Paths.get(out))
+
+    val key = "spark.sql.files.maxPartitionBytes"
+    withSQLConf(key -> (Files.size(fixture) / 5).toString) {
+      val raw = IngestPipeline.readRaw(spark, fixture.toString, '\t')
+      val splitRows = raw.rdd.mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
+      assert(splitRows.length >= 4, s"expected at least 4 scan splits, got ${splitRows.length}")
+      val schema = IngestPipeline.inferSchema(raw, fullScan = false)
+
+      // after the schema line: one job, and no shuffle write in it
+      val phase = "graft.spec.splitConvert"
+      val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val shuffled = new java.util.concurrent.atomic.AtomicLong(0L)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty(phase) != null) {
+            e.stageIds.foreach(stages.add(_))
+            started.add(e.jobId)
+          }
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (stages.contains(e.stageId) && e.taskMetrics != null)
+            shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          if (started.contains(e.jobId)) ended.add(e.jobId)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val (splitOut, rows, _) = try {
+        val r = ConvertMain.run(spark,
+          ConvertMain.Options(Some(fixture.toString), fullScan = false),
+          msg => if (msg.startsWith("[OK] schema detected"))
+            spark.sparkContext.setLocalProperty(phase, "1"))
+        val deadline = System.currentTimeMillis() + 10000
+        while ((started.isEmpty || ended.size < started.size) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+        r
+      } finally {
+        spark.sparkContext.setLocalProperty(phase, null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(rows == 6000L && splitOut == out)
+      assert(started.size == 1 && ended.size == 1, s"jobs after the schema line: $started")
+      assert(shuffled.get() == 0L, s"shuffle bytes written: ${shuffled.get()}")
+
+      val reader = footerOf(splitOut)
+      try {
+        val blocks = reader.getFooter.getBlocks.asScala.toSeq
+        assert(blocks.map(_.getRowCount) == splitRows.filter(_ > 0),
+          "one row group per non-empty split, in split order")
+        assert(blocks.forall(_.getRowCount <= IngestPipeline.rowGroupRows(6)))
+        for (b <- blocks; c <- b.getColumns.asScala) {
+          assert(c.getCodec.toString == "ZSTD", s"${c.getPath}: ${c.getCodec}")
+          assert(reader.readColumnIndex(c) != null, s"${c.getPath}: no column index")
+          assert(reader.readOffsetIndex(c) != null, s"${c.getPath}: no offset index")
+        }
+      } finally reader.close()
+
+      val back = spark.read.parquet(splitOut)
+      assert(back.schema.map(f => f.name -> f.dataType) == schema.map(f => f.name -> f.dataType))
+      assert(back.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+      val got = back.collect().toSeq
+      assert(got == unsplit, "split rows must equal the unsplit conversion's, in order")
+      assert(got.map(_.getLong(0)) == (0L until 6000L), "row order must match the input file")
+    }
+  }
+
+  test("part files append in task order, then file order, not name order") {
+    val names = Seq("part-100000-u-c000.zstd.parquet", "part-00001-u-c001.zstd.parquet",
+      "part-99999-u-c000.zstd.parquet", "part-00001-u-c000.zstd.parquet")
+    val ordered = IngestPipeline.partOrder(names.map(new org.apache.hadoop.fs.Path(_)))
+    assert(ordered.map(_.getName) == Seq("part-00001-u-c000.zstd.parquet",
+      "part-00001-u-c001.zstd.parquet", "part-99999-u-c000.zstd.parquet",
+      "part-100000-u-c000.zstd.parquet"))
+    // a real job id is a UUID, hyphens and hex included
+    val uuid = "part-00002-1c0d2a1e-c001-4a6e-9f3b-c00000000000-c003.snappy.parquet"
+    assert(IngestPipeline.partOrder(Seq(new org.apache.hadoop.fs.Path(uuid)))
+      .map(_.getName) == Seq(uuid))
   }
 
   test("after inference the conversion reads its input exactly once") {
@@ -320,6 +414,32 @@ class ConvertMainSpec extends SparkSpec {
       assert(!msgs.isEmpty, "ticker should emit at least one progress line")
       assert(msgs.peek().startsWith("[PROGRESS]"))
     } finally ticker.stop()
+  }
+
+  test("progress ticker prints nothing after stop() returns") {
+    // each tick moves the position, so every tick prints; a stop that
+    // lands in the sleep must not let one more line through
+    for (_ <- 1 to 10) {
+      val stopped = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val late = new java.util.concurrent.atomic.AtomicInteger(0)
+      val printed = new java.util.concurrent.atomic.AtomicInteger(0)
+      var ticker: ProgressTicker = null
+      ticker = new ProgressTicker(spark, None, _ => {
+        if (stopped.get()) late.incrementAndGet()
+        printed.incrementAndGet()
+        ticker.rowsRead.incrementAndGet()
+      }, tickMillis = 20L)
+      ticker.rowsRead.set(1L)
+      ticker.start()
+      val deadline = System.currentTimeMillis() + 5000
+      while (printed.get() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      Thread.sleep(7)
+      ticker.stop()
+      stopped.set(true)
+      Thread.sleep(60)
+      assert(printed.get() >= 2, "the ticker never printed")
+      assert(late.get() == 0, s"${late.get()} progress line(s) after stop() returned")
+    }
   }
 
   test("e2e: a DIRECTORY of part files converts through the CLI path") {

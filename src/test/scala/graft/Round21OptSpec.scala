@@ -183,6 +183,19 @@ class Round21OptSpec extends SparkSpec {
       s"expected the uniform-dims contract failure, got: ${e.getMessage}")
   }
 
+  test("kmeansFit null-vector guard: a cluster of only null vectors fails " +
+    "the uniform-dims contract instead of throwing an NPE") {
+    import spark.implicits._
+    val withNulls = Seq(
+      (0L, Some(Seq(1.0, 2.0))), (1L, Some(Seq(2.0, 3.0))),
+      (2L, None)).toDF("vec_id", "vec")
+    val e = intercept[IllegalArgumentException] {
+      queries.Similarity.kmeansFit(withNulls, k = 2, iters = 1)
+    }
+    assert(e.getMessage.contains("uniform-dims") && e.getMessage.contains("[null, null]"),
+      s"expected the uniform-dims contract failure, got: ${e.getMessage}")
+  }
+
   test("no-data-batch removal is output-neutral: the streamed tumble " +
     "table still equals the batch hourly aggregation") {
     val streamed = queries.Streaming.queries("q_stream_tumble")(spark, sf)

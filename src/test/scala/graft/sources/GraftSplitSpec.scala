@@ -52,6 +52,27 @@ class GraftSplitSpec extends SparkSpec {
     }
   }
 
+  test("a file cuts into Spark's split count of equal ranges, read in input order") {
+    assert(GraftDataSource.balancedRanges(10, 4) == Seq((0L, 4L), (4L, 3L), (7L, 3L)))
+    assert(GraftDataSource.balancedRanges(8, 4) == Seq((0L, 4L), (4L, 4L)))
+    val unsplit = read().collect().toSeq
+    val size = Files.size(java.nio.file.Paths.get(fixture))
+    withSQLConf("spark.sql.files.maxPartitionBytes" -> "8192") {
+      val df = read()
+      val ranges = df.queryExecution.executedPlan.collectFirst {
+        case scan: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          scan.inputPartitions.map { case p: GraftFilePartition => (p.start, p.length) }
+      }.get
+      // the same count as Spark's remainder-sliver cut, none of them short
+      assert(ranges.length == (size + 8191) / 8192, ranges)
+      val lengths = ranges.map(_._2)
+      assert(lengths.max - lengths.min <= 1, s"unbalanced lengths: $lengths")
+      assert(ranges.head._1 == 0L && lengths.sum == size)
+      ranges.zip(ranges.tail).foreach { case ((s0, l0), (s1, _)) => assert(s0 + l0 == s1) }
+      assert(df.collect().toSeq == unsplit, "split rows must equal the unsplit read, in order")
+    }
+  }
+
   test("split boundaries are stable across arbitrary split sizes (odd offsets)") {
     val unsplit = rows(read())
     // prime-ish sizes land boundaries mid-line in many different spots
