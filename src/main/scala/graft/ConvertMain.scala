@@ -27,7 +27,7 @@ import graft.ingest.{IngestPipeline, ProgressTicker}
   *
   * The output is a single input-ordered parquet FILE (not a directory):
   * single-file parity with the reference's ArrowWriter. Each scan split
-  * casts and encodes its own block-bounded row groups in parallel, and
+  * types and encodes its own block-bounded row groups in parallel, and
   * `IngestPipeline.writeParquetSingleFile` appends them in split order.
   * A distributed 100 TB sink keeps the per-task files instead, with the
   * same `IngestPipeline.writerOptions`.
@@ -81,40 +81,24 @@ object ConvertMain {
     else shown
   }
 
-  /** Progress denominator when exact line-counting isn't cheap (remote
+  /** Progress denominator when exact record-counting isn't cheap (remote
     * FS, directory of part files): per data file, in file-name order
     * ([[graft.sources.GraftDataSource.dataFiles]]), its bytes after the
-    * header ÷ the average bytes/row of its first `sampleLines` lines,
-    * summed. A file with no data line counts 0 rows; an input where no
-    * file has one has no estimate. Buffered reads of ≤ `sampleLines`
-    * lines per file; never fails the conversion. */
+    * header ÷ the average bytes/row of its first `sampleLines` records
+    * (`GraftDataSource.firstLines`), summed. A file with no data record
+    * counts 0 rows; an input where no file has one has no estimate.
+    * Never fails the conversion. */
   private[graft] def estimateRowsFromBytes(spark: SparkSession, path: String,
                                            sampleLines: Int = 1000): Option[Long] =
     try {
       val conf = spark.sparkContext.hadoopConfiguration
-      // (header bytes, mean bytes per data row) of one file's head
-      def sample(st: org.apache.hadoop.fs.FileStatus): Option[(Long, Double)] = {
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          st.getPath.getFileSystem(conf).open(st.getPath), "UTF-8"))
-        try {
-          Option(in.readLine()).flatMap { header =>
-            val headerBytes = header.getBytes("UTF-8").length + 1L
-            var n = 0
-            var bytes = 0L
-            var line = in.readLine()
-            while (line != null && n < sampleLines) {
-              bytes += line.getBytes("UTF-8").length + 1L
-              n += 1
-              line = in.readLine()
-            }
-            if (n == 0) None
-            else Some((headerBytes, bytes.toDouble / n))
-          }
-        } finally in.close()
-      }
+      def bytes(line: String) = line.getBytes("UTF-8").length + 1L
       val perFile = graft.sources.GraftDataSource.dataFiles(conf, path).flatMap { st =>
-        sample(st).map { case (headerBytes, bytesPerRow) =>
-          math.max(0L, ((st.getLen - headerBytes) / bytesPerRow).toLong)
+        graft.sources.GraftDataSource.firstLines(conf, st.getPath.toString, sampleLines + 1) match {
+          case header +: rows if rows.nonEmpty =>
+            val perRow = rows.map(bytes).sum.toDouble / rows.length
+            Some(math.max(0L, ((st.getLen - bytes(header)) / perRow).toLong))
+          case _ => None
         }
       }
       if (perFile.isEmpty) None else Some(perFile.sum)
@@ -160,66 +144,57 @@ object ConvertMain {
     }
   }
 
+  /** The progress denominator, as the reference pre-counts lines for its
+    * progress bar (conversion.rs:66): a local regular file's data records
+    * (through the reader's decompression and record rule), else — a
+    * directory of parts, an HDFS/S3 object — a bytes-derived estimate,
+    * marked approximate ("/~N"). */
+  private[graft] def progressTotal(spark: SparkSession, inputPath: String,
+                                   isJsonl: Boolean): (Option[Long], Boolean) = {
+    val p = Paths.get(inputPath)
+    if (Files.isRegularFile(p)) {
+      val records = scala.util.Using.resource(new java.io.BufferedReader(
+        new java.io.InputStreamReader(graft.sources.GraftPartitionReader
+          .maybeDecompress(inputPath, Files.newInputStream(p)), "UTF-8")))(
+        _.lines().filter(graft.sources.GraftDataSource.isRecord(_)).count())
+      (Some(if (isJsonl) records else records - 1), false)
+    } else (estimateRowsFromBytes(spark, inputPath), true)
+  }
+
   private def convert(spark: SparkSession, inputPath: String, outputPath: String,
                       fullScan: Boolean, err: String => Unit): (String, Long, Long) = {
     val t0 = System.nanoTime()
     // Format routing (beyond the reference, which is delimited-only; see
-    // readRawAny): everything downstream — inference, fused cast+observe
-    // projection, ordered single-file sink, error accounting — is
-    // format-agnostic over the all-string frame.
+    // readRawAny): inference samples the all-string frame, and the typed
+    // graft read below routes the same way.
     val (raw, isJsonl) = IngestPipeline.readRawAny(spark, inputPath, fullScan)
     val schema = IngestPipeline.inferSchema(raw, fullScan)
     err(s"[OK] schema detected: ${schema.fields.length} columns")
     err(s"[CONF] row-group block = ${IngestPipeline.rowGroupRows(schema.fields.length)} rows")
 
-    // the reference pre-counts lines for its progress bar total
-    // (conversion.rs:66). Local regular file: exact line count. Anything
-    // else (directory of parts, HDFS/S3 object): estimate from input
-    // bytes ÷ sampled bytes-per-row, so the ticker still shows progress
-    // against a denominator everywhere — marked approximate ("/~N").
-    val (totalRows, approxTotal) = {
-      val p = Paths.get(inputPath)
-      if (Files.isRegularFile(p)) {
-        // counted through the reader's decompression (a .gz counts its
-        // text); JSONL has no header line to discount
-        val lines = scala.util.Using.resource(new java.io.BufferedReader(
-          new java.io.InputStreamReader(graft.sources.GraftPartitionReader
-            .maybeDecompress(inputPath, Files.newInputStream(p)), "UTF-8")))(_.lines().count())
-        (Some(if (isJsonl) lines else lines - 1), false)
-      } else (estimateRowsFromBytes(spark, inputPath), true)
-    }
-
+    val (totalRows, approxTotal) = progressTotal(spark, inputPath, isJsonl)
     val ticker = new ProgressTicker(spark, totalRows, err, approxTotal = approxTotal)
     ticker.start()
     val obs = org.apache.spark.sql.Observation("graft_convert")
     val metrics = try {
-      // Plan: all-string graft scan → [cast + observe] → parquet write,
-      // ONE parallel stage with no exchange. Every column is cast, and
-      // the per-column error counters ride the same projection via
-      // Dataset.observe — the distributed twin of the reference's inline
-      // atomics (analyse.rs:15-23) — reading the CAST RESULT (null on a
-      // non-null non-token input = genuine failure), so each kernel runs
-      // once per cell and the input is scanned exactly once.
+      // Plan: typed graft scan with its `_graft_failed` column → observe
+      // → parquet write, ONE parallel stage with no exchange, the input
+      // scanned exactly once. Each column's error counter counts the rows
+      // whose failure column holds its position (the reference's inline
+      // atomics, analyse.rs:15-23).
       //
       // Each scan split then encodes its own block-bounded row groups,
       // and the writer appends the parts in task-partition order: the
       // graft scan plans its partitions in (file name, offset) order, so
       // that is input order (single-file parity with the reference's
       // reorder buffer, conversion.rs:159-195, without a one-task tail).
-      val castCols = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        graft.ingest.CastKernel.castTo(col(f.name), f.dataType,
-          IngestPipeline.tsUnitOf(f), IngestPipeline.isUnsigned(f)).as(s"_graft_cast_$i")
-      }
-      val projected = raw.select(schema.fieldNames.map(col).toSeq ++ castCols: _*)
-      val errExprs = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        val failed = !graft.ingest.NullTokens.isNullToken(col(f.name)) &&
-          col(s"_graft_cast_$i").isNull
-        sum(when(failed, 1L).otherwise(0L)).as(s"_err_$i")
-      }
-      val typed = projected.observe(obs, count(lit(1)).as("_rows"), errExprs: _*)
-        .select(schema.fields.toSeq.zipWithIndex.map {
-          case (f, i) => col(s"_graft_cast_$i").as(f.name)
-        }: _*)
+      val failed = col(graft.sources.GraftDataSource.FailedField.name)
+      val errExprs =
+        schema.fields.indices.map(i => count_if(array_contains(failed, i)).as(s"_err_$i"))
+      val typed = spark.read.format("graft").schema(schema).load(inputPath)
+        .select(col("*"), failed)
+        .observe(obs, count(lit(1)).as("_rows"), errExprs: _*)
+        .drop(failed)
       IngestPipeline.writeParquetSingleFile(typed, outputPath)
       obs.get
     } finally ticker.stop()

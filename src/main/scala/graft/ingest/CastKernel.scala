@@ -1,24 +1,21 @@
 package graft.ingest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, If, Literal}
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.{CellBool, CellDate, CellDouble, CellLong, CellTimestamp, CellU64Decimal}
+import graft.functions.{CellBool, CellDate, CellDouble, CellLong, CellTimestamp, CellU64Decimal, IsNullToken}
 
 /** The reference's typed cast kernels (§1.4, reference analyse.rs:
-  * 108-313) as Column expressions over an all-string scan, one per
-  * inferred type. Each is one static call into
-  * [[graft.functions.CellParse]], the one implementation of the typed
-  * build's per-cell semantics, so the CLI, `applySchema`,
-  * `convertStream`, the JSONL route and the `format("graft")` reader
-  * agree cell for cell. Invalid values become NULL, never errors —
-  * explicitly try-semantics, so the plan behaves identically whether
-  * the session runs ANSI on or off — and a null token is null in every
-  * type. Everything stays inside whole-stage codegen (no UDFs).
+  * 108-313), one per inferred type, and [[castTo]], the typed build's one
+  * per-type dispatch: the `format("graft")` reader evaluates it over each
+  * row of tokens, `applySchema` over an all-string frame. Each kernel is
+  * one static call into [[graft.functions.CellParse]]. Invalid values
+  * become NULL, never errors — try-semantics, so the plan behaves the
+  * same with ANSI on or off — and a null token is null in every type.
+  * Everything stays inside whole-stage codegen (no UDFs).
   */
 object CastKernel {
 
@@ -54,26 +51,27 @@ object CastKernel {
   def toTimestamp(c: Column, unit: ScalarParse.TsUnit = ScalarParse.TsMilli): Column =
     cell(c)(CellTimestamp(_, seconds = unit == ScalarParse.TsSecond))
 
-  /** Utf8/LargeUtf8: identity modulo null tokens (analyse.rs:252-274). */
-  def toStringCol(c: Column): Column = NullTokens.normalize(c)
+  /** Utf8/LargeUtf8: the raw, untrimmed cell, a null token null
+    * (analyse.rs:252-274). */
+  def toStringCol(c: Column): Column = cell(c)(e => If(IsNullToken(e), Literal(null, StringType), e))
 
-  /** Binary/LargeBinary: UTF-8 bytes of the string (analyse.rs:276-298). */
-  def toBinary(c: Column): Column = NullTokens.normalize(c).cast(BinaryType)
-
-  /** Cast an all-string column to the inferred Spark type. `unsigned`
-    * (from the `graft.unsigned` field metadata) routes LongType through
-    * the u64 kernel, which nulls negatives like the reference. */
-  def castTo(c: Column, dt: DataType, tsUnit: ScalarParse.TsUnit = ScalarParse.TsMilli,
-             unsigned: Boolean = false): Column =
-    dt match {
+  /** Cast an all-string column to field `f`'s type, one of the types
+    * inference produces; any other type is an IllegalArgumentException
+    * naming the column. `graft.unsigned` metadata routes bigint through
+    * the u64 kernel (negatives null, like the reference), and
+    * `graft.timestampUnit` sets the timestamp unit. */
+  def castTo(c: Column, f: StructField): Column =
+    f.dataType match {
+      case StringType => toStringCol(c)
       case BooleanType => toBoolean(c)
-      case LongType if unsigned => toUnsignedLong(c)
+      case LongType if IngestPipeline.isUnsigned(f) => toUnsignedLong(c)
       case LongType => toLong(c)
-      case d: DecimalType if d.scale == 0 => toUnsignedDecimal(c)
+      case d: DecimalType if d.precision == 20 && d.scale == 0 => toUnsignedDecimal(c)
       case DoubleType => toDouble(c)
       case DateType => toDate(c)
-      case TimestampNTZType | TimestampType => toTimestamp(c, tsUnit)
-      case BinaryType => toBinary(c)
-      case _ => toStringCol(c)
+      case TimestampNTZType => toTimestamp(c, IngestPipeline.tsUnitOf(f))
+      case other => throw new IllegalArgumentException(
+        s"column '${f.name}' has type ${other.catalogString}, which graft cannot type: " +
+          "use string, boolean, bigint, decimal(20,0), double, date or timestamp_ntz")
     }
 }

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,19 +23,21 @@ import graft.sources.{GraftDataSource, GraftPartitionReader}
   *    (schema.rs:11) via `limit(n).collect` (tiny, exact), or a
   *    distributed per-partition stats fold for full-file mode — the
   *    stats monoid is exactly Spark's partial+final aggregation shape;
-  *  - conversion: ONE all-string `format("graft")` scan + a `select` of
-  *    codegen'd cast expressions (CastKernel). The graft tokenizer is the
-  *    only text parser on the ingest path (the reference's one parser
-  *    set, conversion.rs:197-223). The reference's producer/worker/writer
+  *  - conversion: ONE typed `format("graft")` scan with the inferred
+  *    schema: the reader tokenizes each line and types its cells through
+  *    `CastKernel.castTo` (the reference's typed builders,
+  *    analyse.rs:108-313). The graft tokenizer is the only text parser
+  *    on the ingest path (the reference's one parser set,
+  *    conversion.rs:197-223). The reference's producer/worker/writer
   *    thread topology, block sizing, reorder buffer and backpressure all
-  *    collapse into Spark's scan partitioning + whole-stage codegen;
+  *    collapse into Spark's scan partitioning;
   *  - sink: one ZSTD-5 parquet file of per-split, block-bounded row
   *    groups in split order (`writeParquetSingleFile`: each task encodes
   *    its own, the driver appends them; conversion.rs:159-195).
   *
   * At 100 TB the same plan holds: the scan splits by Spark's file-source
-  * split size (`FilePartition.maxSplitBytes`) and casts are per-partition
-  * codegen'd projections (no shuffle anywhere). A distributed sink is
+  * split size (`FilePartition.maxSplitBytes`) and each split types its
+  * own rows (no shuffle anywhere). A distributed sink is
   * a plain `df.write.options(writerOptions(n)).parquet(dir)`: one file
   * per task instead of the reference's single ordered file (its BTreeMap
   * reorder buffer is a single-writer artifact; order-insensitive
@@ -158,27 +160,26 @@ object IngestPipeline {
       }
     else ScalarParse.TsMilli
 
-  /** O10/O11: typed conversion — one projection of cast expressions. */
-  def applySchema(raw: DataFrame, schema: StructType): DataFrame = {
-    val casts: Seq[Column] = schema.fields.toSeq.map { f =>
-      CastKernel.castTo(col(f.name), f.dataType, tsUnitOf(f), isUnsigned(f)).as(f.name)
-    }
-    raw.select(casts: _*)
-  }
+  /** O10/O11 over an already-read all-string frame: one projection of
+    * `CastKernel.castTo` Column casts. The ingest reads type inside the
+    * graft reader instead; this form serves frames from elsewhere. */
+  def applySchema(raw: DataFrame, schema: StructType): DataFrame =
+    raw.select(schema.fields.toSeq.map(f => CastKernel.castTo(col(f.name), f).as(f.name)): _*)
 
-  /** Full pipeline: delimited text file → typed DataFrame. */
+  /** Full pipeline: delimited text file → typed DataFrame, one typed
+    * graft read with the inferred schema. */
   def convert(spark: SparkSession, path: String, fullScan: Boolean = false,
               delimiter: Option[Char] = None): DataFrame = {
     val d = delimiter.getOrElse(detectDelimiter(spark, path))
-    val raw = readRaw(spark, path, d)
-    applySchema(raw, inferSchema(raw, fullScan))
+    spark.read.format("graft").option("sep", d.toString)
+      .schema(inferSchema(readRaw(spark, path, d), fullScan)).load(path)
   }
 
   /** Streaming form of the pipeline (beyond the reference, which fully
     * buffers even stdin — main.rs:102-120): schema is inferred ONCE from
     * the files already present (streams can't be sampled retroactively),
-    * then new files arriving in the directory flow through the same cast
-    * kernels continuously. Pair with `writeStream.format("parquet")` +
+    * then new files arriving in the directory flow through the same typed
+    * graft reader continuously. Pair with `writeStream.format("parquet")` +
     * checkpointing for an incremental tabular→parquet ingest service.
     *
     * RESTART CONTRACT: pass the first run's `schema` when resuming from
@@ -193,8 +194,7 @@ object IngestPipeline {
                     schema: Option[StructType] = None): DataFrame = {
     val d = delimiter.getOrElse(detectDelimiter(spark, path))
     val pinned = schema.getOrElse(inferSchema(readRaw(spark, path, d), fullScan = false))
-    applySchema(spark.readStream.format("graft").option("sep", d.toString)
-      .schema(allString(pinned.fieldNames.toSeq)).load(path), pinned)
+    spark.readStream.format("graft").option("sep", d.toString).schema(pinned).load(path)
   }
 
   /** O9: the reference's adaptive block sizing (conversion.rs:52-58) —

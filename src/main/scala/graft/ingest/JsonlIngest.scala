@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.GraftDataSource
 
-/** JSON-lines ingest through the SAME inference ladder and cast kernels
+/** JSON-lines ingest through the SAME inference ladder and typed reader
   * as the delimited-text pipeline — the modern "tabular" a training-data
   * pipeline actually receives. The reference converts only delimited
   * text (/root/reference/src/conversion.rs); this extends its contract
@@ -17,22 +17,21 @@ import graft.sources.GraftDataSource
   *    come from the first-seen order of top-level keys across a bounded
   *    sample of lines (the reference's header read is the 1-line
   *    degenerate case of this);
-  *  - every top-level value is captured as its RAW TOKEN TEXT into an
-  *    all-string frame (numbers keep their literal spelling, nested
-  *    objects/arrays keep their JSON text), so the type-decision ladder
-  *    (O3–O5) and cast kernels (O11) apply verbatim — a `"123"` string
-  *    and a `123` number land in the same Int64 column exactly as the
-  *    reference's CSV cells would;
+  *  - every top-level value is captured as its RAW TOKEN TEXT (numbers
+  *    keep their literal spelling, nested objects/arrays keep their JSON
+  *    text), so the type-decision ladder (O3–O5) and cast kernels (O11)
+  *    apply verbatim — a `"123"` string and a `123` number land in the
+  *    same Int64 column exactly as the reference's CSV cells would;
   *  - malformed lines null-pad instead of aborting (PERMISSIVE parity
   *    with the reference's analyse.rs:41-106 row handling);
   *  - missing keys are nulls, like the reference's short-row padding.
   *
-  * Scale: the sample collect is bounded (1,000 lines, like
-  * MAX_LIGNES_INFERENCE, schema.rs:11); the conversion itself is one
-  * all-string `format("graft")` scan (the JSON half of the one ingest
-  * tokenizer, byte-range splits like the delimited path) + one
-  * codegen'd cast projection — no shuffle anywhere, the same no-shuffle
-  * shape as the delimited path.
+  * Scale: key discovery reads at most 1,000 lines on the driver and the
+  * inference sample is bounded the same way (MAX_LIGNES_INFERENCE,
+  * schema.rs:11); the conversion itself is one typed `format("graft")`
+  * scan (the JSON half of the one ingest tokenizer, byte-range splits
+  * like the delimited path) — no shuffle anywhere, the same shape as
+  * the delimited path.
   */
 object JsonlIngest {
 
@@ -44,18 +43,10 @@ object JsonlIngest {
       val p = new JsonFactory().createParser(line)
       try {
         if (p.nextToken() == JsonToken.START_OBJECT) {
-          var depth = 1
-          var t = p.nextToken()
-          while (t != null && depth > 0) {
-            t match {
-              case JsonToken.FIELD_NAME if depth == 1 =>
-                val k = p.currentName()
-                if (!out.contains(k)) out += k
-              case JsonToken.START_OBJECT | JsonToken.START_ARRAY => depth += 1
-              case JsonToken.END_OBJECT | JsonToken.END_ARRAY => depth -= 1
-              case _ =>
-            }
-            t = if (depth > 0) p.nextToken() else null
+          while (p.nextToken() == JsonToken.FIELD_NAME) {
+            if (!out.contains(p.currentName())) out += p.currentName()
+            p.nextToken()
+            p.skipChildren() // a nested value's keys are not columns
           }
         }
       } finally p.close()
@@ -66,12 +57,14 @@ object JsonlIngest {
   /** Key discovery over a bounded sample of lines: union of top-level
     * keys in first-seen order (first line's order wins for shared keys,
     * later lines append their novel keys) — the JSONL analogue of the
-    * reference's header-row read. Driver-side by construction: the
-    * sample is capped like the inference sample. */
+    * reference's header-row read. The sample is the first `sampleRows`
+    * record lines in file-name order (`GraftDataSource.firstLines`), the
+    * lines format routing and the reader see first: one driver read, no
+    * Spark job. */
   def discoverKeys(spark: SparkSession, path: String, sampleRows: Int = 1000): Seq[String] = {
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    spark.read.text(path).limit(sampleRows).collect()
-      .foreach(r => topLevelKeys(r.getString(0)).foreach(seen += _))
+    GraftDataSource.firstLines(spark.sessionState.newHadoopConf(), path, sampleRows)
+      .foreach(topLevelKeys(_).foreach(seen += _))
     require(seen.nonEmpty, s"no JSON object keys found in the first $sampleRows lines of $path")
     seen.toSeq
   }
@@ -103,16 +96,17 @@ object JsonlIngest {
     spark.read.format("graft").schema(IngestPipeline.allString(keys)).load(path)
 
   /** Full pipeline: JSONL file/directory → typed DataFrame, typing rules
-    * identical to `IngestPipeline.convert`. `fullScan` widens BOTH
-    * halves of inference, like the reference's flag: type decisions see
-    * every line, and key discovery sees every line's keys. */
+    * identical to `IngestPipeline.convert`: one typed graft read with the
+    * inferred schema. `fullScan` widens BOTH halves of inference, like
+    * the reference's flag: type decisions see every line, and key
+    * discovery sees every line's keys. */
   def convert(spark: SparkSession, path: String, fullScan: Boolean = false,
               sampleRows: Int = 1000): DataFrame = {
     val keys =
       if (fullScan) discoverKeysFull(spark, path, sampleRows)
       else discoverKeys(spark, path, sampleRows)
-    val raw = readRaw(spark, path, keys)
-    IngestPipeline.applySchema(raw, IngestPipeline.inferSchema(raw, fullScan))
+    spark.read.format("graft")
+      .schema(IngestPipeline.inferSchema(readRaw(spark, path, keys), fullScan)).load(path)
   }
 
   /** Content sniff for the CLI's and the graft source's format routing:
@@ -126,10 +120,9 @@ object JsonlIngest {
 
   /** Streaming form, mirroring `IngestPipeline.convertStream`: keys and
     * types pin ONCE from the files already present, then new files flow
-    * through the same graft JSON tokenizer + cast projection
-    * continuously. The same RESTART CONTRACT applies — pass the first
-    * run's schema when resuming from a checkpoint (see convertStream's
-    * scaladoc). */
+    * through the same typed graft reader continuously. The same RESTART
+    * CONTRACT applies — pass the first run's schema when resuming from a
+    * checkpoint (see convertStream's scaladoc). */
   def convertStream(spark: SparkSession, path: String,
                     schema: Option[StructType] = None,
                     sampleRows: Int = 1000): DataFrame = {
@@ -137,8 +130,6 @@ object JsonlIngest {
       val keys = discoverKeys(spark, path, sampleRows)
       IngestPipeline.inferSchema(readRaw(spark, path, keys), fullScan = false)
     }
-    val rawStream = spark.readStream.format("graft")
-      .schema(IngestPipeline.allString(pinned.fieldNames.toSeq)).load(path)
-    IngestPipeline.applySchema(rawStream, pinned)
+    spark.readStream.format("graft").schema(pinned).load(path)
   }
 }

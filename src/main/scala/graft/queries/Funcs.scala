@@ -113,7 +113,7 @@ object Funcs {
     Tables.lineitem(s, dir).orderBy("l_orderkey", "l_linenumber").select(
       col("l_orderkey"), col("l_linenumber"),
       rawTokenCol.as("raw"),
-      NullTokens.normalize(rawTokenCol).as("normalized"))
+      CastKernel.toStringCol(rawTokenCol).as("normalized"))
 
   private val qNullNormalizeOracle =
     s"""SELECT l_orderkey, l_linenumber, $rawTokenSql AS raw,

@@ -8,8 +8,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -17,18 +17,21 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionDirectory}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.CellParse
-import graft.ingest.{IngestPipeline, ScalarParse}
+import graft.ingest.{CastKernel, IngestPipeline}
 
 /** `spark.read.format("graft").load(path)` — the conversion pipeline as
   * a first-class DataSourceV2 source: delimiter detection + reference
   * schema inference happen at planning time (TableProvider.inferSchema),
   * and the typed conversion happens inside the source's partition
   * readers, so a user gets reference-typed rows from ONE read with no
-  * intermediate all-string frame.
+  * intermediate all-string frame. A user schema (`.schema(...)`) may use
+  * exactly the types inference produces; any other type fails at scan
+  * planning, naming the column.
   *
   * The scan is a plain typed scan. It takes column pruning
   * (SupportsPushDownRequiredColumns: unprojected columns are never
@@ -36,11 +39,12 @@ import graft.ingest.{IngestPipeline, ScalarParse}
   * small graft read can broadcast). Filters, limits, top-N and
   * aggregates are Spark's own operators above it.
   *
-  * It is the one tokenizer of the ingest path: the all-string reads,
-  * the streams and the CLI all read through it. A path (file, directory
-  * or glob) is listed by [[GraftDataSource.dataFiles]]; a line empty
-  * after `String.trim` is not a record, each delimited file's first
-  * non-blank line is its header, and a file's leading U+FEFF is dropped.
+  * It is the one tokenizer and the one typed build of the ingest path:
+  * the all-string reads, the typed reads, the streams and the CLI all
+  * read through it. A path (file, directory or glob) is listed by
+  * [[GraftDataSource.dataFiles]]; a line empty after `String.trim` is not
+  * a record, each delimited file's first non-blank line is its header,
+  * and a file's leading U+FEFF is dropped.
   *
   * Scale behavior: uncompressed files larger than Spark's file-source
   * split size (`FilePartition.maxSplitBytes`: `maxPartitionBytes`,
@@ -51,12 +55,18 @@ import graft.ingest.{IngestPipeline, ScalarParse}
   * partition each and a directory of N part files reads ≥N-wide. gzip members are undividable streams and
   * honestly stay file-per-partition.
   *
-  * Each cell converts through the SAME static kernels the pipeline's
-  * cast expressions call ([[graft.functions.CellParse]]: null tokens,
-  * the one trim rule, s-unit truncation, u64 policy), called on the
-  * token's `UTF8String` — GraftSourceSpec pins row-for-row equality
-  * against `IngestPipeline.convert`, and IngestPathsSpec pins the
-  * reader, the CLI, the stream and the JSONL route against each other.
+  * Each row of tokens types through `CastKernel.castTo` of every read
+  * field, evaluated as one `UnsafeProjection` (null tokens, the one trim
+  * rule, s-unit truncation and the u64 policy all live in
+  * [[graft.functions.CellParse]]); IngestPathsSpec pins the reader, the
+  * CLI, the stream and the JSONL route against each other.
+  *
+  * One metadata column, `_graft_failed: array<int>`, holds the schema
+  * positions of the row's cells that were present, were not a null
+  * token and failed their cast; it is null when there are none (the
+  * reference's per-column error atomics, analyse.rs:15-23, as a per-row
+  * column Spark counts, like `_corrupt_record`). Only a query that
+  * selects it pays for it, and such a scan types every field.
   *
   * Options: `sep` (override detection), `fullScan` (full-file
   * inference).
@@ -85,12 +95,13 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
   override def supportsExternalMetadata(): Boolean = true
 
   private class GraftTable(schema: StructType, options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead with SupportsWrite {
+    extends Table with SupportsRead with SupportsWrite with SupportsMetadataColumns {
     override def name(): String = s"graft(${pathOf(options)})"
     override def schema(): StructType = schema
     override def capabilities(): util.Set[TableCapability] =
       Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
         TableCapability.BATCH_WRITE, TableCapability.TRUNCATE).asJava
+    override def metadataColumns(): Array[MetadataColumn] = Array(GraftDataSource.FailedColumn)
     override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder = {
       val spark = SparkSession.active
       val path = pathOf(options)
@@ -145,18 +156,31 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
       with Scan with Batch
       with SupportsReportStatistics {
 
+    // the typed build, planned here on the driver: an unsupported field
+    // type fails scan planning
+    private val casts = GraftDataSource.castExprs(full)
     private var required: StructType = full
+    private var failed = false
 
-    override def pruneColumns(requiredSchema: StructType): Unit =
-      // preserve our field metadata (ts unit / unsigned): prune by name
-      required = StructType(requiredSchema.fieldNames.flatMap(n =>
+    override def pruneColumns(requiredSchema: StructType): Unit = {
+      failed = requiredSchema.fieldNames.contains(GraftDataSource.FailedField.name) &&
+        !full.fieldNames.contains(GraftDataSource.FailedField.name)
+      // preserve our field metadata (ts unit / unsigned): prune by name;
+      // the failure column covers the whole row, so a scan reading it
+      // types and returns every field
+      required = if (failed) full else StructType(requiredSchema.fieldNames.flatMap(n =>
         full.fields.find(_.name == n)))
+    }
 
     override def build(): Scan = this
-    override def readSchema(): StructType = required
+    override def readSchema(): StructType =
+      if (failed) required.add(GraftDataSource.FailedField) else required
     override def toBatch: Batch = this
     override def description(): String =
-      s"graft $path sep='$delim' ReadSchema: ${required.catalogString}"
+      s"graft $path sep='$delim' ReadSchema: ${readSchema().catalogString}"
+
+    private def split(file: String, start: Long = 0L, length: Long = -1L): InputPartition =
+      GraftFilePartition(file, full, required, delim, start, length, jsonl, casts, failed)
 
     override def planInputPartitions(): Array[InputPartition] = {
       val spark = SparkSession.active
@@ -174,12 +198,11 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
         Seq(PartitionDirectory(InternalRow.empty, statuses.toArray)))
       statuses.flatMap { st =>
         val f = st.getPath.toString
-        if (f.endsWith(".gz") || st.getLen <= maxBytes)
-          Seq(GraftFilePartition(f, full, required, delim, jsonl = jsonl))
+        if (f.endsWith(".gz") || st.getLen <= maxBytes) Seq(split(f))
         else GraftDataSource.balancedRanges(st.getLen, maxBytes).map { case (off, len) =>
-          GraftFilePartition(f, full, required, delim, off, len, jsonl = jsonl)
+          split(f, off, len)
         }
-      }.map(p => p: InputPartition).toArray
+      }.toArray
     }
 
     /** Input-byte statistics from the filesystem (a metadata-only
@@ -215,9 +238,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
       * file-source contract; writers should stage+rename like
       * Streaming.runTwoBatchFeed does). */
     override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new GraftMicroBatchStream(path, full, required, delim,
-        new org.apache.spark.util.SerializableConfiguration(
-          SparkSession.active.sessionState.newHadoopConf()), jsonl)
+      new GraftMicroBatchStream(path, split(_), new org.apache.spark.util.SerializableConfiguration(
+        SparkSession.active.sessionState.newHadoopConf()))
   }
 }
 
@@ -238,10 +260,8 @@ private[sources] object GraftFilesOffset {
     GraftFilesOffset(mapper.readValue(json, classOf[Array[String]]).toSeq)
 }
 
-private class GraftMicroBatchStream(path: String, full: StructType,
-    required: StructType, delim: Char,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    jsonl: Boolean = false)
+private class GraftMicroBatchStream(path: String, split: String => InputPartition,
+    conf: org.apache.spark.util.SerializableConfiguration)
   extends MicroBatchStream {
 
   private def listFiles(): Seq[String] =
@@ -255,10 +275,7 @@ private class GraftMicroBatchStream(path: String, full: StructType,
   override def planInputPartitions(start: streaming.Offset,
                                    end: streaming.Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[GraftFilesOffset].files.toSet
-    end.asInstanceOf[GraftFilesOffset].files.filterNot(seen)
-      .map(f => GraftFilePartition(f, full, required, delim,
-        jsonl = jsonl): InputPartition)
-      .toArray
+    end.asInstanceOf[GraftFilesOffset].files.filterNot(seen).map(split).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -306,19 +323,51 @@ object GraftDataSource {
     (0L until n).map(i => (i * base + math.min(i, longer), base + (if (i < longer) 1L else 0L)))
   }
 
-  /** The first non-blank line of the data files, a leading U+FEFF
-    * dropped: a delimited input's header and every input's format and
-    * delimiter probe. One buffered driver read, not a Spark job; an input
-    * with no data file or no such line fails naming the path. */
-  def firstLine(conf: Configuration, path: String): String = {
+  /** The first `n` record lines of the data files, in file-name order,
+    * under the reader's record rules ([[isRecord]], a file's leading
+    * U+FEFF dropped): the JSONL key sample. Buffered driver reads, not a
+    * Spark job; an input with no data file fails naming the path. */
+  def firstLines(conf: Configuration, path: String, n: Int): Seq[String] = {
     val files = dataFiles(conf, path)
     require(files.nonEmpty, s"no data file at $path")
-    files.iterator.map { st =>
-      val in = GraftLineSource.open(st.getPath.getFileSystem(conf), st.getPath.toString)
-      try in.nextLine() finally in.close()
-    }.find(_ != null).getOrElse(
-      throw new IllegalArgumentException(s"no data line in $path"))
+    files.foldLeft(Vector.empty[String]) { (lines, st) =>
+      if (lines.length >= n) lines
+      else {
+        val in = GraftLineSource.open(st.getPath.getFileSystem(conf), st.getPath.toString)
+        try lines ++ Iterator.continually(in.nextLine()).takeWhile(_ != null).take(n - lines.length)
+        finally in.close()
+      }
+    }
   }
+
+  /** The first record line: a delimited input's header and every input's
+    * format and delimiter probe. An input with no such line fails naming
+    * the path. */
+  def firstLine(conf: Configuration, path: String): String =
+    firstLines(conf, path, 1).headOption.getOrElse(
+      throw new IllegalArgumentException(s"no data line in $path"))
+
+  /** A line is a record unless it is empty after `String.trim` (Spark's
+    * CSV source skips the same lines). */
+  def isRecord(line: String): Boolean = !line.forall(_ <= ' ')
+
+  /** The `_graft_failed` metadata column (see the class doc). */
+  val FailedField: StructField =
+    StructField("_graft_failed", ArrayType(IntegerType, containsNull = false))
+
+  private[sources] object FailedColumn extends MetadataColumn {
+    override def name(): String = FailedField.name
+    override def dataType(): DataType = FailedField.dataType
+  }
+
+  /** The typed build of `full`'s rows: per field, `CastKernel.castTo`
+    * over its token, the string at the field's position in a row of
+    * tokens. Throws on a type `castTo` does not take. */
+  private[sources] def castExprs(full: StructType): Seq[Expression] =
+    full.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      ColumnBridge.expression(CastKernel.castTo(
+        ColumnBridge.column(BoundReference(i, StringType, nullable = true)), f))
+    }
 
   /** The `sep` option must be exactly one character — silently taking
     * `head` would read a literally-typed "\\t" as '\\'. */
@@ -330,18 +379,19 @@ object GraftDataSource {
     }
 }
 
-/** Serializable per-file split: the FULL inferred schema (for token
-  * positions), the pruned schema to emit, the delimiter, and the byte
-  * range (`length` -1 = to EOF). */
+/** Serializable per-file split: the FULL schema (for token positions),
+  * the pruned schema to emit, the delimiter, the byte range (`length` -1
+  * = to EOF), the typed build of the full schema ([[GraftDataSource.castExprs]])
+  * and whether to append the failure column. */
 case class GraftFilePartition(file: String, full: StructType,
                               required: StructType, delim: Char,
-                              start: Long = 0L,
-                              length: Long = -1L,
-                              jsonl: Boolean = false)
+                              start: Long, length: Long, jsonl: Boolean,
+                              casts: Seq[Expression], failed: Boolean)
   extends InputPartition
 
-/** Line reader + per-value conversion through the reference kernels:
-  * one row per line, and only the pruned columns are converted.
+/** Line reader + typed build: one row per record line, and only the
+  * pruned columns are typed (every column when the failure column is
+  * read).
   *
   * `hadoopConf` arrives from the driver via the reader factory's
   * SerializableConfiguration (Configuration itself isn't
@@ -362,60 +412,52 @@ class GraftPartitionReader(p: GraftFilePartition, hadoopConf: Configuration)
   private val jsonIdx: Map[String, Int] =
     if (p.jsonl) p.full.fieldNames.zipWithIndex.toMap else Map.empty
 
-  // pruned field -> (token position in the FULL schema, converter)
-  private val fields: Array[(Int, UTF8String => Any)] =
-    p.required.fields.map(f => (p.full.fieldIndex(f.name), converter(f)))
-
-  private def converter(f: StructField): UTF8String => Any = f.dataType match {
-    case BooleanType => v => CellParse.parseBool(v) match {
-      case -1 => null
-      case b => Boolean.box(b == 1)
-    }
-    case LongType =>
-      val unsigned = IngestPipeline.isUnsigned(f)
-      val out = new UTF8String.LongWrapper
-      v => if (CellParse.parseLong(v, unsigned, out)) Long.box(out.value) else null
-    case _: DecimalType => v => CellParse.parseU64Decimal(v)
-    case DoubleType => v =>
-      val d = CellParse.parseDouble(v)
-      if (d.isNaN) null else Double.box(d)
-    case DateType => v =>
-      val d = CellParse.parseDateYmd(v)
-      if (d == CellParse.NoDate) null else Int.box(d)
-    case TimestampNTZType =>
-      val seconds = IngestPipeline.tsUnitOf(f) == ScalarParse.TsSecond
-      v => {
-        val us = CellParse.parseTimestampMicros(v, seconds)
-        if (us == CellParse.NoTimestamp) null else Long.box(us)
-      }
-    case _ => v => v
-  }
+  // the typed fields' token positions, the row of tokens (slot = position
+  // in the FULL schema) and their casts as one projection
+  private val typedAt: Array[Int] = p.required.fieldNames.map(p.full.fieldIndex)
+  private val tokens = new GenericInternalRow(p.full.length)
+  private val typed = UnsafeProjection.create(typedAt.toSeq.map(p.casts))
+  private val failedRow = new GenericInternalRow(1)
+  private val withFailed = new JoinedRow()
+  private val failedAt = new Array[Int](typedAt.length)
 
   private var current: InternalRow = _
 
   /** Read a record line, tokenize it (the RFC-4180 split for delimited files,
-    * the JSON tokenizer for JSONL partitions), convert the pruned fields
-    * and emit the row. A count-only scan (no fields) never splits the
-    * line at all. */
+    * the JSON tokenizer for JSONL partitions), type the read fields and
+    * emit the row. A count-only scan (no fields, no failure column)
+    * never splits the line at all. */
   override def next(): Boolean = {
     // both line sources end a line at LF, CR or CRLF, like the
     // reference's csv reader and Spark's CSV source
     val line = in.nextLine()
     if (line == null) { current = null; return false }
-    if (fields.isEmpty) { current = GraftPartitionReader.emptyRow; return true }
-    val tokens =
-      if (p.jsonl) GraftPartitionReader.jsonFields(line, jsonIdx, p.full.length)
-      else GraftPartitionReader.splitFields(line, p.delim)
-    val row = new GenericInternalRow(fields.length)
-    var j = 0
-    while (j < fields.length) {
-      val (idx, conv) = fields(j)
-      val v = if (idx < tokens.length) UTF8String.fromString(tokens(idx)) else null
-      row.update(j, if (v == null || CellParse.isNullToken(v)) null else conv(v))
-      j += 1
+    if (typedAt.nonEmpty) {
+      val toks =
+        if (p.jsonl) GraftPartitionReader.jsonFields(line, jsonIdx, p.full.length)
+        else GraftPartitionReader.splitFields(line, p.delim)
+      typedAt.foreach(i => tokens.update(i, if (i < toks.length) UTF8String.fromString(toks(i)) else null))
     }
-    current = row
+    val row = typed(tokens)
+    current = if (p.failed) withFailed(row, failures(row)) else row
     true
+  }
+
+  /** The failure column of typed `row`: the positions of the cells whose
+    * cast is null though their token is present and not a null token. */
+  private def failures(row: InternalRow): InternalRow = {
+    var n = 0
+    var k = 0
+    while (k < typedAt.length) {
+      if (row.isNullAt(k)) {
+        val t = tokens.getUTF8String(typedAt(k))
+        if (t != null && !CellParse.isNullToken(t)) { failedAt(n) = typedAt(k); n += 1 }
+      }
+      k += 1
+    }
+    failedRow.update(0,
+      if (n == 0) null else UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(failedAt, n)))
+    failedRow
   }
 
   override def get(): InternalRow = current
@@ -431,17 +473,16 @@ private[sources] abstract class GraftLineSource(atFileStart: Boolean) {
 
   private var first = atFileStart
 
-  /** The next record line, or null at the end: a line that is empty
-    * after `String.trim` is not a record (Spark's CSV source skips the
-    * same lines), and a file's first line drops a leading U+FEFF, as
-    * Hadoop's LineRecordReader does. */
+  /** The next record line ([[GraftDataSource.isRecord]]), or null at the
+    * end; a file's first line drops a leading U+FEFF, as Hadoop's
+    * LineRecordReader does. */
   def nextLine(): String = {
     var line = readLine()
     if (first && line != null) {
       first = false
       if (line.startsWith("\uFEFF")) line = line.substring(1)
     }
-    while (line != null && line.forall(_ <= ' ')) line = readLine()
+    while (line != null && !GraftDataSource.isRecord(line)) line = readLine()
     line
   }
 }
@@ -494,9 +535,6 @@ private[sources] final class GraftRangeLineSource(
 }
 
 object GraftPartitionReader {
-  /** Shared zero-column row for count-only scans. */
-  val emptyRow: InternalRow = new GenericInternalRow(0)
-
   // thread-safe factory (Jackson's documented contract); parsers are
   // per-call
   private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()

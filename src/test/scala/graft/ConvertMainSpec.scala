@@ -522,4 +522,37 @@ class ConvertMainSpec extends SparkSpec {
         s"expected approx denominator, got: ${msgs.peek()}")
     } finally ticker.stop()
   }
+
+  test("the progress denominator counts records: blank lines are not rows") {
+    val f = tempDir("graft_progress_blank").resolve("blank.tsv")
+    Files.writeString(f, "id\tname\n1\ta\n\n2\tb\n   \n\t\n3\tc\n\n")
+    assert(ConvertMain.progressTotal(spark, f.toString, isJsonl = false) == ((Some(3L), false)))
+    val (_, rows, _) = ConvertMain.run(spark,
+      ConvertMain.Options(Some(f.toString), fullScan = false), _ => ())
+    assert(rows == 3L)
+  }
+
+  test("the convert write plan scans typed rows: no cast projection above the scan") {
+    val fixture = writeFixture(rows = 1200, badTail = 50)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ConvertMain.run(spark, ConvertMain.Options(Some(fixture.toString), fullScan = false), _ => ())
+      def write = plans.asScala.find(_.contains("InsertIntoHadoopFsRelationCommand"))
+      val deadline = System.currentTimeMillis() + 10000
+      while (write.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val plan = write.getOrElse(fail(s"no write plan among ${plans.size} plans"))
+      assert(plan.contains(
+        "ReadSchema: struct<id:bigint,name:string,score:double,flag:boolean,n:bigint,"), plan)
+      assert(!plan.contains("graft_cell_"), plan)
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -193,4 +193,19 @@ class IngestPathsSpec extends SparkSpec {
       ("JsonlIngest.convert" -> JsonlIngest.convert(spark, jsonl.toString)))
     assert(typed == Seq(Row(1L, null, "\tnull"), Row(2L, 7L, "x"), Row(3L, 8L, "y")))
   }
+
+  test("on the cell corpus the reader's failure column counts what the Column casts count") {
+    val rows = table(CellParseSpec.corpus)
+    val jsonl = writeJsonl(tempDir("graft_paths_failed_jsonl"), "cells.jsonl", rows, header)
+    val csv = writeCsv(tempDir("graft_paths_failed_csv"), "cells.csv",
+      table(CellParseSpec.corpus.filterNot(c => c.contains('\n') || c.contains('\r'))), header)
+    Seq(csv, jsonl).foreach { file =>
+      val (raw, _) = IngestPipeline.readRawAny(spark, file.toString, fullScan = false)
+      val schema = IngestPipeline.inferSchema(raw, fullScan = false)
+      val want = PipelineSinks.conversionErrorCounts(raw, schema)
+      assert(want.values.sum > 0, s"$file: the corpus has failing cells")
+      assert(PipelineSinks.failureColumnCounts(
+        spark.read.format("graft").schema(schema).load(file.toString)) == want, file.toString)
+    }
+  }
 }

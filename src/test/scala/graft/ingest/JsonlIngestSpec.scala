@@ -186,4 +186,15 @@ class JsonlIngestSpec extends SparkSpec {
     assert(typed.columns.toSeq == Seq("a"))
     assert(typed.count() == 1001)
   }
+
+  test("a directory's columns follow the first line in file-name order, whatever the file sizes") {
+    val dir = tempDir("graft_jsonl_dir_order")
+    Files.writeString(dir.resolve("a.jsonl"), "{\"x\":1,\"y\":2}\n")
+    Files.writeString(dir.resolve("b.jsonl"),
+      (0 until 2000).map(i => s"""{"z":$i,"x":$i,"y":$i}""").mkString("", "\n", "\n"))
+    assert(JsonlIngest.discoverKeys(spark, dir.toString) == Seq("x", "y", "z"))
+    val typed = JsonlIngest.convert(spark, dir.toString)
+    assert(typed.columns.toSeq == Seq("x", "y", "z"))
+    assert(typed.count() == 2001L)
+  }
 }

@@ -102,4 +102,12 @@ class ReferenceFixtureSpec extends SparkSpec {
     val errs = PipelineSinks.conversionErrorCounts(raw, schema)
     assert(errs.values.sum == 0L, errs.filter(_._2 > 0).toString)
   }
+
+  test("the reader's failure column counts what the Column casts count") {
+    val raw = IngestPipeline.readRaw(spark, fixture, '\t')
+    val schema = IngestPipeline.inferSchema(raw, fullScan = false)
+    val typed = spark.read.format("graft").schema(schema).load(fixture)
+    assert(PipelineSinks.failureColumnCounts(typed) ==
+      PipelineSinks.conversionErrorCounts(raw, schema))
+  }
 }

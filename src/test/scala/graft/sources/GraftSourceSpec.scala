@@ -245,4 +245,29 @@ class GraftSourceSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 3)
     assert(df.schema.fields.head.dataType == LongType)
   }
+
+  test("a user schema type the typed build does not take fails at scan planning, naming the column") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft").schema("a INT, b STRING").load(fixture).collect()
+    }
+    assert(e.getMessage.contains("'a'") && e.getMessage.contains("type int"), e.getMessage)
+    val k = intercept[IllegalArgumentException] {
+      graft.ingest.CastKernel.castTo(col("v"), StructField("v", TimestampType))
+    }
+    assert(k.getMessage.contains("'v'") && k.getMessage.contains("type timestamp"), k.getMessage)
+  }
+
+  test("_graft_failed: positions of present, non-token cells whose cast failed, read on request") {
+    val df = spark.read.format("graft").load(fixture)
+    assert(!df.columns.contains("_graft_failed"))
+    assert(!df.select("*").columns.contains("_graft_failed"))
+    // selecting only the failure column still tokenizes and types every
+    // field: n (position 5) fails from row 1,150 on, after the sample
+    val failed = df.select("_graft_failed").collect().toSeq
+    assert(failed.length == 1200)
+    assert(failed.count(!_.isNullAt(0)) == 50)
+    assert(failed.filterNot(_.isNullAt(0)).forall(_.getSeq[Int](0) == Seq(5)))
+    val withData = df.select(col("id"), col("_graft_failed")).where(col("_graft_failed").isNotNull)
+    assert(withData.collect().map(_.getLong(0)).toSeq == (1150L until 1200L))
+  }
 }
